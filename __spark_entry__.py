@@ -8,10 +8,7 @@ for the SURVEY.md §2 coverage map.
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
 from collections.abc import Callable
 
@@ -20,196 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 _REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
-
-# Manual FORCE-RECHECK list (fronted even when green). EMPTY for round
-# 6: every round-5 entry got a fresh green row, and the two levers that
-# used to need manual entries are now automatic — (a) fingerprints
-# include per-module hashes of referenced operator/functions/streaming
-# modules, so operator-level rewrites self-front; (b) the green tail
-# ages oldest-driver-row-first, so stale-but-unchanged rows re-certify
-# organically. Keep this list as the escape hatch for changes neither
-# mechanism can see (e.g. testdata regeneration, driver-side compare
-# changes).
-_PRIORITY: list[str] = [
-    # Round 13 (optimization round): queries whose execution plans were
-    # materially REWRITTEN this round (all value-identical by
-    # construction and cell-exact against the DuckDB oracles locally,
-    # but the driver's re-certification is the real gate — r12 verdict
-    # ask #7 explicitly requires the rewritten ANN recall curves in
-    # this window). The r12 entries all got green r12 rows and are
-    # cleared.
-    "ivfpq_nprobe_recall",  # descent/probe rework via similarity.py
-    "ivfpq_nprobe_recall_clustered",
-    "pq_recall_eval",
-    "pq_recall_eval_clustered",
-    "semantic_dedup_incremental",  # shuffle-free beam-2 descent +
-    "semantic_dedup_incremental_scaled",  # broadcast probe/verdict
-    "streaming_semantic_dedup",
-    "dedup_minhash_lsh",  # row-local signature/gram projections
-    "dedup_containment_pairs",
-    "dedup_ngram_jaccard",
-    "cross_doc_ngram_repetition",  # groupingSets -> projection + 1 agg
-    "kneser_ney_bigram_scores",  # zip-projection bigram stream
-    "bigram_perplexity_scores",
-    "image_phash_clusters",  # CC loop data-sized shuffle width
-    "scd2_merge_history",  # single-select SCD stamping
-]
-
-
-def _latest_rows() -> dict[str, tuple[dict, int]]:
-    """name -> (latest CORRECTNESS row, round number it landed in).
-
-    Sorted by the NUMERIC round, not the filename: lexicographic order
-    breaks at round 100 (CORRECTNESS_r100 < CORRECTNESS_r99) and would
-    let a stale row override the true latest.
-    """
-
-    def _round_num(path: str) -> int:
-        m = re.search(r"_r(\d+)", os.path.basename(path))
-        return int(m.group(1)) if m else -1
-
-    latest: dict[str, tuple[dict, int]] = {}
-    for path in sorted(
-        glob.glob(os.path.join(_REPO_ROOT, "CORRECTNESS_r*.json")),
-        key=_round_num,
-    ):
-        rnd = _round_num(path)
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in rows.items():
-            latest[name] = (row, rnd)
-    return latest
-
-
-def _row_rounds() -> dict[str, int]:
-    """name -> round of its latest driver row (green-tail aging: the
-    rotation re-fronts the OLDEST-certified greens first so every row
-    is eventually re-freshened against current code)."""
-    return {name: rnd for name, (_row, rnd) in _latest_rows().items()}
-
-
-def _driver_rows() -> tuple[set[str], set[str]]:
-    """(green, failed) per the LATEST driver CORRECTNESS row of each name.
-
-    The external driver checks the first N names in the dict ``queries()``
-    returns, so we rotate still-unchecked queries to the front each round.
-    Derived from the CORRECTNESS_r*.json files the driver itself writes —
-    self-maintaining, no manual bookkeeping.
-
-    A row is green when no boolean check is False (``no_oracle`` rows-only
-    checks count as green — the judge sees which). A name whose *latest*
-    row failed goes back to the front of the window so fixes get
-    re-verified instead of rotting behind the "already checked" set.
-    """
-    green: set[str] = set()
-    failed: set[str] = set()
-    for name, (row, _rnd) in _latest_rows().items():
-        checks = (
-            row.get("rows_match"),
-            row.get("schema_match"),
-            row.get("hash_match"),
-        )
-        if any(c is False for c in checks) or row.get("err") not in (
-            None,
-            "no_oracle",
-        ):
-            failed.add(name)
-        else:
-            green.add(name)
-    return green, failed
-
-
-def _rotated(
-    registry: dict,
-    checked_fps: dict[str, str] | None = None,
-    committed_window: list[str] | None = None,
-):
-    """Driver-window ordering: latest-failed first, then UNCHECKED
-    names (never had a driver row). Unchecked fronts BEFORE the
-    committed window — round 8 proved the old order is a replay trap:
-    a stale CHECKED_FINGERPRINTS.json window (recorded before the new
-    queries existed) exactly filled the driver's 50 slots and starved
-    the round's own additions for a full round. A newly added query
-    must be certified the round it lands, unconditionally — even when
-    the stamp file predates it. Then the COMMITTED WINDOW from
-    CHECKED_FINGERPRINTS.json verbatim (the exact head
-    ``tools/fingerprints.py record`` computed and stamped — fronting
-    it keeps the driver's actual window equal to the stamped set; at
-    steady state unchecked names are already inside it, so the
-    reorder only matters when the registry grew after the record),
-    then _PRIORITY (force-recheck — even green rows, see the list's
-    comment), then ALL remaining green names in one merged bucket
-    ordered by driver-row AGE (oldest round first), with
-    FINGERPRINT-STALE names (code, oracle, or a referenced module
-    changed since the row that certified them) ahead of
-    fresh-stamped ones only WITHIN the same round. Age-primary
-    replaced the old stale-bucket-first order in round 9: with most
-    of the catalog never stamped, "stale" was uninformative, and a
-    stamped-but-r3 row (whose green is three rounds of code drift
-    old) sat behind ~140 younger unstamped rows — the
-    prefix_duplicate_groups starvation. A green row's
-    trustworthiness decays with age regardless of stamps; staleness
-    still wins ties inside an age cohort.
-
-    ``registry`` maps name -> QuerySpec (fingerprints need the fn +
-    oracle, not just the name). ``checked_fps`` / ``committed_window``
-    override the committed CHECKED_FINGERPRINTS.json (tests /
-    tools/fingerprints.py's window simulation — record() passes
-    ``committed_window=[]`` to compute a fresh window)."""
-    from sales_data_pipeline_spark import fingerprints as fp
-
-    green, failed = _driver_rows()
-    if committed_window is None:
-        # An explicit checked_fps override (tests, record()'s window
-        # simulation) implies the repo file's window is irrelevant too.
-        committed_window = (
-            fp.load_window(_REPO_ROOT) if checked_fps is None else []
-        )
-    if checked_fps is None:
-        checked_fps = fp.load_checked(_REPO_ROOT)
-    stale = fp.stale_names(registry, checked_fps)
-    rounds = _row_rounds()
-    names = list(registry)
-    in_catalog = set(names)
-    head: list[str] = []
-    seen: set[str] = set()
-
-    def _extend(cands) -> None:
-        # incremental seen-update: duplicates INSIDE one source list
-        # (e.g. a hand-edited CHECKED_FINGERPRINTS window or _PRIORITY)
-        # must not enter the head twice (round-6 advisor)
-        for n in cands:
-            if n in in_catalog and n not in seen:
-                head.append(n)
-                seen.add(n)
-
-    _extend(sorted(failed))
-    _extend(sorted(n for n in names if n not in green and n not in failed))
-    _extend(committed_window)
-    _extend(_PRIORITY)
-    # Round-13 (judge ask #6): queries that DECLARE no oracle
-    # (rows-only checks — HLL sketch internals, zlib ratios) sort to
-    # the very back of the green tail. Re-fronting them spends a
-    # hash-checked window slot on a row the driver can only record as
-    # `err: no_oracle`, which every round's judging then re-adjudicates
-    # as a spurious "failure" (r1, r5, r11). They still front when
-    # UNCHECKED (first certification) or FAILED (a real error, not
-    # no_oracle, per _driver_rows) — only the green re-certification
-    # rotation skips them, since a rows-only re-check can never go
-    # red on values.
-    tail = sorted(
-        (n for n in names if n in green and n not in seen),
-        key=lambda n: (
-            registry[n].oracle is None,
-            rounds.get(n, -1),
-            n not in stale,
-            n,
-        ),
-    )
-    return head + tail
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -224,21 +31,23 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (+ LLM-data
-    extensions). Each callable takes (spark, sf_dir) and returns a DF."""
+    extensions), in sorted name order. Each callable takes (spark,
+    sf_dir) and returns a DF."""
     from sales_data_pipeline_spark.queries.base import load_all
 
     registry = load_all()
-    return {name: registry[name].fn for name in _rotated(registry)}
+    return {name: registry[name].fn for name in sorted(registry)}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL per query; keys without SQL-expressible
-    semantics are omitted (driver records a rows-only check)."""
+    semantics are omitted (driver records a rows-only check). Same
+    sorted order as ``queries()``."""
     from sales_data_pipeline_spark.queries.base import load_all
 
     registry = load_all()
     return {
         name: registry[name].oracle
-        for name in _rotated(registry)
+        for name in sorted(registry)
         if registry[name].oracle is not None
     }

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sales_data_pipeline_spark.scale import gated_broadcast
+
 DIM = 64  # driver testdata embedding dimensionality
 
 # Deterministic integer hyperplanes for sign-LSH (public
@@ -1505,13 +1507,14 @@ def semdedup_incremental(
         "qnrm",
         "explode(transform(t2, e -> e.cid)) AS cluster",
     )
-    # the probe side is batch-sized (an ingest micro-batch / probe
-    # set — bounded by design at any corpus size), so broadcast it:
-    # the corpus-sized stored assignment then streams through a
-    # BroadcastHashJoin with NO exchange on either side, instead of
-    # both sides shuffling on cluster per (micro-)batch (guide §3.1)
+    # the probe side is batch-sized, so while the batch's footprint is
+    # under the broadcast cap, broadcast it: the corpus-sized stored
+    # assignment then streams through a BroadcastHashJoin with NO
+    # exchange on either side, instead of both sides shuffling on
+    # cluster per (micro-)batch (guide §3.1). A batch derived from an
+    # unbounded source loses the hint and Catalyst/AQE pick the join.
     matches = (
-        F.broadcast(bq).join(assign, "cluster")
+        gated_broadcast(bq, corpus=batch).join(assign, "cluster")
         .selectExpr(
             "qid",
             f"{id_col} AS bid",
@@ -1533,8 +1536,13 @@ def semdedup_incremental(
     return (
         batch.select(id_col)
         # best is at most batch-sized (one row per matched qid):
-        # broadcast it so the verdict join never shuffles the batch
-        .join(F.broadcast(best), F.col(id_col) == F.col("qid"), "left")
+        # broadcast it under the same gate so the verdict join never
+        # shuffles the batch
+        .join(
+            gated_broadcast(best, corpus=batch),
+            F.col(id_col) == F.col("qid"),
+            "left",
+        )
         .select(
             id_col,
             F.col("bid").alias("matched_base_id"),

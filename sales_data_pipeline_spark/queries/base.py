@@ -81,10 +81,6 @@ def query(
 
         entered.__name__ = fn.__name__
         entered.__doc__ = fn.__doc__
-        # expose the undecorated fn: tools/fingerprints.py hashes its
-        # source (inspect.getsource of `entered` would be identical for
-        # every query) to detect code changed since the last driver row
-        entered.__wrapped__ = fn
         REGISTRY[name] = QuerySpec(
             name=name, fn=entered, oracle=oracle, survey=survey, doc=doc,
             tags=tags,

@@ -9,11 +9,15 @@ pass. Two regimes fix it:
 
  - :func:`materialized` — for intermediates that are a PURE function of
    the input data (PQ codes of an immutable testdata table, semantic
-   cluster state): key the dir on (name, sf-dir basename), build once
-   into a temp sibling, atomically rename into place, and REUSE it on
-   every later invocation. Concurrent builders race benignly: rename
-   fails for the loser, who deletes its copy and reads the winner's
-   (both built the same deterministic bytes). At 100 TB this is just
+   cluster state): key the dir on (name, sf-dir basename) plus a
+   fingerprint of the build callable's source, one digest of every
+   ``*.py`` in this package and the (path, size, mtime) of the files
+   under sf_dir — so a code edit or regenerated input data rebuilds
+   instead of serving stale bytes. Build once into a temp sibling,
+   atomically rename into place, and REUSE it on every later
+   invocation. Concurrent builders race benignly: rename fails for
+   the loser, who deletes its copy and reads the winner's (both built
+   the same deterministic bytes). At 100 TB this is just
    "an index build runs once, serving reads the stored table" — the
    reuse IS the production semantics, not a bench shortcut.
  - :func:`run_dir` — for per-invocation state that must start EMPTY
@@ -28,6 +32,7 @@ pass. Two regimes fix it:
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import inspect
 import os
@@ -47,51 +52,65 @@ def _key(name: str, sf_dir: str) -> str:
     return f"{name}_{base}"
 
 
-_build_fp_cache: dict[int, str] = {}
+_PKG_ROOT = os.path.dirname(os.path.abspath(__file__))
+_pkg_digest: str | None = None
 
 
-def _build_fingerprint(build: Callable[[str], None]) -> str:
-    """Code fingerprint of the build callable (round-13, judge ask #3):
-    sha256 over the callable's own source, its defining module's source
-    hash, and the source hashes of every tracked engine module it
-    references (transitively, via fingerprints.py's dependency walk) —
-    so ANY code change that could alter the artifact's bytes changes
-    the key and forces a rebuild instead of silently serving the stale
-    artifact. Over-rebuilding (e.g. a comment edit in the defining
-    module) costs one build; under-rebuilding costs a wrong answer —
-    this errs the safe way."""
-    cached = _build_fp_cache.get(id(build))
-    if cached is not None:
-        return cached
-    from sales_data_pipeline_spark import fingerprints as fp
+def _package_digest() -> str:
+    """sha256 over every ``*.py`` under this package (sorted relative
+    path plus bytes), computed once per process."""
+    global _pkg_digest
+    if _pkg_digest is None:
+        h = hashlib.sha256()
+        for rel in sorted(
+            os.path.relpath(p, _PKG_ROOT)
+            for p in glob.glob(
+                os.path.join(_PKG_ROOT, "**", "*.py"), recursive=True
+            )
+        ):
+            with open(os.path.join(_PKG_ROOT, rel), "rb") as f:
+                data = f.read()
+            h.update(f"{rel}\0{len(data)}\0".encode())
+            h.update(data)
+        _pkg_digest = h.hexdigest()
+    return _pkg_digest
 
+
+def _input_files(sf_dir: str) -> list[tuple[str, int, int]]:
+    """(relpath, size, mtime_ns) of every file under sf_dir — the same
+    data identity ``queries.base.table()`` keys its plan cache on."""
+    out = []
+    for root, _dirs, files in os.walk(sf_dir):
+        for fname in files:
+            path = os.path.join(root, fname)
+            st = os.stat(path)
+            out.append(
+                (os.path.relpath(path, sf_dir), st.st_size, st.st_mtime_ns)
+            )
+    return sorted(out)
+
+
+def _build_fingerprint(build: Callable[[str], None], sf_dir: str) -> str:
+    """Version of an artifact: sha256 over the build callable's source,
+    the package digest and the input files' (path, size, mtime). Any
+    package edit rebuilds, even one that cannot alter the artifact's
+    bytes; over-rebuilding costs one build, under-rebuilding costs a
+    wrong answer — this errs the safe way."""
     try:
         src = inspect.getsource(build)
     except (OSError, TypeError):
         src = repr(build)
-    parts = [src]
-    modname = getattr(build, "__module__", None)
-    if modname:
-        h = fp._module_hash(modname)
-        if h:
-            parts.append(f"{modname}:{h}")
-    try:
-        for m in sorted(fp._dep_closure(fp.dep_modules(build))):
-            h = fp._module_hash(m)
-            if h:
-                parts.append(f"{m}:{h}")
-    except Exception:
-        pass
-    digest = hashlib.sha256("\x00".join(parts).encode()).hexdigest()[:12]
-    _build_fp_cache[id(build)] = digest
-    return digest
+    h = hashlib.sha256(src.encode())
+    h.update(_package_digest().encode())
+    h.update(repr(_input_files(sf_dir)).encode())
+    return h.hexdigest()[:12]
 
 
 def materialized(
     name: str, sf_dir: str, build: Callable[[str], None]
 ) -> str:
     """Path of a reusable materialization keyed on (name, sf basename,
-    build-code fingerprint).
+    build fingerprint).
 
     ``build(path)`` is invoked only when no completed materialization
     exists; it must write everything under ``path``. Completion is
@@ -99,11 +118,11 @@ def materialized(
     (so every artifact's cold-build cost stays a recorded number —
     tools/cold_builds.py collects them per round); publication is an
     atomic ``os.rename`` so readers never observe a half-built dir.
-    The code fingerprint in the key (judge ask #3) means a code change
-    that could alter the artifact rebuilds it; the superseded
+    The fingerprint in the key means a change to the build code, the
+    package or the input files rebuilds the artifact; the superseded
     fingerprint's dir is removed on publish so /tmp growth stays one
     live dir per (name, sf)."""
-    key = f"{_key(name, sf_dir)}_{_build_fingerprint(build)}"
+    key = f"{_key(name, sf_dir)}_{_build_fingerprint(build, sf_dir)}"
     final = os.path.join(_MAT_ROOT, key)
     if os.path.exists(os.path.join(final, _DONE)):
         return final
@@ -127,7 +146,7 @@ def materialized(
         shutil.rmtree(tmp, ignore_errors=True)
         if not os.path.exists(os.path.join(final, _DONE)):
             raise
-    # reclaim dirs this artifact supersedes (same name+sf, older code
+    # reclaim dirs this artifact supersedes (same name+sf, older
     # fingerprint) — growth stays one live dir per (name, sf)
     prefix = _key(name, sf_dir) + "_"
     for entry in os.listdir(_MAT_ROOT):

@@ -1,5 +1,5 @@
 """Unit tests for operators/distributed.ordered_scan (the global
-rank / prefix-sum primitive) and the driver-window rotation in
+rank / prefix-sum primitive) and the query order of
 __spark_entry__."""
 
 from __future__ import annotations
@@ -102,107 +102,16 @@ class TestOrderedScan:
 
 
 class TestDriverWindowRotation:
-    def test_unchecked_and_failed_queries_lead(self):
-        """Live-rotation invariants under the committed-window design:
-        latest-FAILED names lead everything; the COMMITTED WINDOW from
-        CHECKED_FINGERPRINTS.json (stamped green names the driver must
-        actually re-check) fronts verbatim next; and every UNCHECKED
-        name sorts before every green name outside that head — a new
-        query must be certified the round it lands, never starved
-        behind re-certifications."""
-        import __spark_entry__ as e
-        from sales_data_pipeline_spark import fingerprints as fp
-
-        names = list(e.queries())
-        green, failed = e._driver_rows()
-        assert green, "round-1 CORRECTNESS file should be present"
-        pos = {n: i for i, n in enumerate(names)}
-        head = set(fp.load_window(e._REPO_ROOT)) | set(e._PRIORITY)
-        # failed latest rows lead everything else
-        others = [pos[n] for n in names if n not in failed]
-        for f in failed:
-            if f in pos and others:
-                assert pos[f] < min(others)
-        unchecked = [n for n in names if n not in green and n not in failed]
-        greens_outside_head = [
-            pos[n] for n in names if n in green and n not in head
-            and n not in failed
-        ]
-        if unchecked and greens_outside_head:
-            assert max(pos[n] for n in unchecked) < min(greens_outside_head)
-
     def test_oracle_keys_subset_and_order(self):
         import __spark_entry__ as e
 
         qs, osql = list(e.queries()), e.oracle_sql()
+        assert qs == sorted(qs)
         assert set(osql) <= set(qs)
-        # oracle dict preserves the rotated query order
+        # oracle dict preserves the query order
         pos = {n: i for i, n in enumerate(qs)}
         opos = [pos[n] for n in osql]
         assert opos == sorted(opos)
-
-    @staticmethod
-    def _fake_registry(names):
-        from sales_data_pipeline_spark.queries.base import QuerySpec
-
-        def _fn(spark, sf_dir):  # shared body: fingerprints hash source
-            return None
-
-        return {
-            n: QuerySpec(name=n, fn=_fn, oracle="SELECT 1 AS one")
-            for n in names
-        }
-
-    def test_rotation_converges_when_all_checked(self, tmp_path, monkeypatch):
-        import __spark_entry__ as e
-        from sales_data_pipeline_spark import fingerprints as fp
-
-        reg = self._fake_registry(["qx", "qy", "qz"])
-        monkeypatch.setattr(e, "_driver_rows", lambda: (set(reg), set()))
-        monkeypatch.setattr(e, "_PRIORITY", [])
-        stamps = {n: fp.query_fingerprint(s) for n, s in reg.items()}
-        # all green + all fingerprints current -> plain sorted tail
-        assert e._rotated(reg, checked_fps=stamps) == sorted(reg)
-
-    def test_failed_latest_row_refronts(self, monkeypatch):
-        import __spark_entry__ as e
-        from sales_data_pipeline_spark import fingerprints as fp
-
-        reg = self._fake_registry(["a", "b", "c", "d"])
-        monkeypatch.setattr(
-            e, "_driver_rows", lambda: ({"a", "c"}, {"b"})
-        )
-        monkeypatch.setattr(e, "_PRIORITY", [])
-        stamps = {n: fp.query_fingerprint(s) for n, s in reg.items()}
-        # b failed its latest driver row: it must lead, then unchecked d,
-        # then fresh green a/c
-        assert e._rotated(reg, checked_fps=stamps) == ["b", "d", "a", "c"]
-
-    def test_latest_row_resolved_by_numeric_round(self, tmp_path, monkeypatch):
-        import json
-
-        import __spark_entry__ as e
-
-        # r99 says q failed; r100 says q is green. Lexicographic filename
-        # order visits r100 BEFORE r99 ("r100" < "r99") and lets the
-        # stale failure win; numeric-round order must let r100 (the true
-        # latest) decide.
-        ok = {
-            "rows_match": True,
-            "schema_match": True,
-            "hash_match": True,
-            "err": None,
-        }
-        bad = dict(ok, hash_match=False)
-        (tmp_path / "CORRECTNESS_r99.json").write_text(
-            json.dumps({"q": bad})
-        )
-        (tmp_path / "CORRECTNESS_r100.json").write_text(
-            json.dumps({"q": ok})
-        )
-        monkeypatch.setattr(e, "_REPO_ROOT", str(tmp_path))
-        green, failed = e._driver_rows()
-        assert green == {"q"} and failed == set()
 
 
 if __name__ == "__main__":

@@ -4,16 +4,11 @@
    (the /tmp-growth + re-paid-encode fix for knn_pq_adc_stored and the
    streaming queries): build exactly once per (name, sf), reuse
    completed materializations, never reuse a half-built dir.
-2. Stamp-displacement tripwire — a CHECKED_FINGERPRINTS stamp must
-   never outlive its actual driver-window slot: when the registry
-   grows after ``record``, unchecked names front BEFORE the committed
-   window and displace its tail; ``check`` must flag the displaced
-   names and ``record`` must drop their stamps.
-3. Peak-mem adjudication sf guard — the isolated re-measure must
+2. Peak-mem adjudication sf guard — the isolated re-measure must
    refuse to run at a different sf than the sweep it adjudicates
    (a wrong-scale floor would silently clear a real regression and
    poison next round's baseline on both diff sides).
-4. Broadcast-audit coverage compares NAME SETS, not counts — equal-size
+3. Broadcast-audit coverage compares NAME SETS, not counts — equal-size
    churn must fail with the symmetric difference named.
 
 Pure-Python tests; no SparkSession.
@@ -25,16 +20,11 @@ import json
 import os
 import sys
 
-import pytest
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as entry_mod
-from sales_data_pipeline_spark import fingerprints as fp
 from sales_data_pipeline_spark import workdir
 from sales_data_pipeline_spark.queries.base import QuerySpec
 from tools import end_of_round as eor
-from tools import fingerprints as tool
 
 
 class TestWorkdir:
@@ -104,73 +94,6 @@ def _spec(name, tags=()):
     return QuerySpec(
         name=name, fn=_fn_q, oracle="SELECT 1 AS one", tags=tuple(tags)
     )
-
-
-@pytest.fixture()
-def five_green_one_new(monkeypatch):
-    """Registry q1..q5 (green, stamped, in the committed window of 3)
-    plus q_new (registered after record — no row, no slot)."""
-    reg = {n: _spec(n) for n in ["q1", "q2", "q3", "q_new"]}
-    stamps = {
-        n: fp.query_fingerprint(s)
-        for n, s in reg.items()
-        if n != "q_new"
-    }
-    window = ["q1", "q2", "q3"]
-    monkeypatch.setattr(
-        entry_mod,
-        "_driver_rows",
-        lambda: ({"q1", "q2", "q3"}, set()),
-    )
-    monkeypatch.setattr(
-        entry_mod, "_row_rounds", lambda: {"q1": 4, "q2": 4, "q3": 4}
-    )
-    monkeypatch.setattr(entry_mod, "_PRIORITY", [])
-    monkeypatch.setattr(fp, "load_checked", lambda root: dict(stamps))
-    monkeypatch.setattr(fp, "load_window", lambda root: list(window))
-    return reg, stamps, window
-
-
-class TestStampDisplacement:
-    def test_check_flags_displaced_window_tail(self, five_green_one_new):
-        reg, _stamps, _window = five_green_one_new
-        # driver slots = 3: actual head = [q_new (unchecked fronts
-        # before the window), q1, q2] -> q3 is displaced out of its
-        # stamped slot; check must flag BOTH q_new (no slot) and q3
-        # (stamp outlives its slot)
-        assert tool.check(registry=reg, window_size=3) == ["q3", "q_new"]
-
-    def test_check_clean_at_steady_state(self, five_green_one_new, monkeypatch):
-        reg, _stamps, _window = five_green_one_new
-        del reg["q_new"]  # registry unchanged since record
-        assert tool.check(registry=reg, window_size=3) == []
-
-    def test_record_drops_displaced_stamps(
-        self, five_green_one_new, tmp_path
-    ):
-        reg, stamps, _window = five_green_one_new
-        out = tmp_path / "CHECKED_FINGERPRINTS.json"
-        new_stamps = tool.record(
-            window=3, also_stamp_green=False, out_path=str(out),
-            registry=reg,
-        )
-        data = json.loads(out.read_text())
-        # q3 was displaced out of the OLD window's slots by q_new's
-        # fronting: its stamp asserted a re-check that never happened.
-        # Dropping it makes q3 STALE, which wins the tie inside its age
-        # cohort — so the displaced name is FIRST in line for the slot
-        # the fresh window has after the unchecked front. Exactly the
-        # recovery the round-9 advisor asked for.
-        assert data["window"] == ["q_new", "q3", "q1"]
-        assert new_stamps["q3"] == fp.query_fingerprint(reg["q3"])
-        assert new_stamps["q1"] == stamps["q1"]  # in-window: restamped
-        # q2 fell out of the fresh window but its stamp is still
-        # ACCURATE (it held a slot it actually occupied last round)
-        assert new_stamps["q2"] == stamps["q2"]
-        # and the post-record state passes the tripwire
-        fp.load_checked = lambda root: dict(data["stamps"])  # noqa: E731
-        fp.load_window = lambda root: list(data["window"])  # noqa: E731
-        assert tool.check(registry=reg, window_size=3) == []
 
 
 class TestAdjudicationSfGuard:

@@ -5,9 +5,10 @@ value-identical to the shapes they replaced.
    clamping), so the projection-built block maps / gram sets / minhash
    signatures can never drift from the exploded forms.
 2. _bigram_rows == the shingle(n=2)+split extraction it replaced.
-3. workdir.materialized() keys move when the build code's dependency
-   hashes move (judge ask #3: no stale artifact survives a rewrite),
-   and the _COMPLETE marker records the measured build seconds.
+3. workdir.materialized() keys move when the build code, the package
+   source or the input files move (no stale artifact survives a
+   rewrite or regenerated data), and the _COMPLETE marker records the
+   measured build seconds.
 4. The CC loop restores the session shuffle-partition conf it scopes.
 """
 
@@ -156,6 +157,89 @@ class TestMaterializedKeyVersioning:
         assert not os.path.exists(p1)
         assert open(os.path.join(p2, "data")).read() == "v2"
 
+
+    def test_back_to_back_lambdas_never_share_a_key(
+        self, tmp_path, monkeypatch
+    ):
+        """A build lambda freed right after its call can hand its id()
+        to the next one; a key cached on id() then gave the second
+        lambda the first one's artifact."""
+        from sales_data_pipeline_spark import workdir
+
+        monkeypatch.setattr(workdir, "_MAT_ROOT", str(tmp_path))
+
+        def put(path: str, payload: str) -> None:
+            os.makedirs(path, exist_ok=True)
+            with open(os.path.join(path, "data"), "w") as f:
+                f.write(payload)
+
+        for _ in range(20):
+            pa = workdir.materialized(
+                "art", SF_DIR, lambda path: put(path, "a")
+            )
+            pb = workdir.materialized(
+                "art", SF_DIR, lambda path: put(path, "b")
+            )
+            assert pa != pb
+            assert open(os.path.join(pb, "data")).read() == "b"
+        # whether CPython reuses the freed address above depends on
+        # its allocator's pools, so pin the recycled-id case directly:
+        # one object, hence one id(), carrying new source
+        build = lambda path: put(path, "c")  # noqa: E731
+        pc = workdir.materialized("art", SF_DIR, build)
+        build.__code__ = (lambda path: put(path, "d")).__code__
+        pd = workdir.materialized("art", SF_DIR, build)
+        assert pc != pd
+        assert open(os.path.join(pd, "data")).read() == "d"
+
+    def test_key_moves_with_input_files(self, tmp_path, monkeypatch):
+        from sales_data_pipeline_spark import workdir
+
+        monkeypatch.setattr(workdir, "_MAT_ROOT", str(tmp_path / "mat"))
+        sf = tmp_path / "sf_x"
+        (sf / "t.parquet").mkdir(parents=True)
+        part = sf / "t.parquet" / "part-0.parquet"
+        part.write_bytes(b"v1")
+        (sf / "u.parquet").write_bytes(b"other")
+        calls: list[str] = []
+
+        def build(path: str) -> None:
+            calls.append(path)
+            os.makedirs(path, exist_ok=True)
+
+        p1 = workdir.materialized("art", str(sf), build)
+        assert workdir.materialized("art", str(sf), build) == p1
+        assert len(calls) == 1  # unchanged files hit
+        part.write_bytes(b"v2-regenerated")
+        p2 = workdir.materialized("art", str(sf), build)
+        assert p2 != p1 and len(calls) == 2  # rewritten file rebuilds
+        assert workdir.materialized("art", str(sf), build) == p2
+        assert len(calls) == 2
+
+    def test_key_moves_with_package_source(self, tmp_path, monkeypatch):
+        from sales_data_pipeline_spark import workdir
+
+        pkg = tmp_path / "pkg"
+        (pkg / "sub").mkdir(parents=True)
+        mod = pkg / "sub" / "m.py"
+        mod.write_text("X = 1\n")
+        monkeypatch.setattr(workdir, "_MAT_ROOT", str(tmp_path / "mat"))
+        monkeypatch.setattr(workdir, "_PKG_ROOT", str(pkg))
+        monkeypatch.setattr(workdir, "_pkg_digest", None)
+        calls: list[str] = []
+
+        def build(path: str) -> None:
+            calls.append(path)
+            os.makedirs(path, exist_ok=True)
+
+        p1 = workdir.materialized("art", SF_DIR, build)
+        mod.write_text("X = 2\n")
+        # the digest is computed once per process: an edit shows up
+        # in the next process, simulated by dropping the held digest
+        assert workdir.materialized("art", SF_DIR, build) == p1
+        monkeypatch.setattr(workdir, "_pkg_digest", None)
+        p2 = workdir.materialized("art", SF_DIR, build)
+        assert p2 != p1 and len(calls) == 2
 
 class TestCCLoopConfScope:
     def test_shuffle_partitions_restored_after_loop(self, spark):

@@ -1,15 +1,9 @@
-"""Round-9 pins: the certification-process hardening the round-8
-verdict asked for, plus the advisor's semdedup-oracle robustness items.
+"""Round-9 pins: the advisor's semdedup-oracle robustness items.
 
-1. tools/fingerprints.py ``check`` — the registry-growth tripwire:
-   a registered query with neither a driver CORRECTNESS row nor a slot
-   in the committed window means the upcoming driver run won't certify
-   it (round 8 shipped exactly that state for 4 queries and it
-   surfaced only at judging).
-2. The flat-oracle depth guard: the scaled semdedup queries certify
+1. The flat-oracle depth guard: the scaled semdedup queries certify
    against the flat k=8 DuckDB oracle, valid only while
    auto_depth(n)==1; oversized corpora must warn with the cause named.
-3. The incremental-oracle centroid-packing assertion: an empty cluster
+2. The incremental-oracle centroid-packing assertion: an empty cluster
    after the mean-update re-assign must fail LOUDLY in DuckDB, not
    misalign the positionally packed centroids.
 
@@ -18,52 +12,7 @@ Pure-Python + DuckDB tests; no SparkSession.
 
 from __future__ import annotations
 
-import os
-import sys
-
 import pytest
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-import __spark_entry__ as entry_mod
-from sales_data_pipeline_spark import fingerprints as fp
-from sales_data_pipeline_spark.queries.base import QuerySpec
-from tools import fingerprints as tool
-
-
-def _fn(spark, sf_dir):
-    return "x"
-
-
-def _spec(name):
-    return QuerySpec(name=name, fn=_fn, oracle="SELECT 1 AS one")
-
-
-class TestRegistryGrowthTripwire:
-    def test_new_query_without_row_or_slot_flagged(self, monkeypatch):
-        reg = {"q_old": _spec("q_old"), "q_new": _spec("q_new")}
-        monkeypatch.setattr(entry_mod, "_row_rounds", lambda: {"q_old": 8})
-        monkeypatch.setattr(fp, "load_window", lambda root: ["q_old"])
-        assert tool.check(registry=reg) == ["q_new"]
-
-    def test_window_slot_clears_the_flag(self, monkeypatch):
-        reg = {"q_old": _spec("q_old"), "q_new": _spec("q_new")}
-        monkeypatch.setattr(entry_mod, "_row_rounds", lambda: {"q_old": 8})
-        monkeypatch.setattr(
-            fp, "load_window", lambda root: ["q_new", "q_old"]
-        )
-        assert tool.check(registry=reg) == []
-
-    def test_driver_row_clears_the_flag(self, monkeypatch):
-        reg = {"q_new": _spec("q_new")}
-        monkeypatch.setattr(entry_mod, "_row_rounds", lambda: {"q_new": 9})
-        monkeypatch.setattr(fp, "load_window", lambda root: [])
-        assert tool.check(registry=reg) == []
-
-    def test_live_repo_state_is_clean(self):
-        # the committed CHECKED_FINGERPRINTS window must always cover
-        # every registered-but-never-checked query from here on
-        assert tool.check() == []
 
 
 class TestFlatOracleDepthGuard:

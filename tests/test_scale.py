@@ -149,8 +149,12 @@ class TestSpreadSmallScan:
         ).repartition(12).write.parquet(path)
         old_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
         old_ocb = spark.conf.get("spark.sql.files.openCostInBytes")
+        old_mpn = spark.conf.get("spark.sql.files.minPartitionNum", None)
         spark.conf.set("spark.sql.files.maxPartitionBytes", "16384")
         spark.conf.set("spark.sql.files.openCostInBytes", "0")
+        # the split size also follows bytesPerCore, i.e. the session's
+        # defaultParallelism: pin the split count off the host's cores
+        spark.conf.set("spark.sql.files.minPartitionNum", "12")
         try:
             df = spark.read.parquet(path)
             assert df.rdd.getNumPartitions() >= 8  # precondition
@@ -161,3 +165,7 @@ class TestSpreadSmallScan:
         finally:
             spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
             spark.conf.set("spark.sql.files.openCostInBytes", old_ocb)
+            if old_mpn is None:
+                spark.conf.unset("spark.sql.files.minPartitionNum")
+            else:
+                spark.conf.set("spark.sql.files.minPartitionNum", old_mpn)

@@ -1,13 +1,12 @@
 #!/usr/bin/env python
 """End-of-round checklist runner — makes the round-5 misses structurally
-impossible: a red pytest shipping unnoticed, and a PLAN_CENSUS.md /
-CHECKED_FINGERPRINTS.json that trail the final code commits.
+impossible: a red pytest shipping unnoticed, and a PLAN_CENSUS.md
+that trails the final code commits.
 
 Run AFTER the round's last code commit (the artifacts it writes are
 then committed as the true final commit):
 
-    PYTHONPATH=. python tools/end_of_round.py [--window 50]
-                                              [--skip-pytest]
+    PYTHONPATH=. python tools/end_of_round.py [--skip-pytest]
 
 Steps (fail-fast, each prints PASS/FAIL):
   0. git cleanliness: no uncommitted tracked .py files — the round-6
@@ -18,19 +17,16 @@ Steps (fail-fast, each prints PASS/FAIL):
   1. full `pytest tests/ -q` — the bar condition;
   2. regenerate PLAN_CENSUS.md (tools/plan_census.py) so the census
      certifies the code as committed;
-  3. record CHECKED_FINGERPRINTS.json (tools/fingerprints.py) so the
-     driver window equals the stamped set;
-  4. sanity: census + fingerprints mtimes are >= the newest tracked
-     .py file's mtime (nothing certified is stale);
-  5. peak-mem trend diff (round-8): compares BENCH_FULL.json's
+  3. sanity: the census mtime is >= the newest tracked .py file's
+     mtime (nothing certified is stale);
+  4. peak-mem trend diff (round-8): compares BENCH_FULL.json's
      per-query peak_mem against the previous round's committed version
      and FAILS on any query whose peak grew > 2x at unchanged sf —
      the broadcast/state blow-up detector the telemetry was built for.
 
 Exit code 0 only when every step passes. The artifacts this script
-writes (PLAN_CENSUS.md, COVERAGE.md, CHECKED_FINGERPRINTS.json) are
-then committed as the round's true final commit — nothing but those
-artifacts may land after it.
+writes (PLAN_CENSUS.md, COVERAGE.md) are then committed as the round's
+true final commit — nothing but those artifacts may land after it.
 
 Round-8 cleanliness tightening: the dirty-tree check now covers EVERY
 tracked file, not just .py/.md/.ini (round-7's README edit landed after
@@ -79,14 +75,13 @@ def _newest_code_mtime() -> float:
 
 
 def _freshness() -> bool:
-    code = _newest_code_mtime()
-    ok = True
-    for artifact in ("PLAN_CENSUS.md", "CHECKED_FINGERPRINTS.json"):
-        path = os.path.join(_REPO_ROOT, artifact)
-        fresh = os.path.exists(path) and os.path.getmtime(path) >= code
-        print(f"== freshness {artifact}: {'PASS' if fresh else 'FAIL'}")
-        ok = ok and fresh
-    return ok
+    path = os.path.join(_REPO_ROOT, "PLAN_CENSUS.md")
+    fresh = (
+        os.path.exists(path)
+        and os.path.getmtime(path) >= _newest_code_mtime()
+    )
+    print(f"== freshness PLAN_CENSUS.md: {'PASS' if fresh else 'FAIL'}")
+    return fresh
 
 
 def _git_clean() -> bool:
@@ -107,7 +102,7 @@ def _git_clean() -> bool:
         and not line[3:].startswith(
             # exactly the files this script (re)writes — exemptions
             # must be earned by the script being their producer
-            ("PLAN_CENSUS.md", "COVERAGE.md", "CHECKED_FINGERPRINTS.json")
+            ("PLAN_CENSUS.md", "COVERAGE.md")
         )
     ]
     ok = not dirty
@@ -119,9 +114,9 @@ def _git_clean() -> bool:
 
 def _broadcast_audit_coverage() -> bool:
     """BROADCAST_AUDIT.json freshness (round-9 advisor): nothing gated
-    the audit's coverage the way PLAN_CENSUS/CHECKED_FINGERPRINTS are
-    gated, so round 8's audit (193 queries) silently excluded the two
-    incremental queries registered after it ran. The audit itself is a
+    the audit's coverage the way PLAN_CENSUS is gated, so round 8's
+    audit (193 queries) silently excluded the two incremental queries
+    registered after it ran. The audit itself is a
     long sf10 run this script shouldn't launch, but its ``queries_
     audited`` must equal the current registry — fail and name the tool
     to re-run otherwise."""
@@ -437,7 +432,6 @@ def _proactive_floors(cur: dict, path: str, top_n: int = PROACTIVE_FLOOR_TOP_N) 
 
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("--window", type=int, default=50)
     ap.add_argument("--skip-pytest", action="store_true",
                     help="when a green full run already exists this "
                     "session (the step takes ~10 min)")
@@ -455,14 +449,6 @@ def main() -> int:
     steps += [
         ("plan census", [sys.executable, "tools/plan_census.py"]),
         ("coverage doc", [sys.executable, "gen_coverage.py"]),
-        ("fingerprints", [sys.executable, "tools/fingerprints.py",
-                          "record", "--window", str(args.window)]),
-        # registry-growth tripwire (round-9, judge ask #8): fails when a
-        # registered query has neither a driver row nor a slot in the
-        # window just recorded — the round-8 "new query never certified"
-        # state becomes a commit-time failure instead of a judging find
-        ("registry tripwire", [sys.executable, "tools/fingerprints.py",
-                               "check"]),
     ]
     ok = all(_run(label, cmd) for label, cmd in steps)
     ok = _freshness() and ok
