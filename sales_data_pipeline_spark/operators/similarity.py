@@ -1,18 +1,20 @@
-"""Vector similarity search over an embedding column (array<float>).
+"""Vector similarity operators over an embedding column (array<float>).
 
-Two strategies:
- - brute-force cosine top-k: exact baseline; one narrow pass computing
-   the score + a TakeOrderedAndProject top-k (no full sort). Linear in
-   corpus size — the right tool up to ~10^7 vectors per query batch.
- - random-hyperplane LSH (ANN): 8 fixed integer hyperplanes -> 8-bit
-   bucket per vector; queries probe only their own bucket (~1/256 of
-   the corpus). The bucket assignment is a narrow projection; search
-   is a partition-pruned scan when the corpus is written partitioned
-   by bucket. This is the 100 TB path: signatures are computed once at
-   ingest, stored, and the per-query cost is corpus/256.
+ - search: brute-force cosine top-k (exact baseline, one narrow pass
+   plus a TakeOrderedAndProject), random-hyperplane LSH (8 fixed
+   integer hyperplanes -> 8-bit bucket; queries probe only their own
+   bucket, a partition-pruned scan of ~corpus/256 when the corpus is
+   stored partitioned by bucket), IVF coarse cells, and product
+   quantization (PQ/ADC) over literal or trained codebooks;
+ - SemDeDup: one k-means (``kmeans_assign_hierarchical``; depth=1 is
+   the flat one-Lloyd-iteration clustering) and one within-cluster
+   pruning operator (``semdedup``), plus the incremental probe of an
+   ingest batch against stored cluster state.
 
-All arithmetic uses fold-left double accumulation (deterministic,
-reproducible across engines); no Python UDFs.
+Vector maths (dot, norm, cosine, L2, LSH, IVF and PQ distances) is
+emitted as SQL fragments (the ``sql_*`` builders) with fold-left double
+accumulation, so values are deterministic and reproducible across
+engines; no Python UDFs.
 """
 
 from __future__ import annotations
@@ -39,24 +41,24 @@ def query_vector(dim: int = DIM) -> list[float]:
 
 
 # ---------------------------------------------------------------------------
-# SQL-fragment twins of the fold builders (round-12 optimization).
-#
-# The Column-API builders below construct their HOF fold trees node by
-# node through py4j — one driver round-trip per literal/operator. At
-# ADC/k-means sizes (m*ksub = 64 folds, 64-element literal arrays) that
-# is thousands of round-trips, measured 2.4-3.6 s of DRIVER time per
-# expression instance (plans/r12/prof_before.json: the ANN family spent
-# 60-95% of its bench wall in DataFrame *construction*, guide §1's
-# "measure first" finding of this round). Emitting the SAME expression
-# as one SQL string hands the whole tree to the JVM in a single parse
-# (~0.05 s) — the values are bit-identical because the SQL parses to
-# the same Catalyst operators with the same fold association and the
-# same double literals (repr(x) + "D" round-trips exactly; verified
-# cell-for-cell against the Column forms and the DuckDB oracles).
+# Vector-expression vocabulary: SQL fragments.
 #
 # Each sql_* returns a fragment referencing its vector operand by SQL
 # text (a column name or a nested fragment); wrap with F.expr(...) or
-# pass to selectExpr.
+# pass to selectExpr. One SQL string hands the whole HOF fold tree to
+# the JVM in a single parse (~0.05 s); building the same tree node by
+# node through the Column API costs one py4j round-trip per literal and
+# operator, measured 2.4-3.6 s of driver time per ADC/k-means-sized
+# expression (plans/r12/prof_before.json).
+#
+# Fold contract: every dot/L2 product is aggregate(zip_with(...), 0.0D,
+# (acc, x) -> acc + x), the sequential ((0+t1)+t2)... association the
+# DuckDB oracle SQL spells out as (0.0 + t1 + t2 + ...), with each
+# element cast to DOUBLE before multiplying, so the doubles are
+# bit-identical across engines. Literals print as repr(x) + "D", which
+# round-trips the exact IEEE value. A HOF fold keeps the expression
+# tree O(1) in the dimension; an unrolled element_at chain compiles
+# ~dim*N_PLANES-term codegen expressions (8-11 s of janino per plan).
 # ---------------------------------------------------------------------------
 
 
@@ -67,8 +69,11 @@ def sql_lit_array(vec: list[float]) -> str:
 
 
 def sql_dot_literal(vec_sql: str, lit_vec: list[float]) -> str:
-    """SQL twin of dot_literal: same slice-to-literal-length guard, same
-    sequential ((0+t1)+t2)... fold association."""
+    """Dot product with a literal vector. The column side is sliced to
+    the literal's length, so an overlong vector truncates
+    deterministically instead of NULL-poisoning the score (zip_with pads
+    the shorter side with nulls); an undersized vector still yields
+    NULL — a corrupt embedding should fail the score, not fake one."""
     return (
         f"aggregate(zip_with(slice({vec_sql}, 1, {len(lit_vec)}), "
         f"{sql_lit_array(lit_vec)}, (a, b) -> CAST(a AS DOUBLE) * b), "
@@ -77,8 +82,8 @@ def sql_dot_literal(vec_sql: str, lit_vec: list[float]) -> str:
 
 
 def sql_l2sq_to_literal(vec_sql: str, lit_vec: list[float]) -> str:
-    """SQL twin of l2sq_to_literal (no slice, literal side uncast —
-    exactly the Column form's operand pattern)."""
+    """Squared L2 distance to a literal vector (no slice; the literal
+    side is already double)."""
     return (
         f"aggregate(zip_with({vec_sql}, {sql_lit_array(lit_vec)}, "
         f"(a, b) -> (CAST(a AS DOUBLE) - b) * (CAST(a AS DOUBLE) - b)), "
@@ -87,7 +92,8 @@ def sql_l2sq_to_literal(vec_sql: str, lit_vec: list[float]) -> str:
 
 
 def sql_fold_l2sq(a_sql: str, b_sql: str, dim: int = DIM) -> str:
-    """SQL twin of _fold_l2sq: both sides sliced to dim and cast."""
+    """Squared L2 distance between two vector expressions, both sides
+    sliced to dim and cast."""
     return (
         f"aggregate(zip_with(slice({a_sql}, 1, {dim}), "
         f"slice({b_sql}, 1, {dim}), "
@@ -98,7 +104,8 @@ def sql_fold_l2sq(a_sql: str, b_sql: str, dim: int = DIM) -> str:
 
 
 def sql_dot(a_sql: str, b_sql: str, dim: int = DIM) -> str:
-    """SQL twin of dot (both sides sliced and cast)."""
+    """Dot product of two vector expressions, both sides sliced to dim
+    and cast (an undersized vector yields NULL, see sql_dot_literal)."""
     return (
         f"aggregate(zip_with(slice({a_sql}, 1, {dim}), "
         f"slice({b_sql}, 1, {dim}), "
@@ -109,6 +116,13 @@ def sql_dot(a_sql: str, b_sql: str, dim: int = DIM) -> str:
 
 def sql_norm(vec_sql: str, dim: int = DIM) -> str:
     return f"SQRT({sql_dot(vec_sql, vec_sql, dim)})"
+
+
+def sql_cosine(a_sql: str, b_sql: str, dim: int = DIM) -> str:
+    return (
+        f"{sql_dot(a_sql, b_sql, dim)} / "
+        f"({sql_norm(a_sql, dim)} * {sql_norm(b_sql, dim)})"
+    )
 
 
 def sql_cosine_to_literal(
@@ -124,15 +138,15 @@ def sql_cosine_to_literal(
 
 
 def sql_rounded(expr_sql: str, round_digits: int = 6) -> str:
-    """FLOOR(x*10^n + 0.5)/10^n.0 — the det_round recipe, matching the
-    Column form's int scale literal and double divisor exactly."""
+    """FLOOR(x*10^n + 0.5)/10^n.0 — the det_round recipe (int scale
+    literal, double divisor)."""
     s = 10**round_digits
     return f"FLOOR(({expr_sql}) * {s} + 0.5D) / {float(s)!r}D"
 
 
 def sql_lsh_bucket(vec_sql: str, dim: int = DIM) -> str:
-    """SQL twin of lsh_bucket: 0 + per-plane CASE additions, the same
-    int arithmetic as the Column form's when/otherwise chain."""
+    """8-bit sign-LSH bucket id: bit i set iff dot(vec, plane_i) > 0,
+    as 0 + one int CASE per plane."""
     parts = []
     for i in range(N_PLANES):
         plane = [float(x) for x in hyperplane(i, dim)]
@@ -141,73 +155,6 @@ def sql_lsh_bucket(vec_sql: str, dim: int = DIM) -> str:
             f"THEN {1 << i} ELSE 0 END"
         )
     return "0 + " + " + ".join(parts)
-
-
-def dot_literal(vec: Column, lit_vec: list[float], dim: int = DIM) -> Column:
-    """Left-fold dot product of a vector column with a Python literal
-    vector: aggregate(zip_with(vec, lit, *), 0.0, +) — a sequential
-    ((0+t1)+t2)... fold, the same association the oracle SQL generates,
-    so double accumulation is bit-identical across engines.
-
-    HOF fold, not an unrolled element_at chain: the unrolled form made
-    every consumer compile a ~dim*N_PLANES-term codegen expression
-    (8-11s of janino per query plan — measured 8x slower end-to-end at
-    bench scale), while the fold's expression tree is O(1). Values are
-    identical; per-row interpretation is nanoseconds against the scan.
-
-    Length-drift guard: the column side is sliced to the literal's
-    length, so an overlong vector truncates deterministically instead
-    of NULL-poisoning the whole score (zip_with pads the shorter side
-    with nulls). An UNDERsized vector still yields NULL — a corrupt
-    embedding should fail the score, not fake a partial one."""
-    arr = F.array(*[F.lit(float(x)) for x in lit_vec])
-    return F.aggregate(
-        F.zip_with(F.slice(vec, 1, len(lit_vec)), arr, lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def dot(a: Column, b: Column, dim: int = DIM) -> Column:
-    """Left-fold dot product of two vector columns (same sequential
-    association as dot_literal). Both sides slice to ``dim`` so an
-    overlong vector truncates; an undersized one yields NULL (see
-    dot_literal)."""
-    return F.aggregate(
-        F.zip_with(
-            F.slice(a, 1, dim),
-            F.slice(b, 1, dim),
-            lambda x, y: x.cast("double") * y.cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(vec: Column, dim: int = DIM) -> Column:
-    return F.sqrt(dot(vec, vec, dim))
-
-
-def cosine(a: Column, b: Column, dim: int = DIM) -> Column:
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
-
-
-def cosine_to_literal(vec: Column, lit_vec: list[float], dim: int = DIM) -> Column:
-    import math
-
-    qn = math.sqrt(sum(x * x for x in lit_vec))
-    return dot_literal(vec, lit_vec, dim) / (norm(vec, dim) * F.lit(qn))
-
-
-def lsh_bucket(vec: Column, dim: int = DIM) -> Column:
-    """8-bit sign-LSH bucket id: bit i set iff dot(vec, plane_i) > 0."""
-    out: Column = F.lit(0)
-    for i in range(N_PLANES):
-        plane = [float(x) for x in hyperplane(i, dim)]
-        out = out + F.when(
-            dot_literal(vec, plane, dim) > 0, F.lit(1 << i)
-        ).otherwise(F.lit(0))
-    return out
 
 
 def lsh_bucket_of(vec: list[float], dim: int = DIM) -> int:
@@ -276,11 +223,10 @@ def embedding_near_dup_pairs(
     blocked=False is the exact n² baseline for small corpora/oracles.
     Returns (id_a, id_b, cos_sim) with id_a < id_b, rounded.
     """
-    s = 10**round_digits
-    base = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        (lsh_bucket(F.col(vec_col)) if blocked else F.lit(0)).alias("bucket"),
+    base = df.selectExpr(
+        f"{id_col} AS id",
+        f"{vec_col} AS v",
+        f"{sql_lsh_bucket(vec_col) if blocked else '0'} AS bucket",
     )
     a, b = base.alias("a"), base.alias("b")
     pairs = a.join(
@@ -290,8 +236,7 @@ def embedding_near_dup_pairs(
     return (
         pairs.withColumn(
             "cos_sim",
-            F.floor(cosine(F.col("a.v"), F.col("b.v")) * s + F.lit(0.5))
-            / F.lit(float(s)),
+            F.expr(sql_rounded(sql_cosine("a.v", "b.v"), round_digits)),
         )
         .filter(F.col("cos_sim") >= min_cosine)
         .select(
@@ -309,39 +254,16 @@ def ivf_centroid(i: int, dim: int = DIM) -> list[float]:
     return [((i * 7 + j * 3) % 11 - 5) / 10.0 for j in range(dim)]
 
 
-def l2sq_to_literal(vec: Column, lit_vec: list[float]) -> Column:
-    """Left-fold squared-L2 distance to a literal vector — sequential
-    ((0+d1²)+d2²)... fold, bit-identical to the oracle SQL. HOF fold
-    for the same codegen-compile reason as dot_literal."""
-    arr = F.array(*[F.lit(float(x)) for x in lit_vec])
-    return F.aggregate(
-        F.zip_with(
-            vec, arr, lambda a, b: (a.cast("double") - b) * (a.cast("double") - b)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def ivf_assign(vec: Column, n: int = N_IVF_CENTROIDS) -> Column:
+def sql_ivf_assign(vec_sql: str, n: int = N_IVF_CENTROIDS) -> str:
     """Nearest-centroid id (argmin of squared L2, first-match
     tie-break) — the IVF coarse quantizer.
 
     Formulated as array_position(darr, array_min(darr)) - 1 rather than
-    a when(d_i == least(..)) chain: the chain embeds the full least()
-    tree in every branch (~n² copies of every distance chain), which
+    a CASE WHEN d_i = least(..) chain: the chain embeds the full least()
+    tree in every branch (~n² copies of every distance fold), which
     Catalyst optimizes for MINUTES at n=8, dim=64; the array form keeps
-    two copies total and plans in seconds. array_position is
-    first-match, so tie semantics equal the SQL CASE chain."""
-    darr = F.array(*[l2sq_to_literal(vec, ivf_centroid(i)) for i in range(n)])
-    return (F.array_position(darr, F.array_min(darr)) - 1).cast("int")
-
-
-def sql_ivf_assign(vec_sql: str, n: int = N_IVF_CENTROIDS) -> str:
-    """SQL twin of ivf_assign (same array_position first-match
-    tie-break). The distance array appears twice in the text — the
-    parser builds it in milliseconds, versus seconds of py4j for the
-    Column form (see the SQL-fragment block above)."""
+    two copies total. array_position is first-match, so ties go to the
+    lower centroid id."""
     darr = (
         "array("
         + ", ".join(
@@ -388,7 +310,7 @@ def ivf_probe_topk(
     """IVF ANN search: quantize the query to its nearest coarse
     centroid, score ONLY that centroid's inverted list, exact top-k
     rerank. At scale the corpus is written partitioned by centroid id
-    (see ivf_assign), so the probe is a partition-pruned scan of
+    (see sql_ivf_assign), so the probe is a partition-pruned scan of
     ~1/n_centroids of the data — same storage trick as the LSH-bucket
     path, but with data-adaptive (trained) cells.
 
@@ -431,34 +353,15 @@ def pq_codeword(j: int, i: int, subdim: int = PQ_SUBDIM) -> list[float]:
     ]
 
 
-def pq_dists(
-    vec: Column,
-    j: int,
-    subdim: int = PQ_SUBDIM,
-    ksub: int = PQ_KSUB,
-) -> Column:
-    """array<double> of squared-L2 distances from subvector j of
-    ``vec`` to every codeword of sub-codebook j — the E-step input for
-    both encoding (argmin) and quantization error (array_min). One
-    HOF fold per codeword over the subdim slice, same left-fold
-    association as the oracle SQL."""
-    sub = F.slice(vec, j * subdim + 1, subdim)
-    return F.array(
-        *[
-            l2sq_to_literal(sub, pq_codeword(j, i, subdim))
-            for i in range(ksub)
-        ]
-    )
-
-
 def sql_pq_dlist(
     vec_sql: str,
     j: int,
     subdim: int = PQ_SUBDIM,
     ksub: int = PQ_KSUB,
 ) -> str:
-    """SQL twin of pq_dists: per-codeword l2sq folds over the subvector
-    slice, packed into one array."""
+    """array<double> of squared-L2 distances from subvector j of the
+    vector to every codeword of sub-codebook j — the E-step input for
+    both encoding (argmin) and quantization error (array_min)."""
     sub = f"slice({vec_sql}, {j * subdim + 1}, {subdim})"
     return (
         "array("
@@ -488,8 +391,7 @@ def sql_pq_d_cols(
 
 def sql_pq_adc_from_d(lut: list[list[float]], m: int = PQ_M) -> str:
     """ADC score over the __d{j} columns: sum of m literal-array LUT
-    lookups at the per-subspace argmin (first-match tie-break), the
-    exact term chain of the Column form."""
+    lookups at the per-subspace argmin (first-match tie-break)."""
     terms = [
         f"element_at({sql_lit_array(lut[j])}, "
         f"CAST(array_position(__d{j}, array_min(__d{j})) AS INT))"
@@ -508,7 +410,7 @@ def pq_encode(
 ) -> DataFrame:
     """PQ-encode every vector: (id, code_0..code_{m-1}, err_micro).
     code_j is the 0-based argmin codeword of subspace j (first-match
-    tie-break, as ivf_assign); err_micro is the integer-scaled total
+    tie-break, as sql_ivf_assign); err_micro is the integer-scaled total
     quantization error sum_j min_i l2sq(sub_j, c_{j,i}) — the distance
     from the vector to its own reconstruction, the quantity PQ training
     minimizes and the index-health number an encode job reports.
@@ -619,15 +521,6 @@ def ivfpq_topk(
     return pq_adc_topk(in_cells, query, k=k, id_col=id_col, vec_col=vec_col)
 
 
-def pq_residual(vec: Column, centroid: list[float]) -> Column:
-    """Residual of ``vec`` w.r.t. a literal coarse centroid —
-    element-wise double(a) - c, the quantity residual-PQ encodes
-    instead of the raw vector. Same cast-then-subtract order as the
-    oracle SQL so the residual doubles are bit-identical."""
-    arr = F.array(*[F.lit(float(x)) for x in centroid])
-    return F.zip_with(vec, arr, lambda a, b: a.cast("double") - b)
-
-
 def ivfpq_residual_topk(
     df: DataFrame,
     query: list[float],
@@ -663,8 +556,8 @@ def ivfpq_residual_topk(
             "nprobe nearest cells, and probing zero cells has no result"
         )
     # Single-scan form (round-12 optimization; the per-cell union made
-    # nprobe full passes, each re-evaluating ivf_assign AND its own
-    # residual-ADC tree — 6.6 s of driver build time at nprobe=2).
+    # nprobe full passes, each re-evaluating the IVF assignment AND its
+    # own residual-ADC tree — 6.6 s of driver build time at nprobe=2).
     # The cell id is computed ONCE; the residual subtracts the row's
     # OWN cell's centroid via one CASE over the probed cells (identical
     # per-row value: in the union form each branch's filter pinned the
@@ -782,8 +675,8 @@ def pq_train_codebooks(
     for. Returns (sub, code, t, cval, n): component t of trained
     codeword ``code`` of sub-codebook ``sub``, plus the cell occupancy.
 
-    Training = k-means per subspace, exactly the kmeans_assign_one_iter
-    determinism recipe applied to PQ (Jegou et al. 2011 train each
+    Training = k-means per subspace, the kmeans_assign_hierarchical
+    level-0 determinism recipe applied to PQ (Jegou et al. 2011 train each
     sub-codebook by independent k-means over the subvectors):
      - Forgy seeds are DATA POINTS: the ksub lowest-id vectors'
        subvectors (one TakeOrderedAndProject, packed into a one-row
@@ -987,8 +880,8 @@ def pca_loadings(
     Eigenvector sign is arbitrary, so each component is flipped to make
     its largest-|loading| coordinate positive (ties broken by lowest
     index) — without this, reruns could emit mirrored projections.
-    The returned literals are meant to feed dot_literal, keeping the
-    projection itself whole-stage codegen."""
+    The returned literals are meant to feed sql_dot_literal, keeping
+    the projection itself whole-stage codegen."""
     from pyspark.ml.feature import PCA as MLPCA
     from pyspark.ml.functions import array_to_vector
 
@@ -1016,201 +909,26 @@ def pca_project(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Project vectors onto the given loading vectors as pc1..pcK —
-    pure codegen dot_literal folds, no Python on the hot path."""
-    cols = [
-        dot_literal(F.col(vec_col), lv).alias(f"pc{i + 1}")
-        for i, lv in enumerate(loadings)
-    ]
-    return df.select(id_col, *cols)
+    pure codegen sql_dot_literal folds, no Python on the hot path."""
+    return df.selectExpr(
+        id_col,
+        *[
+            f"{sql_dot_literal(vec_col, lv)} AS pc{i + 1}"
+            for i, lv in enumerate(loadings)
+        ],
+    )
 
 
 # ---------------------------------------------------------------------------
-# Semantic dedup (SemDeDup): one-Lloyd-iteration k-means over the
-# embedding column, then within-cluster cosine pruning.
+# Semantic dedup (SemDeDup): one-Lloyd-iteration-per-level k-means over
+# the embedding column, then within-cluster cosine pruning.
 # Reproduces the pipeline of reference-class semantic dedup (Abbas et
 # al. 2023, "SemDeDup"): cluster, compare only within clusters, keep
-# one representative per near-duplicate ball.
+# one representative per near-duplicate ball. The effective k =
+# branch**depth GROWS with the corpus (auto_depth) while per-vector
+# assignment work stays O(branch * depth); depth=1 is the flat k=branch
+# clustering the DuckDB oracles encode.
 # ---------------------------------------------------------------------------
-
-
-def _fold_l2sq(a: Column, b: Column, dim: int = DIM) -> Column:
-    """Left-fold squared-L2 between two vector columns — sequential
-    ((0+d1²)+d2²)... association, bit-identical to the oracle SQL's
-    explicit (0.0 + t1 + t2 + ...) chain. Both sides cast to double
-    per element so float/double operand mixes are deterministic."""
-    return F.aggregate(
-        F.zip_with(
-            F.slice(a, 1, dim),
-            F.slice(b, 1, dim),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def kmeans_assign_one_iter(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 8,
-    dim: int = DIM,
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """One deterministic Lloyd iteration: Forgy init from the k
-    lowest-id vectors, assign, exact mean update, re-assign. Returns
-    (id, vec, cluster).
-
-    Determinism across engines (the whole design):
-     - seeds are DATA POINTS (k lowest ids via TakeOrderedAndProject —
-       distributed top-k, no global sort), so every cluster contains at
-       least its own seed after step 0 and the packed centroid array
-       is always exactly k*dim long (no empty-cluster index drift);
-       precondition: the k seed vectors are pairwise distinct, which
-       holds for any real float embedding table;
-     - both argmin steps evaluate per-row left-fold L2 chains against a
-       ONE-ROW packed array (global aggregate, broadcast cross join —
-       the sanctioned scalar-BNLJ idiom; k centroids never shuffle the
-       fact side), with array_position(d, array_min(d)) first-match
-       tie-break — the formulation ivf_assign pins;
-     - the mean update is the embedding_label_centroids technique:
-       components scale to micro-unit int64, integer partial sums are
-       associative in any shard order, and the mean is two
-       deterministic double divisions. No float sum ever crosses a
-       shuffle.
-
-    At 100 TB: per-vector work is O(k*dim) projection in one codegen
-    stage per step; the only shuffles are the (k*dim)-group integer
-    aggregation and the two tiny packs. k scales with the corpus in
-    production (bounded cluster size); it parameterizes literals only.
-    """
-    from sales_data_pipeline_spark.caching import scoped_persist
-
-    seeds_row = (
-        df.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(k)
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col(id_col).alias("i"),
-                            F.col(vec_col).alias("v"),
-                        )
-                    )
-                ),
-                lambda s: s["v"],
-            ).alias("s")
-        )
-    )
-    d0 = (
-        "array("
-        + ", ".join(
-            sql_fold_l2sq(vec_col, f"s[{c}]", dim) for c in range(k)
-        )
-        + ")"
-    )
-    # persisted: consumed by the M-step aggregation AND the re-assign
-    a0 = scoped_persist(
-        df.crossJoin(F.broadcast(seeds_row)).selectExpr(
-            id_col,
-            vec_col,
-            f"CAST(array_position({d0}, array_min({d0})) - 1 AS INT)"
-            " AS c0",
-        )
-    )
-    comp = a0.select(
-        "c0", F.posexplode(vec_col).alias("pos0", "val")
-    ).select(
-        "c0",
-        (F.col("pos0") + 1).alias("pos"),
-        F.floor(
-            F.col("val").cast("double") * scale
-            + F.when(F.col("val") >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))
-        )
-        .cast("long")
-        .alias("scaled"),
-    )
-    cent = comp.groupBy("c0", "pos").agg(
-        (F.sum("scaled") / float(scale) / F.count("*")).alias("cval")
-    )
-    cents_row = cent.agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("c0", "pos", "cval"))),
-            lambda s: s["cval"],
-        ).alias("cents")
-    )
-    d1 = (
-        "array("
-        + ", ".join(
-            sql_fold_l2sq(
-                vec_col, f"slice(cents, {c * dim + 1}, {dim})", dim
-            )
-            for c in range(k)
-        )
-        + ")"
-    )
-    return a0.crossJoin(F.broadcast(cents_row)).selectExpr(
-        id_col,
-        vec_col,
-        f"CAST(array_position({d1}, array_min({d1})) - 1 AS INT)"
-        " AS cluster",
-    )
-
-
-def semdedup(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 8,
-    min_cosine: float = 0.96,
-    dim: int = DIM,
-) -> DataFrame:
-    """SemDeDup pruning: cluster (kmeans_assign_one_iter), then flag
-    every vector whose rounded cosine to some LOWER-id vector in the
-    SAME cluster reaches ``min_cosine`` (greedy keep-lowest-id — one
-    representative survives per near-duplicate ball). Returns one row
-    per vector: (id, cluster, best_sim, is_dup); best_sim is NULL for
-    vectors with no lower-id cluster partner.
-
-    The pair space is the equi-join on cluster — (n/k)² * k pairs, the
-    SemDeDup trade: at 100 TB, k grows with the corpus so the per-
-    cluster block stays bounded, and the join is a plain shuffled
-    equi-join (never a cartesian). Scores round to 4 decimals BEFORE
-    thresholding so both engines threshold identical values."""
-    from sales_data_pipeline_spark.caching import scoped_persist
-
-    # norms precomputed ONCE per vector (persisted with the
-    # assignment): the pair space is quadratic in cluster size, so a
-    # per-pair norm would fold 3x64 terms per pair instead of 1x64 —
-    # measured 9.3s -> ~2x faster at sf0.1. Value-identical: norm is a
-    # scalar factor, the dot fold's association is unchanged.
-    assign = scoped_persist(
-        kmeans_assign_one_iter(df, id_col, vec_col, k, dim).withColumn(
-            "nrm", F.expr(sql_norm(vec_col, dim))
-        )
-    )
-    a, b = assign.alias("a"), assign.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.cluster") == F.col("b.cluster"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    ).selectExpr(
-        f"b.{id_col} AS {id_col}",
-        f"FLOOR({sql_dot(f'a.{vec_col}', f'b.{vec_col}', dim)}"
-        " / (a.nrm * b.nrm) * 10000 + 0.5D) / 10000.0D AS cs",
-    )
-    best = pairs.groupBy(id_col).agg(F.max("cs").alias("best_sim"))
-    return assign.join(best, id_col, "left").select(
-        id_col,
-        "cluster",
-        "best_sim",
-        F.coalesce(
-            F.col("best_sim") >= F.lit(min_cosine), F.lit(False)
-        ).alias("is_dup"),
-    )
 
 
 def semdedup_state_sums(
@@ -1219,14 +937,20 @@ def semdedup_state_sums(
     scale: int = 1_000_000,
 ) -> DataFrame:
     """Exact integer-scaled per-cluster component sums ``(g, pos, s,
-    c)`` over a stored assignment — the storable CENTROID half of the
-    incremental-dedup state. k*dim rows total (aggregate-sized at any
-    corpus size), and sums/counts add exactly, so upper-level centroids
-    roll up from this table alone: a production ingest pipeline
-    persists (labels+norms, these sums) between batches and never runs
-    a corpus-sized aggregate per batch — pass the stored table to
-    ``semdedup_incremental(leaf_sums=...)``. Derived inline by that
-    operator when not supplied (the certification fixture's shape)."""
+    c)`` over an (id, vec, cluster) assignment — the one centroid
+    derivation every k-means step here builds on. Components scale to
+    micro-unit int64, so the partial sums are associative in any shard
+    order, and a centroid component is (s / scale) / c, two
+    deterministic double divisions: no float sum ever crosses a
+    shuffle, and the DuckDB oracles reproduce every double.
+
+    k*dim rows total (aggregate-sized at any corpus size), and sums and
+    counts add exactly, so upper-level centroids roll up from this table
+    alone. It is also the storable CENTROID half of the incremental-dedup
+    state: a production ingest pipeline persists (labels+norms, these
+    sums) between batches and never runs a corpus-sized aggregate per
+    batch — pass the stored table to
+    ``semdedup_incremental(leaf_sums=...)``."""
     return (
         assign.select(
             F.col("cluster").cast("long").alias("g"),
@@ -1249,6 +973,240 @@ def semdedup_state_sums(
     )
 
 
+def _centroid_vecs(sums: DataFrame, scale: int = 1_000_000) -> DataFrame:
+    """(g, cv): each cluster's mean centroid from its stored component
+    sums, components in position order. The collect_list runs over
+    k*dim sum rows, never over data rows."""
+    return sums.groupBy("g").agg(
+        F.transform(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(
+                        "pos",
+                        (F.col("s") / float(scale) / F.col("c")).alias(
+                            "cval"
+                        ),
+                    )
+                )
+            ),
+            lambda st: st["cval"],
+        ).alias("cv")
+    )
+
+
+def _cells() -> Column:
+    """The centroid pack: array<struct<cid,cv>> sorted by cid, so the
+    argmin tie-break is deterministic."""
+    return F.array_sort(
+        F.collect_list(F.struct(F.col("g").alias("cid"), "cv"))
+    ).alias("cells")
+
+
+def _pack_root(vecs: DataFrame) -> DataFrame:
+    """All centroids as ONE row. A GLOBAL aggregate, so the cross join
+    against it is the sanctioned scalar-BNLJ shape the plan gates
+    certify (a keyed pack would be a keyed BNLJ build)."""
+    return vecs.agg(_cells())
+
+
+def _pack_by_parent(vecs: DataFrame, branch: int) -> DataFrame:
+    """Centroids packed per PARENT cell (g DIV branch): k/branch rows,
+    aggregate-sized at any corpus size."""
+    return vecs.groupBy(
+        F.floor(F.col("g") / branch).cast("long").alias("parent")
+    ).agg(_cells())
+
+
+def _sql_argmin_cell(cells_sql: str, vec_sql: str, dim: int = DIM) -> str:
+    """cid of the nearest centroid in a packed array<struct<cid,cv>>
+    (first-match, i.e. lowest-cid, tie-break). The HOF transform keeps
+    the expression tree O(1) in the number of centroids — the property
+    that lets branch*depth replace an unrolled k."""
+    d = (
+        f"transform({cells_sql}, "
+        f"st -> {sql_fold_l2sq(vec_sql, 'st.cv', dim)})"
+    )
+    return (
+        f"element_at({cells_sql}, "
+        f"CAST(array_position({d}, array_min({d})) AS INT)).cid"
+    )
+
+
+def kmeans_assign_hierarchical(
+    df: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    depth: int = 1,
+    branch: int = 8,
+    dim: int = DIM,
+    scale: int = 1_000_000,
+) -> DataFrame:
+    """Hierarchical one-Lloyd-iteration-per-level k-means: effective
+    k = branch**depth with per-vector work O(branch*depth*dim). Returns
+    (id, vec, cluster) with cluster a long path id in
+    [0, branch**depth).
+
+    Level 0 (all of depth=1, the flat k=branch clustering the catalog's
+    SemDeDup oracles encode) is one deterministic Lloyd iteration:
+     - Forgy seeds are DATA POINTS, the branch lowest-id vectors
+       (distributed TakeOrderedAndProject, no global sort), packed into
+       a ONE-ROW array joined by broadcast cross join — the sanctioned
+       scalar-BNLJ idiom, the seeds never shuffle the data side;
+       precondition: the seed vectors are pairwise distinct, which
+       holds for any real float embedding table;
+     - assign by first-match argmin over the seeds, exact integer-scaled
+       mean update (semdedup_state_sums), re-assign against the means.
+    Deeper levels split each cell with one Lloyd iteration whose INIT is
+    pmod(xxhash64(id), branch): a per-cell lowest-id Forgy pick would
+    need a per-cell top-b (a window or collect over data rows — the
+    thing this operator exists to avoid at 100 TB), while hash-init is
+    a pure projection; the final assignment is still value-based
+    (nearest updated centroid), so identical vectors always co-locate
+    regardless of init.
+
+    Shuffle shape per level: one (k*dim)-group integer aggregation +
+    one join of the data against the k-row centroid table — level 0
+    cross-joins the one-row root pack, deeper levels equi-join the
+    table packed per PARENT cell (broadcast while small; a plain
+    shuffled equi-join on the parent cell once k*dim outgrows the hint
+    — Catalyst/AQE decides, nothing is forced). No window functions,
+    no collect over data rows, no cartesian: assignment cost is
+    n*branch*depth folds, i.e. O(n log n) when depth tracks
+    log(corpus) — the measured scale-check path
+    (SCALE_CHECK_SF10_R8.json)."""
+    from sales_data_pipeline_spark.caching import scoped_persist
+
+    def _vecs(assigned: DataFrame) -> DataFrame:
+        return _centroid_vecs(
+            semdedup_state_sums(assigned, vec_col, scale), scale
+        )
+
+    # ---- level 0: flat Forgy-by-lowest-id Lloyd iteration -----------
+    seeds_row = (
+        df.select(id_col, vec_col)
+        .orderBy(id_col)
+        .limit(branch)
+        .agg(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(
+                        F.struct(
+                            F.col(id_col).alias("i"),
+                            F.col(vec_col).alias("v"),
+                        )
+                    )
+                ),
+                lambda s, i: F.struct(
+                    i.cast("long").alias("cid"),
+                    s["v"].cast("array<double>").alias("cv"),
+                ),
+            ).alias("cells")
+        )
+    )
+    a0 = scoped_persist(
+        df.select(id_col, vec_col)
+        .crossJoin(F.broadcast(seeds_row))
+        .selectExpr(
+            id_col,
+            vec_col,
+            f"{_sql_argmin_cell('cells', vec_col, dim)} AS cluster",
+        )
+    )
+    cur = a0.crossJoin(F.broadcast(_pack_root(_vecs(a0)))).selectExpr(
+        id_col, vec_col, f"{_sql_argmin_cell('cells', vec_col, dim)} AS cell"
+    )
+
+    # ---- levels 1..depth-1: hash-init Lloyd split of each cell ------
+    for _level in range(1, depth):
+        cur = scoped_persist(cur)
+        prelim = cur.withColumn(
+            "cluster",
+            F.col("cell") * branch
+            + F.pmod(F.xxhash64(F.col(id_col)), F.lit(branch)),
+        )
+        cents = _pack_by_parent(_vecs(prelim), branch)
+        cur = cur.join(cents, cur["cell"] == cents["parent"]).selectExpr(
+            id_col,
+            vec_col,
+            f"{_sql_argmin_cell('cells', vec_col, dim)} AS cell",
+        )
+    return cur.select(id_col, vec_col, F.col("cell").alias("cluster"))
+
+
+def auto_depth(n: int, branch: int = 8, target: int = 400) -> int:
+    """Smallest depth whose branch**depth cells bound the mean cluster
+    at ~target vectors: ceil(log_branch(n / target)), min 1. This is
+    the 'k grows with the corpus' schedule — cluster size stays O(1)
+    in n, so the within-cluster pair join is O(n * target), linear."""
+    import math
+
+    if n <= target * branch:
+        return 1
+    return max(1, math.ceil(math.log(n / target) / math.log(branch)))
+
+
+def semdedup(
+    df: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    branch: int = 8,
+    target: int = 400,
+    depth: int | None = None,
+    min_cosine: float = 0.96,
+    dim: int = DIM,
+) -> DataFrame:
+    """SemDeDup pruning: cluster (kmeans_assign_hierarchical), then flag
+    every vector whose rounded cosine to some LOWER-id vector in the
+    SAME cluster reaches ``min_cosine`` (greedy keep-lowest-id — one
+    representative survives per near-duplicate ball). Returns one row
+    per vector: (id, cluster, best_sim, is_dup), cluster as long;
+    best_sim is NULL for vectors with no lower-id cluster partner.
+
+    k ∝ corpus: ``depth`` defaults to auto_depth(n) =
+    ceil(log_branch(n/target)) (one count() job to size the corpus),
+    so per-cluster blocks stay ~target vectors at ANY corpus size — the
+    pair join is O(n*target) and the assignment O(n*branch*depth), the
+    100 TB execution path (SCALE_CHECK_SF10_R8.json). depth=1 is the
+    flat k=branch operator the DuckDB oracle encodes.
+
+    The pair space is the equi-join on cluster — a plain shuffled
+    equi-join, never a cartesian. Scores round to 4 decimals BEFORE
+    thresholding so both engines threshold identical values."""
+    from sales_data_pipeline_spark.caching import scoped_persist
+
+    if depth is None:
+        depth = auto_depth(df.count(), branch, target)
+    # norms precomputed ONCE per vector (persisted with the
+    # assignment): the pair space is quadratic in cluster size, so a
+    # per-pair norm would fold 3x64 terms per pair instead of 1x64 —
+    # measured 9.3s -> ~2x faster at sf0.1. Value-identical: norm is a
+    # scalar factor, the dot fold's association is unchanged.
+    assign = scoped_persist(
+        kmeans_assign_hierarchical(
+            df, id_col, vec_col, depth, branch, dim
+        ).withColumn("nrm", F.expr(sql_norm(vec_col, dim)))
+    )
+    a, b = assign.alias("a"), assign.alias("b")
+    pairs = a.join(
+        b,
+        (F.col("a.cluster") == F.col("b.cluster"))
+        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+    ).selectExpr(
+        f"b.{id_col} AS {id_col}",
+        f"FLOOR({sql_dot(f'a.{vec_col}', f'b.{vec_col}', dim)}"
+        " / (a.nrm * b.nrm) * 10000 + 0.5D) / 10000.0D AS cs",
+    )
+    best = pairs.groupBy(id_col).agg(F.max("cs").alias("best_sim"))
+    return assign.join(best, id_col, "left").select(
+        id_col,
+        F.col("cluster").cast("long").alias("cluster"),
+        "best_sim",
+        F.coalesce(
+            F.col("best_sim") >= F.lit(min_cosine), F.lit(False)
+        ).alias("is_dup"),
+    )
+
+
 def semdedup_packed_levels(
     leaf: DataFrame,
     depth: int,
@@ -1260,7 +1218,7 @@ def semdedup_packed_levels(
     pack (scalar-BNLJ broadcast shape), lvl>=2: per-parent
     array<struct<cid,cv>> packs}. Exact integer rollups — sums and
     counts add exactly, and each level's mean is the same
-    (sum/scale)/count double pair the flat M-step computes.
+    (sum/scale)/count double pair the k-means M-step computes.
 
     Factored out of semdedup_incremental (round-12 optimization) so a
     caller probing MANY batches against the SAME stored state — the
@@ -1279,39 +1237,15 @@ def semdedup_packed_levels(
             .agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
         )
 
-    def _cell_vecs(tbl: DataFrame) -> DataFrame:
-        return tbl.groupBy("g").agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            "pos",
-                            (F.col("s") / float(scale) / F.col("c")).alias(
-                                "cval"
-                            ),
-                        )
-                    )
-                ),
-                lambda st: st["cval"],
-            ).alias("cv")
-        )
-
-    _cells_struct = F.struct(F.col("g").alias("cid"), "cv")
     packed: dict[int, DataFrame] = {
         # level 1 has exactly one parent (the root): pack via a GLOBAL
         # aggregate so the scalar-BNLJ build is the sanctioned
         # one-row-global-agg shape the plan gate certifies
-        1: _cell_vecs(levels[1]).agg(
-            F.array_sort(F.collect_list(_cells_struct)).alias("cells")
-        )
+        1: _pack_root(_centroid_vecs(levels[1], scale))
     }
     for lvl in range(2, depth + 1):
-        packed[lvl] = (
-            _cell_vecs(levels[lvl])
-            .groupBy(
-                F.floor(F.col("g") / branch).cast("long").alias("parent")
-            )
-            .agg(F.array_sort(F.collect_list(_cells_struct)).alias("cells"))
+        packed[lvl] = _pack_by_parent(
+            _centroid_vecs(levels[lvl], scale), branch
         )
     return packed
 
@@ -1321,13 +1255,12 @@ def semdedup_incremental(
     batch: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    k: int = 8,
+    branch: int = 8,
     min_cosine: float = 0.96,
     dim: int = DIM,
     scale: int = 1_000_000,
     assign: DataFrame | None = None,
     depth: int = 1,
-    branch: int | None = None,
     leaf_sums: DataFrame | None = None,
     packed_levels: dict[int, DataFrame] | None = None,
 ) -> DataFrame:
@@ -1338,64 +1271,51 @@ def semdedup_incremental(
     batch assigns to the STORED cluster state and compares only
     against stored members of its own cluster).
 
-    Stored state stand-in: the corpus assignment (id, vec, cluster,
-    nrm) from the catalog's one-iteration k-means, plus a centroid
-    table RE-DERIVED from the stored labels as the exact
-    integer-scaled per-cluster mean — the production shape, where
-    (labels, centroids) persist between batches and the centroid
-    derivation is a k*dim-row aggregate, never a corpus re-cluster.
+    Stored state: the corpus assignment (id, vec, cluster path id,
+    optional nrm) — ``assign``, or kmeans_assign_hierarchical(base) at
+    (``depth``, ``branch``) when omitted — plus centroid tables
+    RE-DERIVED from the stored labels as exact integer-scaled means:
+    the production shape, where (labels, centroids) persist between
+    batches and the centroid derivation is a k*dim-row aggregate,
+    never a corpus re-cluster.
 
     Per batch vector: MULTI-PROBE assignment — the TWO nearest stored
-    centroids (IVF's classic recall knob; first-match argmin for the
-    nearest, then argmin over the remaining distances for the second),
-    then rounded cosine against those clusters' stored members only;
-    output one row per batch vector — (id, matched_base_id, cos_sim,
-    is_unique) with the best match at cosine >= min_cosine (ties to
-    the lowest base id), mirroring dedup_incremental_batch's schema.
-    Unmatched vectors flag is_unique and would enter the corpus.
-    Why nprobe=2: the stored labels predate the re-derived means (one
-    Lloyd half-step of drift), so a boundary original can sit in a
-    cluster that is not the batch copy's nearest — measured recall on
-    injected near-dups at sf0.01: top-1 probe 113/125 (90.4%), top-2
-    124/125 (99.2%, one >=3rd-cluster straggler) at 2x probe cost —
-    the classic IVF recall/cost knob, pinned in
+    centroids (IVF's classic recall knob), then rounded cosine against
+    those clusters' stored members only; output one row per batch
+    vector — (id, matched_base_id, cos_sim, is_unique) with the best
+    match at cosine >= min_cosine (ties to the lowest base id),
+    mirroring dedup_incremental_batch's schema. Unmatched vectors flag
+    is_unique and would enter the corpus. Why nprobe=2: the stored
+    labels predate the re-derived means (one Lloyd half-step of drift),
+    so a boundary original can sit in a cluster that is not the batch
+    copy's nearest — measured recall on injected near-dups at sf0.01:
+    top-1 probe 113/125 (90.4%), top-2 124/125 (99.2%, one
+    >=3rd-cluster straggler) at 2x probe cost, pinned in
     tests/test_semdedup_scaled.py.
 
-    Shuffle shape: centroids are a ONE-ROW packed array (scalar-BNLJ
-    broadcast — the batch never shuffles for assignment); the probe
-    clusters EXPLODE to (vector, cluster) rows so the probe join stays
-    a plain hash equi-join on cluster (an OR-of-equalities condition
-    would nest-loop), partition-prunable when the stored assignment is
-    written partitioned by cluster; the best-match window partitions
-    by batch id (bounded groups — candidates within nprobe clusters).
-
-    FLAT-k CAVEAT (same trade the flat ``semdedup`` documents, same
-    resolution): with the default k=8 stored state, each probed
-    cluster holds ~corpus/8 members, so the per-batch-vector compare
-    cost GROWS with the corpus — fine as the oracle fixture the
-    catalog certifies cell-exact against DuckDB, wrong as the ingest
-    path at scale. The production path is the ``assign`` override
-    below with a hierarchical scaled-k state (catalog query
-    ``semantic_dedup_incremental_scaled``), whose bounded ~400-vector
-    cells keep the probe linear in the corpus — measured 1.3x wall on
-    10x data (SCALE_CHECK_SF10_R8.json), exactly as ``semdedup``
-    names ``semdedup_scaled`` as its 100 TB execution path.
-
-    ``assign`` overrides the stored clustering: pass
-    kmeans_assign_hierarchical's output (id, vec, cluster path id,
-    with matching ``depth``/``branch``) to probe a SCALED-k state —
-    with bounded clusters the probe cost is
+    The batch DESCENDS the hierarchy (beam-2: both surviving parents'
+    children score at the next level, ~2*branch folds per level)
+    against per-level centroid tables ROLLED UP from the stored leaf
+    sums — exact integer rollups, aggregate-sized at every level. With
+    bounded clusters (depth from auto_depth) the probe cost is
     O(batch * (2*branch*depth + nprobe*target)), linear in the corpus:
-    the 100 TB ingest path. The batch DESCENDS the hierarchy (beam-2:
-    both surviving parents' children score at the next level, ~2*branch
-    folds per level) against per-level centroid tables ROLLED UP from
-    the stored leaf sums — exact integer rollups, aggregate-sized at
-    every level, derived purely from the stored labels. A flat
-    all-k probe was measured 23x on 10x data at sf10 (k=4096: every
-    batch vector scored all 4096 centroids); the descent replaces it.
-    depth=1 (the default flat k=8 state) makes the descent one
-    all-siblings scoring round — identical values to a flat top-2
-    argmin, which is what keeps the k=8 DuckDB oracle valid.
+    the 100 TB ingest path, measured 1.3x wall on 10x data
+    (SCALE_CHECK_SF10_R8.json). A flat all-k probe was measured 23x on
+    10x data at sf10 (k=4096: every batch vector scored all 4096
+    centroids); the descent replaces it. depth=1 makes the descent one
+    all-siblings scoring round — a flat top-2 argmin, the k=branch
+    state the DuckDB oracle encodes; there each probed cluster holds
+    ~corpus/branch members, so the per-batch-vector compare cost grows
+    with the corpus.
+
+    Shuffle shape: level-1 centroids are a ONE-ROW packed array
+    (scalar-BNLJ broadcast — the batch never shuffles for assignment);
+    the probe clusters EXPLODE to (vector, cluster) rows so the probe
+    join stays a plain hash equi-join on cluster (an OR-of-equalities
+    condition would nest-loop), partition-prunable when the stored
+    assignment is written partitioned by cluster; the best-match
+    window partitions by batch id (bounded groups — candidates within
+    nprobe clusters).
 
     ``leaf_sums`` passes the STORED centroid component sums
     (semdedup_state_sums over the same assignment — what production
@@ -1414,15 +1334,16 @@ def semdedup_incremental(
 
     from sales_data_pipeline_spark.caching import scoped_persist
 
-    branch = branch if branch is not None else k
     if assign is None:
-        assign = kmeans_assign_one_iter(base, id_col, vec_col, k, dim)
+        assign = kmeans_assign_hierarchical(
+            base, id_col, vec_col, depth, branch, dim, scale
+        )
     if "nrm" not in assign.columns:
         assign = assign.withColumn("nrm", F.expr(sql_norm(vec_col, dim)))
     assign = assign.withColumn("cluster", F.col("cluster").cast("long"))
     # exact integer component sums per LEAF cluster, rolled up level by
     # level (sums and counts add exactly; the per-level mean is the
-    # same (sum/scale)/count double pair the flat M-step computes).
+    # same (sum/scale)/count double pair the k-means M-step computes).
     # When the caller passes STORED sums (semdedup_state_sums written
     # alongside the labels — the production state shape), the per-batch
     # plan contains no corpus-sized aggregate at all and the assignment
@@ -1552,237 +1473,6 @@ def semdedup_incremental(
     )
 
 
-# ---------------------------------------------------------------------------
-# Scaled-k SemDeDup: hierarchical one-Lloyd-per-level k-means so the
-# effective k GROWS with the corpus while per-vector assignment work
-# stays O(branch * depth) — the measured form of the "k ∝ corpus"
-# contract the flat operator documents.
-# ---------------------------------------------------------------------------
-
-
-def _argmin_cell(cells: Column, vec: Column, dim: int = DIM) -> Column:
-    """cid of the nearest centroid in a packed
-    array<struct<cid,cv>> column (first-match / lowest-cid tie-break,
-    the same semantics as the flat operator's array_position argmin).
-    HOF transform keeps the expression tree O(1) in the number of
-    centroids — the property that lets branch*depth replace an
-    unrolled k."""
-    d = F.transform(cells, lambda s: _fold_l2sq(vec, s["cv"], dim))
-    return F.element_at(
-        cells, F.array_position(d, F.array_min(d)).cast("int")
-    )["cid"]
-
-
-def _centroid_cells(
-    assigned: DataFrame,
-    cell_col: str,
-    vec_col: str,
-    branch: int,
-    scale: int,
-) -> DataFrame:
-    """Exact integer-scaled mean centroid per cell, re-packed per
-    PARENT cell as array<struct<cid,cv>> (sorted by cid, so the argmin
-    tie-break is deterministic). The component aggregation is the flat
-    operator's: micro-unit int64 partial sums (associative in any
-    shard order), then (sum / scale) / count as two double divisions —
-    bit-identical to the flat form and the oracle SQL.
-
-    Output size is k*dim values total (k = #occupied cells), collected
-    into k/branch parent rows — aggregate-sized at any corpus size;
-    the collect_list runs over k*dim rows, never over data rows."""
-    comp = assigned.select(
-        F.col(cell_col).alias("nc"),
-        F.posexplode(vec_col).alias("pos0", "val"),
-    ).select(
-        "nc",
-        (F.col("pos0") + 1).alias("pos"),
-        F.floor(
-            F.col("val").cast("double") * scale
-            + F.when(F.col("val") >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))
-        )
-        .cast("long")
-        .alias("scaled"),
-    )
-    cent = comp.groupBy("nc", "pos").agg(
-        (F.sum("scaled") / float(scale) / F.count("*")).alias("cval")
-    )
-    vecs = cent.groupBy("nc").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-            lambda s: s["cval"],
-        ).alias("cv")
-    )
-    return vecs.groupBy(
-        F.floor(F.col("nc") / branch).cast("long").alias("parent")
-    ).agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("nc").alias("cid"), "cv"))
-        ).alias("cells")
-    )
-
-
-def kmeans_assign_hierarchical(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    depth: int = 1,
-    branch: int = 8,
-    dim: int = DIM,
-    scale: int = 1_000_000,
-) -> DataFrame:
-    """Hierarchical one-Lloyd-iteration-per-level k-means: effective
-    k = branch**depth with per-vector work O(branch*depth*dim) — the
-    large-k assignment path (k unrolled as expressions, as in
-    kmeans_assign_one_iter, stops planning past a few dozen clusters).
-    Returns (id, vec, cluster) with cluster a long path id in
-    [0, branch**depth).
-
-    Level 0 is EXACTLY the flat operator's iteration — Forgy seeds from
-    the branch lowest-id vectors (distributed TakeOrderedAndProject),
-    assign, exact integer-scaled mean update, re-assign — so depth=1,
-    branch=k reproduces kmeans_assign_one_iter value-for-value (pinned
-    in tests/test_semdedup_scaled.py). Deeper levels split each cell
-    with one Lloyd iteration whose INIT is pmod(xxhash64(id), branch):
-    a per-cell lowest-id Forgy pick would need a per-cell top-b (a
-    window or collect over data rows — the thing this operator exists
-    to avoid at 100 TB), while hash-init is a pure projection; the
-    final assignment is still value-based (nearest updated centroid),
-    so identical vectors always co-locate regardless of init.
-
-    Shuffle shape per level: one (k*dim)-group integer aggregation +
-    one equi-join of the data against the k-row centroid table, packed
-    per PARENT cell (broadcast while small; a plain shuffled equi-join
-    on the parent cell once k*dim outgrows the hint — Catalyst/AQE
-    decides, nothing is forced). No window functions, no collect over
-    data rows, no cartesian: assignment cost is n*branch*depth folds,
-    i.e. O(n log n) when depth tracks log(corpus) — the measured
-    scale-check path (SCALE_CHECK_SF10_R8.json)."""
-    from sales_data_pipeline_spark.caching import scoped_persist
-
-    # ---- level 0: flat Forgy-by-lowest-id Lloyd iteration -----------
-    seeds_row = (
-        df.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(branch)
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col(id_col).alias("i"),
-                            F.col(vec_col).alias("v"),
-                        )
-                    )
-                ),
-                lambda s, i: F.struct(
-                    i.cast("long").alias("cid"),
-                    s["v"].cast("array<double>").alias("cv"),
-                ),
-            ).alias("cells")
-        )
-    )
-    a0 = scoped_persist(
-        df.select(id_col, vec_col)
-        .crossJoin(F.broadcast(seeds_row))
-        .select(
-            id_col,
-            vec_col,
-            _argmin_cell(F.col("cells"), F.col(vec_col), dim).alias("nc"),
-        )
-    )
-    cents0 = _centroid_cells(a0, "nc", vec_col, branch, scale)
-    cur = (
-        a0.crossJoin(F.broadcast(cents0.select("cells")))
-        .select(
-            id_col,
-            vec_col,
-            _argmin_cell(F.col("cells"), F.col(vec_col), dim).alias(
-                "cell"
-            ),
-        )
-    )
-
-    # ---- levels 1..depth-1: hash-init Lloyd split of each cell ------
-    for _level in range(1, depth):
-        cur = scoped_persist(cur)
-        prelim = cur.withColumn(
-            "nc",
-            F.col("cell") * branch
-            + F.pmod(F.xxhash64(F.col(id_col)), F.lit(branch)),
-        )
-        cents = _centroid_cells(prelim, "nc", vec_col, branch, scale)
-        cur = cur.join(cents, cur["cell"] == cents["parent"]).select(
-            id_col,
-            vec_col,
-            _argmin_cell(F.col("cells"), F.col(vec_col), dim).alias(
-                "cell"
-            ),
-        )
-    return cur.select(id_col, vec_col, F.col("cell").alias("cluster"))
-
-
-def auto_depth(n: int, branch: int = 8, target: int = 400) -> int:
-    """Smallest depth whose branch**depth cells bound the mean cluster
-    at ~target vectors: ceil(log_branch(n / target)), min 1. This is
-    the 'k grows with the corpus' schedule — cluster size stays O(1)
-    in n, so the within-cluster pair join is O(n * target), linear."""
-    import math
-
-    if n <= target * branch:
-        return 1
-    return max(1, math.ceil(math.log(n / target) / math.log(branch)))
-
-
-def semdedup_scaled(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    branch: int = 8,
-    target: int = 400,
-    depth: int | None = None,
-    min_cosine: float = 0.96,
-    dim: int = DIM,
-) -> DataFrame:
-    """SemDeDup with k ∝ corpus: hierarchical clustering at
-    depth = ceil(log_branch(n/target)) (one count() job to size the
-    corpus when depth is not given), then the flat operator's
-    within-cluster cosine pruning. Per-cluster blocks stay ~target
-    vectors at ANY corpus size, so the pair join is O(n*target) and
-    the assignment O(n*branch*depth) — the measured sub-quadratic form
-    of the contract semdedup's docstring states (flat k=8 keeps the
-    oracle-exact catalog semantics; this is the 100 TB execution
-    path). Output matches semdedup's: (id, cluster, best_sim, is_dup),
-    cluster as long."""
-    from sales_data_pipeline_spark.caching import scoped_persist
-
-    if depth is None:
-        depth = auto_depth(df.count(), branch, target)
-    assign = scoped_persist(
-        kmeans_assign_hierarchical(
-            df, id_col, vec_col, depth, branch, dim
-        ).withColumn("nrm", F.expr(sql_norm(vec_col, dim)))
-    )
-    a, b = assign.alias("a"), assign.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.cluster") == F.col("b.cluster"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    ).selectExpr(
-        f"b.{id_col} AS {id_col}",
-        f"FLOOR({sql_dot(f'a.{vec_col}', f'b.{vec_col}', dim)}"
-        " / (a.nrm * b.nrm) * 10000 + 0.5D) / 10000.0D AS cs",
-    )
-    best = pairs.groupBy(id_col).agg(F.max("cs").alias("best_sim"))
-    return assign.join(best, id_col, "left").select(
-        id_col,
-        F.col("cluster").cast("long").alias("cluster"),
-        "best_sim",
-        F.coalesce(
-            F.col("best_sim") >= F.lit(min_cosine), F.lit(False)
-        ).alias("is_dup"),
-    )
-
-
 def cluster_cohesion(
     assign: DataFrame,
     id_col: str = "vec_id",
@@ -1799,35 +1489,16 @@ def cluster_cohesion(
 
     LINEAR, unlike the within-cluster pair join: one posexplode
     aggregate re-derives the exact integer-scaled mean centroids from
-    the labels (k*dim rows — aggregate-sized at any corpus size, the
-    same derivation semdedup_incremental's stored state uses), one
-    hash equi-join puts each vector next to its k-row centroid table
-    (Catalyst broadcasts the agg side from stats; nothing forced), one
-    partial-agg groupBy. Cross-engine determinism: the per-vector
-    cosine rounds to an INTEGER 1e4 grid before aggregating, so the
-    per-cluster sums are order-free int64 math and the mean is two
-    IEEE divisions of identical integers on both engines."""
-    comp = assign.select(
-        F.col("cluster").alias("nc"),
-        F.posexplode(vec_col).alias("pos0", "val"),
-    ).select(
-        "nc",
-        (F.col("pos0") + 1).alias("pos"),
-        F.floor(
-            F.col("val").cast("double") * scale
-            + F.when(F.col("val") >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))
-        )
-        .cast("long")
-        .alias("scaled"),
-    )
-    cent = comp.groupBy("nc", "pos").agg(
-        (F.sum("scaled") / float(scale) / F.count("*")).alias("cval")
-    )
-    centv = cent.groupBy("nc").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-            lambda s: s["cval"],
-        ).alias("cv")
+    the labels (semdedup_state_sums: k*dim rows, aggregate-sized at
+    any corpus size), one hash equi-join puts each vector next to its
+    k-row centroid table (Catalyst broadcasts the agg side from stats;
+    nothing forced), one partial-agg groupBy. Cross-engine determinism:
+    the per-vector cosine rounds to an INTEGER 1e4 grid before
+    aggregating, so the per-cluster sums are order-free int64 math and
+    the mean is two IEEE divisions of identical integers on both
+    engines."""
+    centv = _centroid_vecs(
+        semdedup_state_sums(assign, vec_col, scale), scale
     )
     css = F.expr(
         f"CAST(FLOOR({sql_dot(vec_col, 'cv', dim)}"
@@ -1835,7 +1506,7 @@ def cluster_cohesion(
         " * 10000 + 0.5D) AS BIGINT)"
     ).alias("css")
     scored = assign.join(
-        centv, assign["cluster"] == centv["nc"]
+        centv, assign["cluster"] == centv["g"]
     ).select(F.col("cluster").cast("int").alias("cluster"), css)
     return scored.groupBy("cluster").agg(
         F.count("*").alias("n_vectors"),

@@ -543,7 +543,7 @@ def sample_docs_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_self_dot(vec: str, dim: int) -> str:
     # CAST each element to DOUBLE BEFORE multiplying: DuckDB evaluates
     # FLOAT * FLOAT in single precision (rounding each product to 24
-    # bits) while Spark's similarity.dot widens to double first —
+    # bits) while Spark's similarity.sql_dot widens to double first —
     # caught at sf1 where the perturbed replicas' full-mantissa floats
     # made 4% of scaled norms differ by +/-1 (queries/llm.py's
     # _sql_dot always cast; this local builder predated it).
@@ -578,7 +578,7 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sales_data_pipeline_spark.operators import similarity
 
     e = table(spark, sf_dir, "embeddings")
-    nrm = similarity.norm(F.col("embedding"))
+    nrm = F.expr(similarity.sql_norm("embedding"))
     scaled = F.floor(nrm * 1000000 + F.lit(0.5))
     return (
         e.groupBy("label")

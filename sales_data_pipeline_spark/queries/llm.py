@@ -132,7 +132,7 @@ _SHINGLES_SQL = (
 
 
 def _sql_dot(a: str, b: str, dim: int = similarity.DIM) -> str:
-    """Left-fold dot chain — same association as similarity.dot."""
+    """Left-fold dot chain — same association as similarity.sql_dot."""
     terms = " + ".join(
         f"CAST({a}[{j}] AS DOUBLE) * CAST({b}[{j}] AS DOUBLE)"
         for j in range(1, dim + 1)
@@ -547,7 +547,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_l2sq_chain(vec: str, cent_of, dim: int = similarity.DIM) -> str:
     """Explicit (0.0 + t1 + t2 + ...) squared-L2 chain — the SQL
-    mirror of similarity._fold_l2sq's sequential left-fold association
+    mirror of similarity.sql_fold_l2sq's sequential left-fold association
     (bit-identical doubles). ``cent_of(j)`` renders the centroid's
     j-th component expression."""
     terms = " + ".join(
@@ -564,10 +564,11 @@ def _semdedup_ctes(
     """The WITH-body of the SemDeDup oracle (corpus -> a1 -> best),
     parameterized on the corpus CTE so the eval query can reuse the
     identical clustering/pruning SQL over its injected-near-dup
-    corpus. Mirror of similarity.kmeans_assign_one_iter + semdedup:
-    the same left-fold L2/cosine chains, the same integer-scaled mean
-    update, the same first-match argmin — bit-identical doubles end
-    to end."""
+    corpus. Mirror of similarity.semdedup at depth=1 (the level-0
+    Lloyd iteration of kmeans_assign_hierarchical, then the
+    within-cluster pair join): the same left-fold L2/cosine chains,
+    the same integer-scaled mean update, the same first-match argmin —
+    bit-identical doubles end to end."""
 
     def l2sq(vec: str, cent_of) -> str:
         return _sql_l2sq_chain(vec, cent_of, dim)
@@ -676,27 +677,26 @@ def _semdedup_oracle(
 )
 def semantic_dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.semdedup(
-        _emb_corpus(spark, sf_dir), k=8, min_cosine=0.96
-    )
+        _emb_corpus(spark, sf_dir), branch=8, depth=1, min_cosine=0.96
+    ).withColumn("cluster", F.col("cluster").cast("int"))
 
 
 @query(
     "semantic_dedup_scaled",
     oracle=_semdedup_oracle(cluster_type="BIGINT"),
     survey="LLM-ext: semantic dedup, scaled-k hierarchical form "
-    "(operators/similarity.py semdedup_scaled)",
+    "(operators/similarity.py semdedup at auto depth)",
     doc="SemDeDup with k ∝ corpus: hierarchical one-Lloyd-per-level "
     "k-means at depth = ceil(log8(n/400)) bounds clusters at ~400 "
     "vectors at ANY corpus size, so the within-cluster pair join is "
     "O(n*400) (linear) and assignment O(n*8*depth) (n log n) — the "
     "measured execution path for the flat operator's documented "
     "'k grows with the corpus' contract (SCALE_CHECK_SF10_R8.json). "
-    "At the driver's gate scale the corpus fits one level, where the "
-    "hierarchy provably REDUCES to the flat operator (level 0 is the "
-    "identical Forgy-by-lowest-id Lloyd iteration; equivalence pinned "
-    "value-for-value in tests/test_semdedup_scaled.py), so this oracle "
-    "is the flat k=8 SQL with a BIGINT cluster — deeper levels emit "
-    "long path ids, hence the stable BIGINT schema.",
+    "At the driver's gate scale the corpus fits one level, where this "
+    "is the same operator call as semantic_dedup_semdedup (depth=1 IS "
+    "the flat k=8 operator, by construction), so this oracle is the "
+    "flat k=8 SQL with a BIGINT cluster — deeper levels emit long path "
+    "ids, hence the stable BIGINT schema.",
     tags=("llm",),
 )
 def semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -704,7 +704,7 @@ def semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth = _flat_oracle_depth_guard(
         "semantic_dedup_scaled", base.count(), branch=8, target=400
     )
-    return similarity.semdedup_scaled(
+    return similarity.semdedup(
         base, branch=8, target=400, depth=depth, min_cosine=0.96
     )
 
@@ -714,11 +714,11 @@ def _flat_oracle_depth_guard(
 ) -> int:
     """The scaled semdedup queries certify against the FLAT k=8 DuckDB
     oracle, which is only equivalent while auto_depth(n)==1 (corpus <=
-    target*branch vectors; equivalence pinned in
-    tests/test_semdedup_scaled.py). The same query fns also run at
-    bench/scale-check sizes where depth>1 is the whole point, so this
-    can't be a hard assert — instead it computes the depth ONCE (the
-    fn passes it through, no second count job) and emits a loud
+    target*branch vectors; depth 1 is the flat operator by
+    construction). The same query fns also run at bench/scale-check
+    sizes where depth>1 is the whole point, so this can't be a hard
+    assert — instead it computes the depth ONCE (the fn passes it
+    through, no second count job) and emits a loud
     warning naming the cause, so a certification run at an oversized
     sf_dir fails with an explanation on record rather than a bare
     hash mismatch (round-9 advisor)."""
@@ -748,9 +748,10 @@ def _emb_eval_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = e.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    pert = e.filter(F.col("vec_id") % 5 == 0).select(
-        (F.col("vec_id") + 300000).alias("vec_id"),
-        _perturbed_vec().alias("embedding"),
+    pert = (
+        e.filter(F.col("vec_id") % 5 == 0)
+        .withColumn("embedding", _perturbed_vec())
+        .withColumn("vec_id", F.col("vec_id") + 300000)
     )
     return spread_small_scan(base.unionByName(pert), "vec_id")
 
@@ -766,7 +767,10 @@ _SQL_PERTURB = f"""list_transform(generate_series(1, {similarity.DIM}),
 
 def _perturbed_vec():
     """Spark mirror of _SQL_PERTURB (same integer arithmetic, same
-    double literal, identical element values)."""
+    double literal, identical element values). Its lambda reads
+    vec_id, so project it BEFORE the id is re-aliased: in a select
+    that aliases an expression to vec_id, Spark binds a lambda's
+    vec_id to that alias (a lateral alias), not to the input column."""
     return F.transform(
         F.col("embedding"),
         lambda x, i: x.cast("double")
@@ -829,7 +833,7 @@ _EMB_EVAL_CORPUS_SQL = f"""
 )
 def semantic_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = similarity.semdedup(
-        _emb_eval_corpus(spark, sf_dir), k=8, min_cosine=0.96
+        _emb_eval_corpus(spark, sf_dir), branch=8, depth=1, min_cosine=0.96
     )
     flagged = res.filter(F.col("is_dup")).select("vec_id")
     truth = (
@@ -864,6 +868,20 @@ def semantic_dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# SQL mirror of _semdedup_probe_batch: the incremental-probe batch CTE.
+_SEMDEDUP_PROBE_BATCH_SQL = f"""
+  batchq AS (
+    SELECT vec_id + 400000 AS vec_id, {_SQL_PERTURB} AS embedding
+    FROM embeddings WHERE vec_id % 4 = 0
+    UNION ALL
+    SELECT vec_id + 500000,
+           list_transform(generate_series(1, {similarity.DIM}),
+             j -> CAST((vec_id*13 + j*7) % 19 - 9 AS DOUBLE) / 10.0)
+    FROM embeddings WHERE vec_id % 9 = 0
+  )
+"""
+
+
 def _semdedup_incr_oracle(k: int = 8, dim: int = similarity.DIM) -> str:
     """SQL mirror of similarity.semdedup_incremental over the standard
     corpus: the flat CTEs give the stored assignment a1; centroids are
@@ -880,15 +898,7 @@ def _semdedup_incr_oracle(k: int = 8, dim: int = similarity.DIM) -> str:
     )
     return f"""
         {_semdedup_ctes(_EMB_CORPUS_SQL, k, dim)},
-        batchq AS (
-          SELECT vec_id + 400000 AS vec_id, {_SQL_PERTURB} AS embedding
-          FROM embeddings WHERE vec_id % 4 = 0
-          UNION ALL
-          SELECT vec_id + 500000,
-                 list_transform(generate_series(1, {dim}),
-                   j -> CAST((vec_id*13 + j*7) % 19 - 9 AS DOUBLE) / 10.0)
-          FROM embeddings WHERE vec_id % 9 = 0
-        ),
+        {_SEMDEDUP_PROBE_BATCH_SQL},
         comps2 AS (
           SELECT cluster, u.pos AS pos,
                  CAST(FLOOR(CAST(u.val AS DOUBLE) * 1000000
@@ -998,7 +1008,7 @@ def semantic_dedup_incremental(
     base = _emb_corpus(spark, sf_dir)
     batch = _semdedup_probe_batch(spark, sf_dir)
     return similarity.semdedup_incremental(
-        base, batch, k=8, min_cosine=0.96
+        base, batch, branch=8, min_cosine=0.96
     )
 
 
@@ -1008,19 +1018,26 @@ def _semdedup_probe_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     _SQL_PERTURB) plus genuinely fresh deterministic vectors of
     vec_id%9 at +500000."""
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    near = e.filter(F.col("vec_id") % 4 == 0).select(
-        (F.col("vec_id") + 400000).alias("vec_id"),
-        _perturbed_vec().alias("embedding"),
+    # each lambda column is projected before vec_id is re-aliased (see
+    # _perturbed_vec)
+    near = (
+        e.filter(F.col("vec_id") % 4 == 0)
+        .withColumn("embedding", _perturbed_vec())
+        .withColumn("vec_id", F.col("vec_id") + 400000)
     )
-    fresh = e.filter(F.col("vec_id") % 9 == 0).select(
-        (F.col("vec_id") + 500000).alias("vec_id"),
-        F.transform(
-            F.sequence(F.lit(1), F.lit(similarity.DIM)),
-            lambda j: ((F.col("vec_id") * 13 + j * 7) % 19 - 9).cast(
-                "double"
-            )
-            / 10.0,
-        ).alias("embedding"),
+    fresh = (
+        e.filter(F.col("vec_id") % 9 == 0)
+        .withColumn(
+            "embedding",
+            F.transform(
+                F.sequence(F.lit(1), F.lit(similarity.DIM)),
+                lambda j: ((F.col("vec_id") * 13 + j * 7) % 19 - 9).cast(
+                    "double"
+                )
+                / 10.0,
+            ),
+        )
+        .withColumn("vec_id", F.col("vec_id") + 500000)
     )
     return spread_small_scan(near.unionByName(fresh), "vec_id")
 
@@ -1039,8 +1056,8 @@ def _semdedup_probe_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     "generic in k: one packed array<struct<cid,cv>> centroid row "
     "(HOF argmin, expression tree O(1) in k), top-2 multi-probe, "
     "hash equi-join on cluster. At the driver's gate scale the "
-    "auto-depth hierarchy provably equals the flat k=8 clustering "
-    "(pinned equivalence), so this certifies against the SAME DuckDB "
+    "auto-depth hierarchy is depth 1, the flat k=8 clustering by "
+    "construction, so this certifies against the SAME DuckDB "
     "oracle as semantic_dedup_incremental while running genuinely "
     "hierarchical at sf1+ (SCALE_CHECK_SF10_R8.json measures the "
     "linear ingest ratio).",
@@ -1122,8 +1139,8 @@ def semantic_dedup_incremental_scaled(
 def semantic_cluster_cohesion(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    assign = similarity.kmeans_assign_one_iter(
-        _emb_corpus(spark, sf_dir), k=8
+    assign = similarity.kmeans_assign_hierarchical(
+        _emb_corpus(spark, sf_dir), depth=1, branch=8
     )
     return similarity.cluster_cohesion(assign)
 
@@ -1794,7 +1811,7 @@ def knn_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_pq_dlist(j: int) -> str:
     """DOUBLE[] of squared-L2 distances from embedding's subvector j to
     every codeword of sub-codebook j — same 0.0-rooted left-fold term
-    order as similarity.pq_dists' HOF folds."""
+    order as similarity.sql_pq_dlist's HOF folds."""
     subdim = similarity.PQ_SUBDIM
     off = j * subdim
     dists = []
@@ -1983,7 +2000,7 @@ def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_residual_list(centroid: list[float]) -> str:
     """DOUBLE[] residual embedding - centroid, same cast-then-subtract
-    order as similarity.pq_residual's zip_with."""
+    order as the residual zip_with in similarity.ivfpq_residual_topk."""
     return (
         "["
         + ", ".join(
@@ -2462,7 +2479,7 @@ def _pq_train_ctes() -> str:
     mirrors the Spark operator's arithmetic exactly: seeds packed with
     list(ORDER BY vec_id), left-fold (0.0 + t + ...) subvector L2
     chains, list_position first-match argmin, integer-scaled exact-sum
-    means (the kmeans_assign_one_iter recipe per subspace)."""
+    means (the k-means level-0 recipe per subspace)."""
     m, subdim, ksub = (
         similarity.PQ_M,
         similarity.PQ_SUBDIM,
@@ -3360,20 +3377,26 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") + 200000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(NEAR_DUP_PAD)).alias("text"),
     )
-    fresh = base.filter(F.col("doc_id") % 11 == 0).select(
-        (F.col("doc_id") + 300000).alias("doc_id"),
-        F.array_join(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(9)),
-                lambda k: F.concat(
-                    F.lit("fresh-"),
-                    F.col("doc_id").cast("string"),
-                    F.lit("-w"),
-                    k.cast("string"),
+    # the text lambda reads doc_id, so it is projected before doc_id is
+    # re-aliased (see _perturbed_vec)
+    fresh = (
+        base.filter(F.col("doc_id") % 11 == 0)
+        .withColumn(
+            "text",
+            F.array_join(
+                F.transform(
+                    F.sequence(F.lit(0), F.lit(9)),
+                    lambda k: F.concat(
+                        F.lit("fresh-"),
+                        F.col("doc_id").cast("string"),
+                        F.lit("-w"),
+                        k.cast("string"),
+                    ),
                 ),
+                " ",
             ),
-            " ",
-        ).alias("text"),
+        )
+        .withColumn("doc_id", F.col("doc_id") + 300000)
     )
     batch = near.unionByName(fresh)
 
@@ -3852,8 +3875,10 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = table(spark, sf_dir, "embeddings")
     sem = e.select(
         F.col("vec_id").alias("doc_id"),
-        similarity.cosine_to_literal(
-            F.col("embedding"), similarity.query_vector()
+        F.expr(
+            similarity.sql_cosine_to_literal(
+                "embedding", similarity.query_vector()
+            )
         ).alias("score"),
     )
     sem_ranked = (
@@ -4348,9 +4373,7 @@ def knn_batch_lsh_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         F.expr(similarity.sql_lsh_bucket("embedding")).alias("cb"),
     )
-    score = det_round(
-        similarity.cosine(F.col("qv"), F.col("embedding")), 6
-    )
+    score = det_round(F.expr(similarity.sql_cosine("qv", "embedding")), 6)
     scored = (
         c.join(
             gated_broadcast(q),
@@ -4534,7 +4557,7 @@ def embedding_cosine_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         c, (F.col("ab") == F.col("b")) & (F.col("aid") < F.col("vec_id"))
     )
     bin_col = F.floor(
-        similarity.cosine(F.col("av"), F.col("embedding")) * 10
+        F.expr(similarity.sql_cosine("av", "embedding")) * 10
     ).cast("long")
     return (
         pairs.select(bin_col.alias("bin"))

@@ -601,11 +601,10 @@ def streaming_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFram
     "because each vector's verdict depends only on the vector and the "
     "stored state, never on batchmates, which is also why the final "
     "table equals the one-shot batch query and the SAME DuckDB oracle "
-    "certifies both (at the certification scale auto_depth==1, where "
-    "the hierarchy provably equals the flat k=8 clustering — the "
-    "pinned equivalence _incremental_scaled certifies through): the "
-    "streaming run is a MEASURED proof of micro-batch-boundary "
-    "invariance. State never touches the driver.",
+    "certifies both (at the certification scale auto_depth==1, and "
+    "depth 1 IS the flat k=8 clustering): the streaming run is a "
+    "MEASURED proof of micro-batch-boundary invariance. State never "
+    "touches the driver.",
     tags=("streaming", "llm"),
 )
 def streaming_semantic_dedup(
@@ -624,10 +623,10 @@ def streaming_semantic_dedup(
     # k*dim-row centroid component sums (semdedup_state_sums), so a
     # micro-batch's plan touches the corpus exactly once (the probe
     # join) and derives centroids from aggregate-sized stored rows;
-    # auto_depth==1 at the driver's certification scale, where it
-    # provably equals the flat k=8 clustering the shared oracle
-    # encodes (llm._flat_oracle_depth_guard logs the same warning
-    # there when a run outgrows that).
+    # auto_depth==1 at the driver's certification scale, and depth 1
+    # IS the flat k=8 clustering the shared oracle encodes
+    # (llm._flat_oracle_depth_guard logs the same warning there when a
+    # run outgrows that).
     # State, state sums, and the staged batch are pure functions of the
     # immutable input tables — built ONCE per (query, sf) and reused
     # (that's also the production shape: state persists between ingest
@@ -642,7 +641,7 @@ def streaming_semantic_dedup(
         similarity.kmeans_assign_hierarchical(
             base, depth=depth, branch=8
         ).withColumn(
-            "nrm", similarity.norm(F.col("embedding"), similarity.DIM)
+            "nrm", F.expr(similarity.sql_norm("embedding", similarity.DIM))
         ).write.parquet(f"{path}/state")
         similarity.semdedup_state_sums(
             spark.read.parquet(f"{path}/state")

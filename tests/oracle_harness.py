@@ -153,41 +153,50 @@ def main(sf_dir: str, names: list[str] | None = None) -> int:
         spark = build_session("oracle_harness")
     failures = 0
     con = duckdb_connection(sf_dir)
-    since_recycle = 0
-    for name, spec in sorted(registry.items()):
-        if names and name not in names:
-            continue
-        # RECYCLE the connection every 25 queries and after any
-        # failure: a single shared connection accumulates buffer-pool
-        # state across a 200-query sweep until heavyweight oracles
-        # (recursive-CTE closure, full-outer audits) hit the memory
-        # cap and everything after OOM-cascades (each failing oracle
-        # runs standalone in < 1 GB) — but one FRESH connection PER
-        # query trips vm.max_map_count instead (glibc retains freed
-        # arenas, ~200 allocator pools exhaust the 65530 mmap budget
-        # alongside the Spark JVM). Eight connections per sweep
-        # avoids both failure modes.
-        if since_recycle >= 25:
+    try:
+        since_recycle = 0
+        for name, spec in sorted(registry.items()):
+            if names and name not in names:
+                continue
+            # RECYCLE the connection every 25 queries and after any
+            # failure: a single shared connection accumulates buffer-pool
+            # state across a 200-query sweep until heavyweight oracles
+            # (recursive-CTE closure, full-outer audits) hit the memory
+            # cap and everything after OOM-cascades (each failing oracle
+            # runs standalone in < 1 GB) — but one FRESH connection PER
+            # query trips vm.max_map_count instead (glibc retains freed
+            # arenas, ~200 allocator pools exhaust the 65530 mmap budget
+            # alongside the Spark JVM). Eight connections per sweep
+            # avoids both failure modes.
+            if since_recycle >= 25:
+                try:
+                    con.close()
+                except Exception:
+                    pass
+                con = duckdb_connection(sf_dir)
+                since_recycle = 0
+            since_recycle += 1
             try:
-                con.close()
-            except Exception:
-                pass
-            con = duckdb_connection(sf_dir)
-            since_recycle = 0
-        since_recycle += 1
+                res = run_query_check(spark, con, sf_dir, spec)
+            except Exception as exc:  # noqa: BLE001
+                res = CompareResult(name, False, f"EXCEPTION: {exc}")
+                try:
+                    con.close()
+                except Exception:
+                    pass
+                con = duckdb_connection(sf_dir)
+                since_recycle = 0
+            status = "OK  " if res.ok else "FAIL"
+            print(f"{status} {name}  {res.detail[:400]}", flush=True)
+            failures += 0 if res.ok else 1
+    finally:
+        # stop the session so no state-store maintenance thread outlives
+        # the local dirs it writes to
         try:
-            res = run_query_check(spark, con, sf_dir, spec)
-        except Exception as exc:  # noqa: BLE001
-            res = CompareResult(name, False, f"EXCEPTION: {exc}")
-            try:
-                con.close()
-            except Exception:
-                pass
-            con = duckdb_connection(sf_dir)
-            since_recycle = 0
-        status = "OK  " if res.ok else "FAIL"
-        print(f"{status} {name}  {res.detail[:400]}", flush=True)
-        failures += 0 if res.ok else 1
+            con.close()
+        except Exception:
+            pass
+        spark.stop()
     print(f"\n{'ALL OK' if failures == 0 else f'{failures} FAILURES'}")
     return failures
 

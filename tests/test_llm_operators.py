@@ -221,13 +221,14 @@ class TestSimilarity:
         assert {(r.id_a, r.id_b) for r in pairs} == {(1, 3)}
 
     def test_lsh_bucket_consistency(self, spark):
-        """Driver-side bucket formula must match the Column formula."""
+        """Driver-side bucket formula must match the SQL formula."""
         df = self._emb(spark)
         q = [1.0] + [0.0] * 63
         spark_buckets = {
             r.vec_id: r.b
             for r in df.select(
-                "vec_id", similarity.lsh_bucket(F.col("embedding")).alias("b")
+                "vec_id",
+                F.expr(similarity.sql_lsh_bucket("embedding")).alias("b"),
             ).collect()
         }
         assert spark_buckets[1] == similarity.lsh_bucket_of(q)

@@ -126,7 +126,9 @@ class TestADC:
             "vec_id", "embedding"
         )
         probe = similarity.ivf_probe_centroid(q)
-        cell = e.filter(similarity.ivf_assign(F.col("embedding")) == probe)
+        cell = e.filter(
+            F.expr(similarity.sql_ivf_assign("embedding")) == probe
+        )
         expect = [
             tuple(r) for r in similarity.pq_adc_topk(cell, q, k=10).collect()
         ]
@@ -520,7 +522,7 @@ class TestPartitionedServingLayout:
         tbl = similarity.pq_encode(e).join(
             e.select(
                 "vec_id",
-                similarity.ivf_assign(F.col("embedding")).alias(
+                F.expr(similarity.sql_ivf_assign("embedding")).alias(
                     "ivf_cell"
                 ),
             ),
@@ -584,7 +586,7 @@ class TestPartitionedServingLayout:
         tbl = similarity.pq_encode(e).join(
             e.select(
                 "vec_id",
-                similarity.ivf_assign(F.col("embedding")).alias(
+                F.expr(similarity.sql_ivf_assign("embedding")).alias(
                     "ivf_cell"
                 ),
             ),

@@ -56,13 +56,6 @@ class TestWorkdir:
 
     def test_half_built_dir_is_rebuilt(self, tmp_path, monkeypatch):
         monkeypatch.setattr(workdir, "_MAT_ROOT", str(tmp_path / "mat"))
-        # simulate a crashed build: final dir exists WITH partial
-        # content but no _COMPLETE marker (publication is atomic rename
-        # with the marker inside, so a published dir always has it)
-        stale = os.path.join(str(tmp_path / "mat"), "codes_sf0.01")
-        os.makedirs(stale)
-        with open(os.path.join(stale, "partial.parquet"), "w") as f:
-            f.write("half-written")
         calls: list[str] = []
 
         def build(path: str) -> None:
@@ -72,7 +65,15 @@ class TestWorkdir:
                 f.write("payload")
 
         p = workdir.materialized("codes", "/root/testdata/sf0.01", build)
-        assert len(calls) == 1  # husk cleared, rebuilt
+        # simulate a crashed build at the published path: partial
+        # content but no _COMPLETE marker (publication is atomic rename
+        # with the marker inside, so a published dir always has it)
+        os.remove(os.path.join(p, workdir._DONE))
+        with open(os.path.join(p, "partial.parquet"), "w") as f:
+            f.write("half-written")
+        p2 = workdir.materialized("codes", "/root/testdata/sf0.01", build)
+        assert p2 == p
+        assert len(calls) == 2  # husk cleared, rebuilt
         assert os.path.exists(os.path.join(p, workdir._DONE))
         assert not os.path.exists(os.path.join(p, "partial.parquet"))
 

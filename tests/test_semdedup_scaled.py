@@ -1,14 +1,13 @@
-"""Scaled-k SemDeDup (similarity.semdedup_scaled / hierarchical
-k-means) — the round-8 conversion of the flat operator's documented
-"k grows with the corpus" contract into an implemented, pinned path.
+"""Scaled-k SemDeDup (similarity.semdedup over hierarchical k-means):
+the "k grows with the corpus" contract as an implemented, pinned path.
 
-The load-bearing pin is depth-1 equivalence: level 0 of the hierarchy
-is defined to be EXACTLY the flat operator's Forgy-by-lowest-id Lloyd
-iteration, so semdedup_scaled(depth=1, branch=k) must reproduce
-semdedup(k) value-for-value. That equivalence is what lets the catalog
-query certify hash-exact against the flat k=8 oracle at the driver's
-gate scale while running genuinely hierarchical at sf1/sf10
-(SCALE_CHECK_SF10_R8.json measures the sub-quadratic growth)."""
+There is one k-means (kmeans_assign_hierarchical) and one pruning
+operator (semdedup); the flat catalog queries call them at depth=1.
+That is what lets the scaled queries certify hash-exact against the
+flat k=8 DuckDB oracle at the driver's gate scale while running
+genuinely hierarchical at sf1/sf10 (SCALE_CHECK_SF10_R8.json measures
+the sub-quadratic growth). The probe-batch parity pins hold the Spark
+batch generators to their DuckDB CTEs cell for cell."""
 
 from __future__ import annotations
 
@@ -33,28 +32,12 @@ def corpus(spark):
     return e.unionByName(dup)
 
 
-class TestDepthOneEquivalence:
-    def test_matches_flat_semdedup_exactly(self, spark, corpus):
-        flat = similarity.semdedup(corpus, k=8, min_cosine=0.96).select(
-            "vec_id",
-            F.col("cluster").cast("long").alias("cluster"),
-            "best_sim",
-            "is_dup",
-        )
-        hier = similarity.semdedup_scaled(
-            corpus, branch=8, depth=1, min_cosine=0.96
-        )
-        fr = sorted(tuple(r) for r in flat.collect())
-        hr = sorted(tuple(r) for r in hier.collect())
-        assert fr == hr
-
-
 class TestHierarchicalDepth:
     def test_depth2_colocates_and_flags_exact_dups(self, spark, corpus):
         """Identical vectors must land in the same leaf cluster at ANY
         depth (re-assignment is value-based — the hash init only shapes
         centroids), so every injected +100000 copy is flagged."""
-        res = similarity.semdedup_scaled(
+        res = similarity.semdedup(
             corpus, branch=8, depth=2, min_cosine=0.96
         )
         rows = {r["vec_id"]: r for r in res.collect()}
@@ -65,8 +48,8 @@ class TestHierarchicalDepth:
             assert rows[v]["is_dup"]
 
     def test_depth2_splits_into_more_clusters(self, spark, corpus):
-        c1 = similarity.semdedup_scaled(corpus, branch=8, depth=1)
-        c2 = similarity.semdedup_scaled(corpus, branch=8, depth=2)
+        c1 = similarity.semdedup(corpus, branch=8, depth=1)
+        c2 = similarity.semdedup(corpus, branch=8, depth=2)
         n1 = c1.select("cluster").distinct().count()
         n2 = c2.select("cluster").distinct().count()
         assert n1 <= 8
@@ -75,7 +58,7 @@ class TestHierarchicalDepth:
     def test_row_count_preserved(self, spark, corpus):
         n = corpus.count()
         assert (
-            similarity.semdedup_scaled(corpus, branch=8, depth=2).count()
+            similarity.semdedup(corpus, branch=8, depth=2).count()
             == n
         )
 
@@ -138,7 +121,7 @@ class TestIncrementalProbe:
         base = _emb_corpus(spark, SF_DIR)
         batch = base.filter(F.col("vec_id") % 50 == 0)
         n = batch.count()
-        out = semdedup_incremental(base, batch, k=8)
+        out = semdedup_incremental(base, batch, branch=8)
         assert out.count() == n
         assert out.select("vec_id").distinct().count() == n
         matched = out.filter(~F.col("is_unique"))
@@ -157,29 +140,31 @@ class TestStoredStateEquivalence:
         from sales_data_pipeline_spark.queries.llm import _emb_corpus
         from sales_data_pipeline_spark.operators.similarity import (
             DIM,
-            kmeans_assign_one_iter,
-            norm,
+            kmeans_assign_hierarchical,
             semdedup_incremental,
             semdedup_state_sums,
+            sql_norm,
         )
 
         base = _emb_corpus(spark, SF_DIR)
         batch = base.filter(F.col("vec_id") % 37 == 0)
-        assign = kmeans_assign_one_iter(base, "vec_id", "embedding", 8)
+        assign = kmeans_assign_hierarchical(
+            base, "vec_id", "embedding", depth=1, branch=8
+        )
         stored = assign.withColumn(
-            "nrm", norm(F.col("embedding"), DIM)
+            "nrm", F.expr(sql_norm("embedding", DIM))
         )
         sums = semdedup_state_sums(stored)
         inline = sorted(
             tuple(r)
             for r in semdedup_incremental(
-                base, batch, k=8, assign=assign
+                base, batch, branch=8, assign=assign
             ).collect()
         )
         stored_path = sorted(
             tuple(r)
             for r in semdedup_incremental(
-                base, batch, k=8, assign=stored, leaf_sums=sums
+                base, batch, branch=8, assign=stored, leaf_sums=sums
             ).collect()
         )
         assert inline == stored_path
@@ -225,10 +210,64 @@ class TestEvalCorpusContract:
         ).alias("b")
         j = a.join(b, "vec_id")
         cs = F.floor(
-            similarity.cosine(F.col("embedding"), F.col("pemb")) * 10000
+            F.expr(similarity.sql_cosine("embedding", "pemb")) * 10000
             + F.lit(0.5)
         ) / 10000.0
         low = j.filter(cs < 0.96).count()
         n = j.count()
         assert n > 0
         assert low == 0
+
+
+# the driver's certification scale, next to the module's default data
+GATE_SF_DIR = os.path.join(os.path.dirname(os.path.normpath(SF_DIR)), "sf0.01")
+
+
+class TestProbeBatchParity:
+    """The Spark batch generators against the DuckDB CTEs their oracles
+    read, cell for cell. Every perturbed or fresh row's lambda reads
+    vec_id, so a generator whose lambda binds vec_id to the re-aliased
+    id (+300000, +400000, +500000) instead of the input column differs
+    on every such row."""
+
+    @staticmethod
+    def _oracle_rows(cte_sql: str, name: str) -> list:
+        from tests.oracle_harness import duckdb_connection
+
+        con = duckdb_connection(GATE_SF_DIR)
+        try:
+            rows = con.execute(
+                f"WITH {cte_sql} SELECT vec_id, embedding FROM {name}"
+            ).fetchall()
+        finally:
+            con.close()
+        return sorted((int(v), list(e)) for v, e in rows)
+
+    @staticmethod
+    def _spark_rows(df) -> list:
+        return sorted(
+            (int(r["vec_id"]), list(r["embedding"]))
+            for r in df.select("vec_id", "embedding").collect()
+        )
+
+    def test_probe_batch_matches_batchq_cte(self, spark):
+        from sales_data_pipeline_spark.queries.llm import (
+            _SEMDEDUP_PROBE_BATCH_SQL,
+            _semdedup_probe_batch,
+        )
+
+        got = self._spark_rows(_semdedup_probe_batch(spark, GATE_SF_DIR))
+        want = self._oracle_rows(_SEMDEDUP_PROBE_BATCH_SQL, "batchq")
+        assert any(v >= 500000 for v, _e in want)
+        assert got == want
+
+    def test_eval_corpus_matches_corpus_cte(self, spark):
+        from sales_data_pipeline_spark.queries.llm import (
+            _EMB_EVAL_CORPUS_SQL,
+            _emb_eval_corpus,
+        )
+
+        got = self._spark_rows(_emb_eval_corpus(spark, GATE_SF_DIR))
+        want = self._oracle_rows(_EMB_EVAL_CORPUS_SQL, "corpus")
+        assert any(v >= 300000 for v, _e in want)
+        assert got == want
