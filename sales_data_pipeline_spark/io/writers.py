@@ -142,7 +142,7 @@ def write_zordered(
         bits,
     )
     (
-        df.join(F.broadcast(bounds))
+        df.join(bounds)
         .withColumn("_zkey", z)
         .repartitionByRange(files, "_zkey")
         .sortWithinPartitions("_zkey")

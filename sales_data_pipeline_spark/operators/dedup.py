@@ -29,54 +29,6 @@ from sales_data_pipeline_spark import scale
 from sales_data_pipeline_spark.caching import scoped_persist
 from sales_data_pipeline_spark.functions.text import content_hash, words
 
-# Size gate for broadcasting corpus-scaling gram/shingle-set maps
-# (gram_map_build below). Calibrated by A/B measurement (min-of-2
-# passes, idle machine, both arms forced) on the round-6 scale ladder:
-# at 0.6 MB of documents parquet (sf0.1) broadcast wins the 5-query
-# dedup family by ~2.8 s net; at 6 MB (sf1) merge wins decisively
-# (dedup_minhash_lsh 10.4 s vs 21.0 s broadcast — building and copying
-# the ~300 MB HashedRelation, ~50x parquet->relation expansion,
-# dominates); at ~60 MB (sf10) broadcast doesn't complete at all
-# (multi-GB relation OOM). The crossover is between those measured
-# points; 2 MB (~100 MB relation) takes broadcast only where it's both
-# safe AND measured faster.
-GRAM_MAP_BROADCAST_CAP = 2 << 20
-
-
-def _source_bytes(df: DataFrame) -> int | None:
-    """Footprint probe shared with the engine-wide gate (scale.py)."""
-    return scale.source_bytes(df)
-
-
-def source_is_small(df: DataFrame, cap: int | None = None) -> bool:
-    """True only when df's file-source footprint is PROVABLY at or
-    under the cap (default GRAM_MAP_BROADCAST_CAP, read at call time so
-    tests can monkeypatch it) — unknowable sizes count as huge."""
-    limit = GRAM_MAP_BROADCAST_CAP if cap is None else cap
-    return scale.source_is_small(df, limit)
-
-
-def gram_map_build(map_df: DataFrame, corpus: DataFrame) -> DataFrame:
-    """Pick the build strategy for a gram/shingle-set map that scales
-    WITH the corpus (one row per candidate doc, payload = the doc's
-    whole shingle set).
-
-    Catalyst cannot be trusted to choose here: the map is a cached
-    collect_set aggregate whose stats undershoot wildly, so the
-    unhinted plan broadcasts a multi-GB HashedRelation behind a
-    <100 MB estimate and OOMs (seen at the sf10 spot-check); a
-    shuffle_hash build fails one scale later (per-task build exceeds
-    execution memory); a blanket merge hint is memory-safe but blocks
-    AQE's runtime broadcast conversion too, taxing every small corpus.
-    So the engine gates on evidence Catalyst ignores: the actual
-    on-disk footprint of the corpus scan. Provably small -> broadcast
-    (the fast plan, restoring ~35-70% on the sf0.1 dedup family);
-    large or UNKNOWN -> sort-merge, which sorts on the bigint doc id
-    and spills, bounding memory at any corpus size."""
-    if source_is_small(corpus):
-        return F.broadcast(map_df)
-    return map_df.hint("merge")
-
 
 def word_set(text: Column) -> Column:
     """Distinct whitespace tokens."""
@@ -300,26 +252,29 @@ def minhash_lsh_pairs(
             f"{id_col} AS id", f"{gram_words_sql(text_col)} AS w"
         ).selectExpr("id", f"array_distinct({gram_array_sql(3)}) AS ws")
     )
-    # size-gated build (gram_map_build): broadcast only when the corpus
-    # scan's on-disk footprint proves the shingle-set map small; else
-    # sort-merge, which spills — see gram_map_build for why Catalyst's
-    # own estimate (a cached collect_set aggregate) cannot be trusted.
+    # size-gated build: broadcast only when the corpus scan's on-disk
+    # footprint proves the shingle-set map small; else sort-merge,
+    # which spills. Catalyst's own estimate cannot be trusted here: the
+    # map is a cached aggregate whose stats undershoot wildly, and the
+    # unhinted plan broadcast a multi-GB relation and OOMed at the sf10
+    # spot-check.
+    cap = scale.GRAM_MAP_BROADCAST_CAP
     pairs = (
         cand.join(
-            gram_map_build(
+            scale.gated_broadcast(
                 shset.select(
                     F.col("id").alias("id_a"), F.col("ws").alias("ws_a")
                 ),
-                df,
+                cap, df, cached=True,
             ),
             "id_a",
         )
         .join(
-            gram_map_build(
+            scale.gated_broadcast(
                 shset.select(
                     F.col("id").alias("id_b"), F.col("ws").alias("ws_b")
                 ),
-                df,
+                cap, df, cached=True,
             ),
             "id_b",
         )
@@ -514,20 +469,21 @@ def _blocked_gram_pairs(
     # size-gated build for the same reason as minhash_lsh_pairs: the
     # gram-set map scales with the corpus and its cached-aggregate
     # stats undershoot — broadcast only on on-disk proof, else SMJ.
+    cap = scale.GRAM_MAP_BROADCAST_CAP
     return cand.join(
-        gram_map_build(
+        scale.gated_broadcast(
             grams.select(
                 F.col("id").alias("id_a"), F.col("grams").alias("ga")
             ),
-            df,
+            cap, df, cached=True,
         ),
         "id_a",
     ).join(
-        gram_map_build(
+        scale.gated_broadcast(
             grams.select(
                 F.col("id").alias("id_b"), F.col("grams").alias("gb")
             ),
-            df,
+            cap, df, cached=True,
         ),
         "id_b",
     )
@@ -954,7 +910,6 @@ def contamination_ratios(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
-    broadcast_bench: bool = True,
 ) -> DataFrame:
     """Benchmark-contamination check: for each training document, the
     fraction of its distinct word n-grams that also occur anywhere in
@@ -962,18 +917,19 @@ def contamination_ratios(
     pipeline runs before every model build (n-gram collision against
     held-out eval sets).
 
-    Plan shape at 100 TB: when the benchmark side is tiny relative to
-    the corpus (real eval suites are MBs) its distinct-gram set
-    broadcasts — the default; the training side is one explode ->
-    (id, gram) dedup -> broadcast left join -> per-doc count aggregate.
-    Both shuffles carry at most one row per (doc, distinct gram) and
-    partial-aggregate map-side. Counts are exact integers, so the
-    ratio is a deterministic double division in any engine.
+    Plan shape at 100 TB: when the benchmark side's files are small
+    (real eval suites are MBs) its distinct-gram set broadcasts; the
+    training side is one explode -> (id, gram) dedup -> broadcast left
+    join -> per-doc count aggregate. Both shuffles carry at most one
+    row per (doc, distinct gram) and partial-aggregate map-side. Counts
+    are exact integers, so the ratio is a deterministic double division
+    in any engine.
 
-    ``broadcast_bench=False`` is the scale path for a bench side that
-    GROWS with the corpus (e.g. decontaminating against another
-    corpus slice): a sort-merge join on the gram key, which spills —
-    the broadcast variant OOMs once the distinct-gram set outgrows
+    The gram set is size-gated on the bench side's on-disk footprint
+    (``scale.GRAM_MAP_BROADCAST_CAP``): a bench side that GROWS with
+    the corpus (e.g. decontaminating against another corpus slice), or
+    one of unknown size, takes a sort-merge join on the gram key, which
+    spills — the broadcast OOMs once the distinct-gram set outgrows
     driver memory (seen at the sf10 spot-check, where the fixture's
     bench side is a fixed fraction of the corpus).
     """
@@ -986,7 +942,9 @@ def contamination_ratios(
     tgrams = shingle_rows(train, id_col, text_col, n).dropDuplicates(
         ["id", "sh"]
     )
-    bside = F.broadcast(bgrams) if broadcast_bench else bgrams.hint("merge")
+    bside = scale.gated_broadcast(
+        bgrams, scale.GRAM_MAP_BROADCAST_CAP, bench, cached=True
+    )
     marked = tgrams.join(bside, "sh", "left")
     return marked.groupBy("id").agg(
         F.count(F.lit(1)).alias("n_grams"),

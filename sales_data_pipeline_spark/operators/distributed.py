@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from sales_data_pipeline_spark.scale import bounded_broadcast
+
 _PID = "__ds_pid"
 _LRN = "__ds_lrn"
 
@@ -97,7 +99,9 @@ def ordered_scan(
         ],
     )
 
-    joined = local.join(F.broadcast(offs), _PID)
+    joined = local.join(
+        bounded_broadcast(offs, "one row per shuffle partition"), _PID
+    )
     out_cols = {rank_col: F.col(_LRN) + F.col("__ds_rn_off")}
     for _, out in sum_cols:
         out_cols[out] = F.col(f"__ds_run_{out}") + F.col(f"__ds_off_{out}")

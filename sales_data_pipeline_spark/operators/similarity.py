@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sales_data_pipeline_spark.scale import gated_broadcast
+from sales_data_pipeline_spark.scale import bounded_broadcast, gated_broadcast
 
 DIM = 64  # driver testdata embedding dimensionality
 
@@ -731,7 +731,7 @@ def pq_train_codebooks(
             f"CAST(array_position({d}, array_min({d})) - 1 AS INT)"
             f" AS code_{j}"
         )
-    assigned = df.crossJoin(F.broadcast(seeds_row)).selectExpr(
+    assigned = df.crossJoin(seeds_row).selectExpr(
         vec_col, *code_exprs
     )
     comp = assigned.select(
@@ -859,7 +859,7 @@ def pq_rerank_topk(
     short = pq_adc_topk(
         df, query, k=shortlist, id_col=id_col, vec_col=vec_col
     ).select(id_col)
-    exact = df.join(F.broadcast(short), id_col).select(
+    exact = df.join(short, id_col).select(
         id_col, F.col(vec_col)
     )
     return brute_force_topk(
@@ -1105,14 +1105,14 @@ def kmeans_assign_hierarchical(
     )
     a0 = scoped_persist(
         df.select(id_col, vec_col)
-        .crossJoin(F.broadcast(seeds_row))
+        .crossJoin(seeds_row)
         .selectExpr(
             id_col,
             vec_col,
             f"{_sql_argmin_cell('cells', vec_col, dim)} AS cluster",
         )
     )
-    cur = a0.crossJoin(F.broadcast(_pack_root(_vecs(a0)))).selectExpr(
+    cur = a0.crossJoin(_pack_root(_vecs(a0))).selectExpr(
         id_col, vec_col, f"{_sql_argmin_cell('cells', vec_col, dim)} AS cell"
     )
 
@@ -1394,7 +1394,7 @@ def semdedup_incremental(
     # cross join. (An equi-join on a LITERAL parent column
     # constant-folds to TRUE and plans a BNLJ whose build side is the
     # scaling BATCH union — the exact shape the plan gate rejects.)
-    cur = cur.crossJoin(F.broadcast(packed_levels[1])).selectExpr(
+    cur = cur.crossJoin(packed_levels[1]).selectExpr(
         "qid", "qvec", "qnrm", _t2_sql("cells") + " AS t2"
     )
     for lvl in range(2, depth + 1):
@@ -1409,8 +1409,12 @@ def semdedup_incremental(
                 "t2[0].cid AS p1",
                 "element_at(t2, 2).cid AS p2",
             )
-            .join(F.broadcast(cells1), "p1")
-            .join(F.broadcast(cells2), "p2", "left")
+            .join(bounded_broadcast(cells1, "branch ** (lvl-1) parents"), "p1")
+            .join(
+                bounded_broadcast(cells2, "branch ** (lvl-1) parents"),
+                "p2",
+                "left",
+            )
             .selectExpr(
                 "qid",
                 "qvec",

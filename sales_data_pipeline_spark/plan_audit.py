@@ -5,11 +5,13 @@ BROADCAST_AUDIT.json, including the physical census at the sf10 paths)
 and ``tests/test_plan_shapes.py`` (which enforces the cheap invariant on
 every pytest run: with every size gate forced shut, no query's
 optimized plan may carry a ``strategy=broadcast`` hint whose hinted
-subtree is an unbounded scaling relation — i.e., no bare ``F.broadcast``
-of something that grows with the data).
+subtree is an unbounded scaling relation, unless a
+``scale.bounded_broadcast`` call declared the domain fact that bounds
+it). Both walks enter cached subplans, so a hint under a
+``scoped_persist`` is checked like any other.
 
-See ``scale.gated_broadcast`` for the rule being enforced and SCALE.md
-round-6 for the measurements behind it.
+See ``scale`` for the policy being enforced and SCALE.md round-6 for the
+measurements behind it.
 """
 
 from __future__ import annotations
@@ -41,62 +43,36 @@ TABLE_RE = re.compile(
     r"/(" + "|".join(SCALING_TABLES + FIXED_TABLES) + r")\.parquet"
 )
 
-# Reviewed hint-audit findings: hinted broadcasts whose boundedness
-# comes from a domain fact the plan cannot express — a grouping key
-# with a FIXED domain (enum column, embedding dimension index) or a
-# cardinality set by the CLUSTER (per-shuffle-partition offsets from
-# operators/distributed.ordered_scan), not by the data. Each entry is
-# (query, table): reason; anything NOT listed fails the audit, so a new
-# ungated F.broadcast in one of these queries still trips.
-REVIEWED_HINTS: dict[tuple[str, str], str] = {
-    ("char_coverage_curve", "documents"):
-        "ordered_scan per-shuffle-partition offsets: rows = partition "
-        "count (cluster-bounded), not corpus size",
-    ("ntile_customer_quartiles", "customer"):
-        "ordered_scan per-shuffle-partition offsets (cluster-bounded)",
-    ("revenue_pareto_curve", "orders"):
-        "ordered_scan per-shuffle-partition offsets (cluster-bounded)",
-    ("join_string_normalized", "customer"):
-        "per-mktsegment aggregate: 5-value TPC-H enum domain",
-    ("median_imputation_events", "events"):
-        "per-event_type percentile: fixed event-type enum",
-    ("winsorize_event_values", "events"):
-        "per-event_type percentile bounds: fixed event-type enum",
-    ("zscore_outlier_counts", "events"):
-        "per-event_type moments: fixed event-type enum",
-    ("source_top_tokens", "documents"):
-        "per-source totals: fixed source enum",
-    ("source_kl_divergence", "documents"):
-        "per-source distributions: fixed source enum",
-    ("mixture_resample_plan", "documents"):
-        "per-source budgets: fixed source enum",
-    ("embedding_int8_quant_error", "embeddings"):
-        "per-dimension min/max: rows = embedding width (fixed 32)",
-    ("dsir_importance_weights", "documents"):
-        "per-bucket log-ratio table: rows = hash-bucket modulus "
-        "(fixed 256), independent of corpus size",
-    ("embedding_outlier_scores", "embeddings"):
-        "per-(label, dim) moments: rows = label enum x embedding "
-        "width (fixed 64), independent of corpus size",
-}
-
-
 # ---------- physical walk (executed plans) ----------
 
 def phys_kids(node):
+    """Children of a physical node, entering AQE's initial plan, query
+    stages and the plan behind a cached relation (an InMemoryTableScan
+    is a leaf to Spark, but its cached plan runs like any other)."""
     nm = node.nodeName()
     if nm.startswith("AdaptiveSparkPlan"):
         return [node.initialPlan()]
     if nm.startswith(STAGES):
         return [node.plan()]
+    if nm.startswith("InMemoryTableScan"):
+        return [node.relation().cachedPlan()]
     ch = node.children()
     return [ch.apply(i) for i in range(ch.size())]
 
 
-def phys_walk(node):
+def phys_walk(node, _entered=None):
+    """Pre-order walk; a cached plan scanned from several places runs
+    once, so it is walked once."""
+    entered = set() if _entered is None else _entered
     yield node
+    if node.nodeName().startswith("InMemoryTableScan"):
+        cache = node.relation().cacheBuilder()
+        key = (cache.hashCode(), cache.cachedName())
+        if key in entered:
+            return
+        entered.add(key)
     for k in phys_kids(node):
-        yield from phys_walk(k)
+        yield from phys_walk(k, entered)
 
 
 def classify_build(
@@ -131,6 +107,10 @@ def classify_build(
 # ---------- logical walk (optimized plans, hint audit) ----------
 
 def _lkids(node):
+    """Children of a logical node; a cached relation's child is the
+    logical plan it caches, which keeps its join hints."""
+    if node.nodeName().startswith("InMemoryRelation"):
+        return [node.cacheBuilder().logicalPlan()]
     ch = node.children()
     return [ch.apply(i) for i in range(ch.size())]
 
@@ -177,52 +157,69 @@ def _hinted_unbounded(node, bounded: bool, out: set) -> None:
 
 
 def hint_findings(root) -> list[dict]:
-    """Broadcast-hinted joins in an optimized LOGICAL plan whose hinted
-    side reaches an unbounded scaling leaf."""
+    """Broadcast hints in a LOGICAL plan (cached subplans included)
+    whose hinted side reaches an unbounded scaling leaf. An optimized
+    plan carries hints on its joins; the analyzed plan a cached
+    relation keeps carries them as ResolvedHint nodes."""
     found = []
     stack = [root]
     while stack:
         n = stack.pop()
-        if n.nodeName().startswith("Join"):
-            for side, attr in (("left", "leftHint"), ("right", "rightHint")):
-                try:
-                    hint = getattr(n.hint(), attr)().toString()
-                except Exception:
-                    hint = ""
-                if "BROADCAST" not in hint.upper():
-                    continue
-                child = n.children().apply(0 if side == "left" else 1)
-                bad: set = set()
-                _hinted_unbounded(child, False, bad)
-                if bad:
-                    found.append({"side": side, "tables": sorted(bad)})
+        nm = n.nodeName()
+        if nm.startswith("Join"):
+            h = n.hint()
+            hints = [("left", 0, h.leftHint()), ("right", 1, h.rightHint())]
+        elif nm.startswith("ResolvedHint"):
+            hints = [("cached", 0, n.hints())]
+        else:
+            hints = []
+        for side, i, hint in hints:
+            if "BROADCAST" not in hint.toString().upper():
+                continue
+            bad: set = set()
+            _hinted_unbounded(n.children().apply(i), False, bad)
+            if bad:
+                found.append({"side": side, "tables": sorted(bad)})
         stack.extend(_lkids(n))
     return found
 
 
 def forced_hint_audit(spark, registry, sf_dir):
     """Run the gates-shut hint audit over a query registry; returns
-    (forced, reviewed) finding lists. Caller must pass a registry of
-    non-streaming specs."""
+    (forced, reviewed) finding lists. A finding is reviewed when a
+    ``scale.bounded_broadcast`` call made while building that query
+    hints a frame over the finding's tables; it carries that call's
+    reason. Caller must pass a registry of non-streaming specs."""
     from sales_data_pipeline_spark import scale
-    from sales_data_pipeline_spark.operators import dedup
     from sales_data_pipeline_spark.queries.base import release_persisted
 
-    saved = (scale.DIM_BROADCAST_CAP, dedup.GRAM_MAP_BROADCAST_CAP)
-    scale.DIM_BROADCAST_CAP = 0
-    dedup.GRAM_MAP_BROADCAST_CAP = 0
+    saved = (scale.DIM_BROADCAST_CAP, scale.GRAM_MAP_BROADCAST_CAP)
+    scale.DIM_BROADCAST_CAP = scale.GRAM_MAP_BROADCAST_CAP = 0
     forced, reviewed = [], []
     try:
         for name, spec in sorted(registry.items()):
-            root = spec.fn(spark, sf_dir)._jdf.queryExecution().optimizedPlan()
-            for f in hint_findings(root):
-                reasons = [REVIEWED_HINTS.get((name, t)) for t in f["tables"]]
-                if all(reasons):
-                    reviewed.append({"query": name, **f, "reasons": reasons})
+            scale.declared = []
+            try:
+                qe = spec.fn(spark, sf_dir)._jdf.queryExecution()
+                declared = [
+                    (reason, _leaf_tables(
+                        df._jdf.queryExecution().optimizedPlan()
+                    ))
+                    for reason, df in scale.declared
+                ]
+            finally:
+                scale.declared = None
+            for f in hint_findings(qe.optimizedPlan()):
+                reasons = [
+                    reason for reason, tables in declared
+                    if tables >= set(f["tables"])
+                ]
+                if reasons:
+                    reviewed.append({"query": name, **f, "reason": reasons[0]})
                 else:
                     forced.append({"query": name, **f})
             release_persisted()
             spark.catalog.clearCache()
     finally:
-        scale.DIM_BROADCAST_CAP, dedup.GRAM_MAP_BROADCAST_CAP = saved
+        scale.DIM_BROADCAST_CAP, scale.GRAM_MAP_BROADCAST_CAP = saved
     return forced, reviewed

@@ -206,8 +206,6 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineMetrics:
     # jobs, so they run overlapped like bronze (guide §2.6). The
     # incremental watermark max additionally rides the sales write's
     # Observation instead of a separate post-write scan.
-    customer_hist = customer_hist.persist()
-
     def _write_silver(name: str, df: DataFrame, path: str, part):
         obs = Observation(f"silver_{name}_rows")
         metrics = [F.count(F.lit(1)).alias("n")]
@@ -218,70 +216,80 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineMetrics:
         )
         return obs.get
 
-    with ThreadPoolExecutor(max_workers=_STAGE_POOL_JOBS) as pool:
-        silver_futs = {
-            name: pool.submit(_write_silver, name, df, path, part)
-            for name, df, path, part in [
-                (
-                    "sales",
-                    s_sales,
-                    f"{out}/silver/sales",
-                    ["sales_year", "sales_month"],
-                ),
-                ("product", s_product, f"{out}/silver/product", None),
-                ("store", s_store, f"{out}/silver/store", None),
-                # SCD2 history is read at the top of the run and
-                # rewritten whole; write to a temp-style swap is
-                # unnecessary because Spark stages output before commit.
-                ("customer_scd", customer_hist, scd_path, None),
-            ]
-        }
-        silver_obs = {n: f.result() for n, f in silver_futs.items()}
-    for name in ("sales", "product", "store", "customer_scd"):
-        m.silver_counts[name] = silver_obs[name]["n"]
+    customer_hist = customer_hist.persist()
+    # released on every path: a failed run's cache entry would serve
+    # a same-session rerun from source files that run overwrote
+    enriched = None
+    try:
+        with ThreadPoolExecutor(max_workers=_STAGE_POOL_JOBS) as pool:
+            silver_futs = {
+                name: pool.submit(_write_silver, name, df, path, part)
+                for name, df, path, part in [
+                    (
+                        "sales",
+                        s_sales,
+                        f"{out}/silver/sales",
+                        ["sales_year", "sales_month"],
+                    ),
+                    ("product", s_product, f"{out}/silver/product", None),
+                    ("store", s_store, f"{out}/silver/store", None),
+                    # SCD2 history is read at the top of the run and
+                    # rewritten whole; write to a temp-style swap is
+                    # unnecessary because Spark stages output before
+                    # commit.
+                    ("customer_scd", customer_hist, scd_path, None),
+                ]
+            }
+            silver_obs = {n: f.result() for n, f in silver_futs.items()}
+        for name in ("sales", "product", "store", "customer_scd"):
+            m.silver_counts[name] = silver_obs[name]["n"]
 
-    silver_sales = spark.read.parquet(f"{out}/silver/sales")
+        silver_sales = spark.read.parquet(f"{out}/silver/sales")
 
-    if "silver_sales" in cfg.quality_suites:
-        rep = compiler.run_suite(silver_sales, cfg.quality_suites["silver_sales"])
-        m.quality["silver_sales"] = rep.passed
-        if not rep.passed:  # silver raises (reference policy)
-            raise ValueError(f"silver quality failed: {rep.failures()}")
+        if "silver_sales" in cfg.quality_suites:
+            rep = compiler.run_suite(
+                silver_sales, cfg.quality_suites["silver_sales"]
+            )
+            m.quality["silver_sales"] = rep.passed
+            if not rep.passed:  # silver raises (reference policy)
+                raise ValueError(f"silver quality failed: {rep.failures()}")
 
-    # ---- gold ---------------------------------------------------------
-    current_customers = scd2.get_current(customer_hist)
-    enriched = gold.build_sales_enriched(
-        silver_sales,
-        current_customers,
-        spark.read.parquet(f"{out}/silver/product"),
-        spark.read.parquet(f"{out}/silver/store"),
-    ).persist()
-    obs_enriched = Observation("gold_enriched_rows")
-    writers.write_parquet(
-        enriched.observe(obs_enriched, F.count(F.lit(1)).alias("n")),
-        f"{out}/gold/sales_enriched",
-        partition_cols=["sales_year", "sales_month"],
-    )
-    metrics_df = gold.build_customer_metrics(enriched, current_customers)
-    obs_metrics = Observation("gold_metrics_rows")
-    writers.write_parquet(
-        metrics_df.observe(obs_metrics, F.count(F.lit(1)).alias("n")),
-        f"{out}/gold/customer_metrics",
-    )
-    m.gold_counts["sales_enriched"] = obs_enriched.get["n"]
-    m.gold_counts["customer_metrics"] = obs_metrics.get["n"]
+        # ---- gold -----------------------------------------------------
+        current_customers = scd2.get_current(customer_hist)
+        enriched = gold.build_sales_enriched(
+            silver_sales,
+            current_customers,
+            spark.read.parquet(f"{out}/silver/product"),
+            spark.read.parquet(f"{out}/silver/store"),
+        ).persist()
+        obs_enriched = Observation("gold_enriched_rows")
+        writers.write_parquet(
+            enriched.observe(obs_enriched, F.count(F.lit(1)).alias("n")),
+            f"{out}/gold/sales_enriched",
+            partition_cols=["sales_year", "sales_month"],
+        )
+        metrics_df = gold.build_customer_metrics(enriched, current_customers)
+        obs_metrics = Observation("gold_metrics_rows")
+        writers.write_parquet(
+            metrics_df.observe(obs_metrics, F.count(F.lit(1)).alias("n")),
+            f"{out}/gold/customer_metrics",
+        )
+        m.gold_counts["sales_enriched"] = obs_enriched.get["n"]
+        m.gold_counts["customer_metrics"] = obs_metrics.get["n"]
 
-    # gold join-rate gate (min_gold_join_percentage): the star join is
-    # inner, so enriched/silver is the fraction of sales that resolved
-    # all three dimensions. Counts come from the Observations above —
-    # no extra scan.
-    silver_n = m.silver_counts["sales"]
-    if silver_n:
-        join_pct = m.gold_counts["sales_enriched"] / silver_n * 100
-        if join_pct < cfg.min_gold_join_percentage:
-            m.quality["gold_join_pct"] = False
-    enriched.unpersist()
-    customer_hist.unpersist()
+        # gold join-rate gate (min_gold_join_percentage): the star join
+        # is inner, so enriched/silver is the fraction of sales that
+        # resolved all three dimensions. Counts come from the
+        # Observations above — no extra scan.
+        silver_n = m.silver_counts["sales"]
+        if silver_n:
+            join_pct = m.gold_counts["sales_enriched"] / silver_n * 100
+            if join_pct < cfg.min_gold_join_percentage:
+                m.quality["gold_join_pct"] = False
+    finally:
+        if enriched is not None:
+            enriched.unpersist()
+        customer_hist.unpersist()
 
     # ---- watermark update (I3) ---------------------------------------
     if wm is not None:

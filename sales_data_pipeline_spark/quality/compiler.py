@@ -86,15 +86,25 @@ def violation_expr(expectation: dict) -> Column | None:
     return None
 
 
+def violation_counts(expectations: list[dict]) -> list[tuple]:
+    """(rule, column, aggregate counting the rows that violate it) per
+    row-level expectation, in suite order; the count is NULL over no
+    rows. One ``df.agg`` of them all is the whole row-level pass."""
+    return [
+        (exp["expectation_type"], exp.get("kwargs", {}).get("column"),
+         F.sum(F.when(violation_expr(exp), 1).otherwise(0)))
+        for exp in expectations
+        if exp["expectation_type"] in ROW_LEVEL_TYPES
+    ]
+
+
 def run_suite(df: DataFrame, suite: dict) -> ValidationReport:
     """Evaluate a suite: one aggregate pass for all row-level rules, one
     grouped pass per uniqueness rule, schema rules on the driver."""
     report = ValidationReport(suite.get("expectation_suite_name", "suite"))
     expectations = suite.get("expectations", [])
 
-    agg_exprs: list[Column] = []
-    agg_meta: list[tuple[str, str]] = []
-    for i, exp in enumerate(expectations):
+    for exp in expectations:
         etype = exp["expectation_type"]
         kwargs = exp.get("kwargs", {})
         if etype == "expect_table_columns_to_match_set":
@@ -110,16 +120,13 @@ def run_suite(df: DataFrame, suite: dict) -> ValidationReport:
                     f"unexpected={sorted(actual - expected)}",
                 )
             )
-        elif etype in ROW_LEVEL_TYPES:
-            expr = violation_expr(exp)
-            agg_exprs.append(
-                F.sum(F.when(expr, 1).otherwise(0)).alias(f"v{i}")
-            )
-            agg_meta.append((etype, kwargs.get("column")))
 
-    if agg_exprs:
-        row = df.agg(*agg_exprs).collect()[0]
-        for (etype, col), v in zip(agg_meta, row):
+    counts = violation_counts(expectations)
+    if counts:
+        row = df.agg(
+            *[agg.alias(f"v{i}") for i, (_, _, agg) in enumerate(counts)]
+        ).collect()[0]
+        for (etype, col, _), v in zip(counts, row):
             n = int(v or 0)
             report.results.append(
                 RuleResult(rule=etype, column=col, violations=n, passed=n == 0)
@@ -149,28 +156,19 @@ def run_suite(df: DataFrame, suite: dict) -> ValidationReport:
 
 
 def violation_summary_df(df: DataFrame, suite: dict) -> DataFrame:
-    """Row-level rule violations as a DataFrame (rule, column,
-    violations) — the query-surface form of run_suite (distributed
-    end-to-end; used by the quality_suite_checks catalog query)."""
-    parts = []
-    for exp in suite.get("expectations", []):
-        if exp["expectation_type"] in ROW_LEVEL_TYPES:
-            expr = violation_expr(exp)
-            col = exp.get("kwargs", {}).get("column")
-            parts.append(
-                df.agg(
-                    F.sum(F.when(expr, 1).otherwise(0)).cast("long").alias(
-                        "violations"
-                    )
-                ).select(
-                    F.lit(exp["expectation_type"]).alias("rule"),
-                    F.lit(col).alias("column_name"),
-                    "violations",
-                )
-            )
-    if not parts:
+    """Row-level rule violations as a DataFrame (rule, column_name,
+    violations) — the query-surface form of run_suite: the same single
+    aggregate pass, one row per rule (used by the quality_suite_checks
+    catalog query)."""
+    counts = violation_counts(suite.get("expectations", []))
+    if not counts:
         raise ValueError("suite has no row-level expectations")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    rows = F.array(*[
+        F.struct(
+            F.lit(rule).alias("rule"),
+            F.lit(col).alias("column_name"),
+            agg.cast("long").alias("violations"),
+        )
+        for rule, col, agg in counts
+    ])
+    return df.agg(rows.alias("r")).select(F.inline("r"))

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from sales_data_pipeline_spark.scale import gated_broadcast
+from sales_data_pipeline_spark.scale import bounded_broadcast, gated_broadcast
 from sales_data_pipeline_spark.queries.base import (
     det_sum,
     query,
@@ -122,7 +122,7 @@ def local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = table(spark, sf_dir, "lineitem")
     asia_nations = n.join(
-        F.broadcast(r), n.n_regionkey == r.r_regionkey
+        r, n.n_regionkey == r.r_regionkey
     ).select("n_nationkey", "n_name")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
@@ -132,7 +132,7 @@ def local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             (li.l_suppkey == s.s_suppkey)
             & (c.c_nationkey == s.s_nationkey),
         )
-        .join(F.broadcast(asia_nations), s.s_nationkey == F.col("n_nationkey"))
+        .join(asia_nations, s.s_nationkey == F.col("n_nationkey"))
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
             det_sum(
@@ -183,7 +183,7 @@ def returned_items_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         per_cust.join(c, per_cust.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
         .select(
             "c_custkey",
             "c_name",
@@ -1056,7 +1056,7 @@ def dormant_customer_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        c.crossJoin(F.broadcast(thresh))
+        c.crossJoin(thresh)
         .filter(F.col("c_acctbal") > F.col("avg_bal"))
         .join(recent, c.c_custkey == recent.o_custkey, "left_anti")
         .groupBy(F.col("c_mktsegment").alias("segment"))
@@ -1114,7 +1114,7 @@ def top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = srev.agg(F.max("rev_scaled").alias("max_scaled"))
     s = table(spark, sf_dir, "supplier")
     return (
-        srev.crossJoin(F.broadcast(mx))
+        srev.crossJoin(mx)
         .filter(F.col("rev_scaled") == F.col("max_scaled"))
         .join(gated_broadcast(s), F.col("l_suppkey") == s.s_suppkey)
         .select(
@@ -1164,7 +1164,7 @@ def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     nrev = scoped_persist(
         li.join(gated_broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
             F.sum(
@@ -1178,7 +1178,7 @@ def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = nrev.agg(F.sum("rev_scaled").alias("total_scaled"))
     return (
-        nrev.crossJoin(F.broadcast(tot))
+        nrev.crossJoin(tot)
         .filter(F.col("rev_scaled") * 25 > F.col("total_scaled"))
         .select(
             "nation",
@@ -1299,8 +1299,8 @@ def nation_pair_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(gated_broadcast(s), li.l_suppkey == s.s_suppkey)
         .join(gated_broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
+        .join(n1, F.col("s_nationkey") == F.col("n1_key"))
+        .join(n2, F.col("c_nationkey") == F.col("n2_key"))
         .filter(
             (
                 (F.col("supp_nation") == pair[0])
@@ -1442,10 +1442,10 @@ def supplier_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(gated_broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(cn), c.c_nationkey == cn.cn_key)
-        .join(F.broadcast(r), cn.cn_region == r.r_regionkey)
+        .join(cn, c.c_nationkey == cn.cn_key)
+        .join(r, cn.cn_region == r.r_regionkey)
         .join(gated_broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(sn), s.s_nationkey == sn.sn_key)
+        .join(sn, s.s_nationkey == sn.sn_key)
         .groupBy(F.year("o_orderdate").alias("order_year"))
         .agg(
             (nation_scaled / F.lit(10000.0)).alias("nation_volume"),
@@ -1672,7 +1672,7 @@ def product_profit_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(gated_broadcast(p), li.l_partkey == p.p_partkey)
         .join(gated_broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
         .join(o, li.l_orderkey == o.o_orderkey)
         .groupBy(
             F.col("n_name").alias("nation"),
@@ -1736,7 +1736,7 @@ def cheapest_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
         ranked.filter(F.col("unit_price") == F.col("min_price"))
         .join(gated_broadcast(p), F.col("l_partkey") == p.p_partkey)
         .join(gated_broadcast(s), F.col("l_suppkey") == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        .join(n, s.s_nationkey == n.n_nationkey)
         .select("p_partkey", "p_name", "s_name",
                 F.col("n_name").alias("nation"), "unit_price")
     )
@@ -2101,7 +2101,7 @@ def zscore_outlier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         1,
     ).otherwise(0)
     return (
-        cents.join(F.broadcast(stats), "event_type")
+        cents.join(bounded_broadcast(stats, "event_type enum"), "event_type")
         .groupBy("event_type")
         .agg(
             F.max("n").cast("long").alias("n_events"),
@@ -2143,7 +2143,7 @@ def key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_rows").alias("total"), F.count("*").alias("n_keys")
     )
     return (
-        per_key.crossJoin(F.broadcast(tot))
+        per_key.crossJoin(tot)
         .select(
             "user_id",
             "n_rows",
@@ -2267,7 +2267,7 @@ def median_imputation_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.percentile(F.col("value"), F.lit(0.5)).alias("med_value")
     )
     return (
-        seeded.join(F.broadcast(med), "event_type")
+        seeded.join(bounded_broadcast(med, "event_type enum"), "event_type")
         .groupBy("event_type")
         .agg(
             F.count("*").alias("n_rows"),
@@ -2436,11 +2436,9 @@ def revenue_pareto_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         sum_cols=[("rev_cents", "cum_cents")],
         rank_col="rnk",
     ).crossJoin(
-        F.broadcast(
-            per_cust.agg(
-                F.count("*").alias("n_cust"),
-                F.sum("rev_cents").alias("total_cents"),
-            )
+        per_cust.agg(
+            F.count("*").alias("n_cust"),
+            F.sum("rev_cents").alias("total_cents"),
         )
     )
     # All three percentile cutoffs in ONE pass over the ranked frame

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from sales_data_pipeline_spark.scale import gated_broadcast
+from sales_data_pipeline_spark.scale import bounded_broadcast, gated_broadcast
 from sales_data_pipeline_spark.queries.base import (
     det_round,
     det_sum,
@@ -232,7 +232,7 @@ def join_string_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         c.join(
-            F.broadcast(seg_dim),
+            bounded_broadcast(seg_dim, "c_mktsegment enum (5 values)"),
             F.lower(F.trim(c["c_mktsegment"])) == seg_dim["segment_key"],
             "inner",
         )
@@ -267,8 +267,8 @@ def star_join_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(o, li["l_orderkey"] == o["o_orderkey"], "inner")
         .join(gated_broadcast(c), o["o_custkey"] == c["c_custkey"], "inner")
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"], "inner")
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"], "inner")
+        .join(n, c["c_nationkey"] == n["n_nationkey"], "inner")
+        .join(r, n["n_regionkey"] == r["r_regionkey"], "inner")
         .select(
             "l_orderkey",
             "l_linenumber",
@@ -491,8 +491,8 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = table(spark, sf_dir, "region")
     return (
         o.join(gated_broadcast(c), o["o_custkey"] == c["c_custkey"], "inner")
-        .join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"], "inner")
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"], "inner")
+        .join(n, c["c_nationkey"] == n["n_nationkey"], "inner")
+        .join(r, n["n_regionkey"] == r["r_regionkey"], "inner")
         .groupBy(F.col("n_name").alias("nation"), F.col("r_name").alias("region"))
         .agg(
             F.count("*").alias("n_orders"),
@@ -594,8 +594,12 @@ def rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = table(spark, sf_dir, "nation")
     r = table(spark, sf_dir, "region")
     return (
-        c.join(F.broadcast(n), c["c_nationkey"] == n["n_nationkey"], "inner")
-        .join(F.broadcast(r), n["n_regionkey"] == r["r_regionkey"], "inner")
+        c.join(
+            bounded_broadcast(n, "25 fixed rows; pins the build side"),
+            c["c_nationkey"] == n["n_nationkey"],
+            "inner",
+        )
+        .join(r, n["n_regionkey"] == r["r_regionkey"], "inner")
         .rollup(F.col("r_name").alias("region"), F.col("n_name").alias("nation"))
         .agg(
             det_sum(F.col("c_acctbal"), 2).alias("total_balance"),
@@ -774,7 +778,7 @@ def orders_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         (det_sum(F.col("o_totalprice"), 2) / F.count(F.lit(1))).alias("_avg")
     )
     return (
-        o.crossJoin(F.broadcast(avg_df))
+        o.crossJoin(avg_df)
         .filter(F.col("o_totalprice") > F.col("_avg"))
         .select(
             "o_orderkey",

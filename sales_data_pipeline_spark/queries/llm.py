@@ -23,7 +23,9 @@ from pyspark.sql import functions as F
 
 from sales_data_pipeline_spark.functions import text as tx
 from sales_data_pipeline_spark.operators import dedup, multimodal, similarity
+from sales_data_pipeline_spark import scale
 from sales_data_pipeline_spark.scale import (
+    bounded_broadcast,
     gated_broadcast,
     spread_small_scan,
 )
@@ -1235,7 +1237,7 @@ def incremental_token_quantiles(
         .cast("long"),
     )
     tot = merged.agg(F.sum("cnt").cast("long").alias("n_docs"))
-    qrow = cum.crossJoin(F.broadcast(tot))
+    qrow = cum.crossJoin(tot)
 
     def est(q: float, name: str):
         target = F.ceil(F.lit(q) * F.col("n_docs")).cast("long")
@@ -2242,11 +2244,11 @@ def _ivfpq_nprobe_curve(e: DataFrame) -> DataFrame:
         rows = in_cells.agg(
             F.count("*").cast("long").alias("probed_rows")
         )
-        hits = top.join(F.broadcast(full10), "vec_id").agg(
+        hits = top.join(full10, "vec_id").agg(
             F.count("*").cast("long").alias("adc_hits_at_10")
         )
         parts.append(
-            rows.crossJoin(F.broadcast(hits)).select(
+            rows.crossJoin(hits).select(
                 F.lit(np_).cast("int").alias("nprobe"),
                 "probed_rows",
                 "adc_hits_at_10",
@@ -2461,7 +2463,7 @@ def _pq_recall_curve(
             .select("vec_id")
         )
         parts.append(
-            rr.join(F.broadcast(exact10), "vec_id").agg(
+            rr.join(exact10, "vec_id").agg(
                 F.lit(s).cast("long").alias("shortlist"),
                 F.count("*").cast("long").alias("rerank_hits_at_10"),
             )
@@ -2741,14 +2743,10 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(n, "doc_id")
     )
     # THIS bench side is a fixed fraction of the corpus (doc_id % 13),
-    # so it scales with the data and the blanket-broadcast default (for
-    # real fixed-size eval suites) OOMs at scale. Gate on the measured
-    # corpus footprint instead: broadcast while provably small (the
-    # fast plan at bench SFs), sort-merge once it isn't.
-    ratios = dedup.contamination_ratios(
-        train, bench, "doc_id", "text", n=3,
-        broadcast_bench=dedup.source_is_small(d),
-    )
+    # so it scales with the data: contamination_ratios' size gate
+    # broadcasts its gram set while the documents files are provably
+    # small (the fast plan at bench SFs), sort-merge once they aren't.
+    ratios = dedup.contamination_ratios(train, bench, "doc_id", "text", n=3)
     r = det_round(F.col("ratio"), 4)
     return ratios.select(
         F.col("id").alias("doc_id"),
@@ -2814,7 +2812,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = d.agg(F.count("*").alias("n_docs"))
     scored = (
         tf.join(gated_broadcast(dft), "term")
-        .crossJoin(F.broadcast(n_docs))
+        .crossJoin(n_docs)
         .withColumn(
             "score",
             F.col("tf")
@@ -3427,30 +3425,30 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             base, cand.select(F.col("bid").alias("doc_id")).distinct()
         )
     )
-    # size-gated build (dedup.gram_map_build): the gram-set maps scale
-    # with the corpus (payload = whole shingle sets) and
-    # cached-aggregate stats undershoot, so Catalyst's own choice can't
-    # be trusted — broadcast only when the documents scan's on-disk
-    # footprint proves them small, else sort-merge (spills where a
-    # hash build would exhaust per-task memory; the sf10 OOM class).
-    # Both maps derive from the same documents read, so one gate on
-    # `base` covers gq and gb.
+    # size-gated build: the gram-set maps scale with the corpus
+    # (payload = whole shingle sets) and cached-aggregate stats
+    # undershoot, so Catalyst's own choice can't be trusted — broadcast
+    # only when the documents scan's on-disk footprint proves them
+    # small, else sort-merge (spills where a hash build would exhaust
+    # per-task memory; the sf10 OOM class). Both maps derive from the
+    # same documents read, so one gate on `base` covers gq and gb.
+    cap = scale.GRAM_MAP_BROADCAST_CAP
     pairs = (
         cand.join(
-            dedup.gram_map_build(
+            gated_broadcast(
                 gq.select(
                     F.col("id").alias("qid"), F.col("grams").alias("ga")
                 ),
-                base,
+                cap, base, cached=True,
             ),
             "qid",
         )
         .join(
-            dedup.gram_map_build(
+            gated_broadcast(
                 gb.select(
                     F.col("id").alias("bid"), F.col("grams").alias("gb")
                 ),
-                base,
+                cap, base, cached=True,
             ),
             "bid",
         )
@@ -3727,7 +3725,7 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         tf.join(gated_broadcast(df_), "token")
         .join(gated_broadcast(dl), "doc_id")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(stats)
         .groupBy("doc_id")
         .agg(
             F.sum(idf * (F.col("tf") * (BM25_K1 + 1.0)) / denom).alias(
@@ -3851,7 +3849,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     lex = (
         tf.join(gated_broadcast(df_), "token")
         .join(gated_broadcast(dl), "doc_id")
-        .crossJoin(F.broadcast(stats))
+        .crossJoin(stats)
         .groupBy("doc_id")
         .agg(F.sum(idf * (F.col("tf") * (BM25_K1 + 1.0)) / denom).alias("score"))
     )
@@ -4222,7 +4220,7 @@ def unigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     return (
         w.join(gated_broadcast(vocab), "word")
-        .crossJoin(F.broadcast(tot))
+        .crossJoin(tot)
         .withColumn("term", term)
         .groupBy("doc_id")
         .agg(
@@ -4296,8 +4294,8 @@ def mixture_resample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10
     ).cast("long")
     return (
-        d.join(F.broadcast(per), "source")
-        .crossJoin(F.broadcast(tots))
+        d.join(bounded_broadcast(per, "source enum"), "source")
+        .crossJoin(tots)
         .select("source", hv.alias("hv"), thresh.alias("thresh"))
         .groupBy("source")
         .agg(
@@ -4492,8 +4490,8 @@ def source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("long")
     return (
         sw.join(gated_broadcast(wt), "word")
-        .join(F.broadcast(st), "source")
-        .crossJoin(F.broadcast(tot))
+        .join(bounded_broadcast(st, "source enum"), "source")
+        .crossJoin(tot)
         .withColumn("term", term)
         .groupBy("source")
         .agg(
@@ -4943,7 +4941,7 @@ def tokenizer_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("word", F.lit(1).alias("in_v"))
     )
     return (
-        w.join(F.broadcast(vocab), "word", "left")
+        w.join(vocab, "word", "left")
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_tokens"),
@@ -5009,7 +5007,7 @@ def char_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         sum_cols=[("c", "cum")],
         rank_col="rk",
     )
-    return ranked.crossJoin(F.broadcast(tot)).select(
+    return ranked.crossJoin(tot).select(
         F.col("rk").cast("long").alias("rk"),
         "ch",
         F.col("c").cast("long").alias("n_occurrences"),
@@ -5115,7 +5113,7 @@ def token_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         bgc.join(gated_broadcast(ua, cached=True), "a")
         .join(gated_broadcast(ub, cached=True), "b")
-        .crossJoin(F.broadcast(all_bgc))
+        .crossJoin(all_bgc)
         .select("a", "b", F.col("c_ab").cast("long").alias("n_pairs"), pmi.alias("pmi"))
         .orderBy(F.desc("pmi"), F.asc("a"), F.asc("b"))
         .limit(50)
@@ -5189,7 +5187,7 @@ def bigram_perplexity_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         bg.join(gated_broadcast(bgc), ["a", "b"])
         .join(gated_broadcast(uni, cached=True), "a")
-        .crossJoin(F.broadcast(voc))
+        .crossJoin(voc)
         .withColumn("term", term)
         .groupBy("doc_id")
         .agg(
@@ -5365,7 +5363,7 @@ def bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = (
         uni.filter(F.length("word") >= 2)
-        .crossJoin(F.broadcast(top))
+        .crossJoin(top)
         .select(
             "word",
             "wf",
@@ -5400,7 +5398,7 @@ def bpe_merge_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("symbols_before")
     )
-    return mg.crossJoin(F.broadcast(sym)).select(
+    return mg.crossJoin(sym).select(
         "a",
         "b",
         F.col("pair_count").cast("long").alias("pair_count"),
@@ -5655,7 +5653,7 @@ def knn_sq8_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda acc, t: acc + t,
     )
     return (
-        e.crossJoin(F.broadcast(pa))
+        e.crossJoin(pa)
         .select(
             "vec_id",
             (F.floor(dist * 1000000 + F.lit(0.5)) / 1000000.0).alias(
@@ -5731,7 +5729,7 @@ def embedding_int8_quant_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lo") + qcode * (F.col("hi") - F.col("lo")) / 255
     )
     return (
-        x.join(F.broadcast(params), "dim")
+        x.join(bounded_broadcast(params, "embedding width"), "dim")
         .select("vec_id", err.alias("err"))
         .groupBy("vec_id")
         .agg(
@@ -5864,7 +5862,7 @@ def source_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cand.withColumn("rk", F.row_number().over(w).cast("long"))
         .filter(F.col("rk") <= 3)
-        .join(F.broadcast(tot), "source")
+        .join(bounded_broadcast(tot, "source enum"), "source")
         .select(
             "source",
             "rk",
@@ -7146,14 +7144,14 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         - F.log((F.col("rc") + 1).cast("double") / (F.col("rt") + nb).cast("double"))
     )
     lam_tbl = (
-        stats.crossJoin(F.broadcast(tot))
+        stats.crossJoin(tot)
         .select(
             "b",
             F.floor(lam * 1000000 + F.lit(0.5)).cast("long").alias("lam"),
         )
     )
     return (
-        wtok.join(F.broadcast(lam_tbl), "b")
+        wtok.join(bounded_broadcast(lam_tbl, "hash-bucket modulus"), "b")
         .groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_tokens"),
@@ -7262,9 +7260,7 @@ def ann_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("_hit", F.lit(1))
     )
     return (
-        tagged.join(
-            F.broadcast(truth), tagged.vec_id == truth.tv, "left"
-        )
+        tagged.join(truth, tagged.vec_id == truth.tv, "left")
         .groupBy("trunc_dim")
         .agg(
             F.sum(F.when(F.col("_hit").isNotNull(), 1).otherwise(0))
@@ -7429,7 +7425,7 @@ def kneser_ney_bigram_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         bg.join(gated_broadcast(bgc, cached=True), ["a", "b"])
         .join(gated_broadcast(ctx), "a")
         .join(gated_broadcast(cont), "b")
-        .crossJoin(F.broadcast(tt))
+        .crossJoin(tt)
         .withColumn("term", term)
         .groupBy("doc_id")
         .agg(
@@ -7537,8 +7533,8 @@ def cross_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ta = tot.select(F.col("source").alias("src_a"), F.col("n").alias("n_a"))
     tb = tot.select(F.col("source").alias("src_b"), F.col("n").alias("n_b"))
     return (
-        shared.join(F.broadcast(ta), "src_a")
-        .join(F.broadcast(tb), "src_b")
+        shared.join(bounded_broadcast(ta, "source enum"), "src_a")
+        .join(bounded_broadcast(tb, "source enum"), "src_b")
         .select(
             "src_a",
             "src_b",
@@ -7772,7 +7768,10 @@ def embedding_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         d * d / (F.col("var") + F.lit(1.0)) * 1000000 + F.lit(0.5)
     ).cast("long")
     s = (
-        x.join(F.broadcast(st2), ["label", "j"])
+        x.join(
+            bounded_broadcast(st2, "label enum x embedding width"),
+            ["label", "j"],
+        )
         .select("vec_id", "label", ti.alias("ti"))
         .groupBy("vec_id", "label")
         .agg(F.sum("ti").alias("si"))

@@ -765,7 +765,7 @@ _QUALITY_SUITE = {
     """,
     survey="§2.9 (quality/compiler.py violation_summary_df)",
     doc="GE-style suite JSON compiled to Spark checks; all row-level "
-    "expectations for the table evaluate in one scan each, vs the "
+    "expectations for the table evaluate in one aggregate scan, vs the "
     "reference's one GE validation per expectation "
     "(data_validator.py:54-127).",
 )

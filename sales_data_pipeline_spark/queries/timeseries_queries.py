@@ -20,6 +20,7 @@ from sales_data_pipeline_spark.queries.base import (
     query,
     table,
 )
+from sales_data_pipeline_spark.scale import bounded_broadcast
 
 SEVEN_DAYS_US = 7 * 86400 * 1_000_000
 
@@ -145,7 +146,7 @@ def ntile_customer_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         rank_col="__rnk",
     )
     with_n = ranked.crossJoin(
-        F.broadcast(c.agg(F.count(F.lit(1)).alias("__n")))
+        c.agg(F.count(F.lit(1)).alias("__n"))
     )
 
     def idiv(a, b):  # exact integer division over positive longs
@@ -1034,7 +1035,7 @@ def winsorize_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     clipped = F.least(F.greatest(F.col("value"), F.col("p01")), F.col("p99"))
     cents = lambda c: F.sum(F.floor(c * 100 + F.lit(0.5)).cast("long"))
     return (
-        ev.join(F.broadcast(p), "event_type")
+        ev.join(bounded_broadcast(p, "event_type enum"), "event_type")
         .groupBy("event_type")
         .agg(
             F.count("*").cast("long").alias("n"),

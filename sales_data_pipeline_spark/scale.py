@@ -1,29 +1,24 @@
-"""Plan-build-time scale gates — broadcast on disk-measured proof.
+"""The engine's one broadcast policy: every broadcast hint is made here.
 
-The engine's rule for every explicit ``F.broadcast`` of a relation that
-GROWS with the data (SF-scaling dimensions like customer/part/supplier,
-corpus-derived maps like per-doc lengths or open-vocabulary term
-counts): the hint must be *earned* by evidence, not assumed. A forced
-broadcast of a scaling relation is a guaranteed OOM at some scale — at
-the 100 TB design point a TPC-H customer dim is terabytes — while an
-unhinted join degrades gracefully: Catalyst's file-source estimates are
-accurate and AQE re-checks measured sizes at runtime, so the same query
-plans a broadcast-hash join while the dim is genuinely small and a
-spilling sort-merge join once it is not.
+A build the plan proves small needs no hint: a global aggregate is one
+row, a limit k rows, nation/region a few KB, so Catalyst broadcasts
+them under ``autoBroadcastJoinThreshold`` by itself. A hint is only for
+a build the estimates cannot bound, and there are two kinds:
 
-``gated_broadcast`` reads the actual on-disk footprint of the files
-behind the relation (``df.inputFiles()`` — for a derived frame this is
-the union of all source files in its lineage, an upper bound, which is
-the safe direction) and attaches the broadcast hint only under a cap.
-Unknown footprint (non-file source, remote URI) counts as huge.
+``gated_broadcast`` — the build GROWS with the data (customer/part/
+supplier dims, per-doc or per-term maps, gram/shingle sets). The hint
+is earned by evidence: the on-disk footprint of the files behind it
+(``df.inputFiles()``, for a derived frame the union of its lineage's
+source files — an upper bound, the safe direction) must be provably
+under a cap; unknown footprint counts as huge. A forced broadcast of a
+scaling relation is a guaranteed OOM at some scale, while an unhinted
+join degrades to a spilling sort-merge join.
 
-This generalizes the dedup gram-map gate (operators/dedup.py
-``gram_map_build``, which keeps a *merge* else-arm because its build
-sides are cached aggregates whose stats Catalyst UNDERestimates — there
-even the unhinted plan picks a fatal broadcast). Here the else-arm is
-deliberately unhinted: raw-scan lineages have trustworthy stats, and
-uncached aggregate builds inherit conservative (over-) estimates, so
-Catalyst's own choice is already scale-safe once the hint is removed.
+``bounded_broadcast`` — the build is bounded by a domain fact the plan
+cannot show (an enum key, the embedding width, a hash-bucket modulus,
+one row per shuffle partition). The call site writes that fact as the
+reason; ``plan_audit.forced_hint_audit`` reports it, and fails any
+hinted scaling build that no such call declared.
 """
 
 from __future__ import annotations
@@ -40,9 +35,25 @@ from pyspark.sql import functions as F
 # at the sf10 spot-check (customer = 24 MB, documents = 60 MB — the
 # forced-broadcast plans of all gated sites completed there); the gate
 # exists for the scales beyond any local test, where the hint must
-# disappear. Corpus-scaling maps with ~50x expansion (gram/shingle
-# sets) do NOT use this cap — see dedup.GRAM_MAP_BROADCAST_CAP.
+# disappear.
 DIM_BROADCAST_CAP = 64 << 20
+
+# Cap for corpus-scaling gram/shingle-set maps (payload = a doc's whole
+# shingle set, ~50x parquet->relation expansion), probed on the CORPUS
+# footprint. Calibrated by A/B measurement (min-of-2 passes, idle
+# machine, both arms forced) on the round-6 scale ladder: at 0.6 MB of
+# documents parquet (sf0.1) broadcast wins the 5-query dedup family by
+# ~2.8 s net; at 6 MB (sf1) merge wins decisively (dedup_minhash_lsh
+# 10.4 s vs 21.0 s broadcast — building and copying the ~300 MB
+# HashedRelation dominates); at ~60 MB (sf10) broadcast doesn't
+# complete at all (multi-GB relation OOM). The crossover is between
+# those measured points; 2 MB (~100 MB relation) takes broadcast only
+# where it's both safe AND measured faster.
+GRAM_MAP_BROADCAST_CAP = 2 << 20
+
+# Set to a list by plan_audit.forced_hint_audit around each query build
+# (every bounded_broadcast then appends (reason, df)); None otherwise.
+declared: list[tuple[str, DataFrame]] | None = None
 
 
 def source_bytes(df: DataFrame) -> int | None:
@@ -97,6 +108,16 @@ def gated_broadcast(
     if source_is_small(probe, limit):
         return F.broadcast(df)
     return df.hint("merge") if cached else df
+
+
+def bounded_broadcast(df: DataFrame, reason: str) -> DataFrame:
+    """``F.broadcast(df)`` for a build whose row count is bounded by a
+    domain fact the plan cannot show; ``reason`` names that fact at the
+    call site (a string literal, so the source test and the audit read
+    the same words)."""
+    if declared is not None:
+        declared.append((reason, df))
+    return F.broadcast(df)
 
 
 def spread_small_scan(df: DataFrame, *keys: str) -> DataFrame:

@@ -294,3 +294,96 @@ def test_cli_run_end_to_end(tmp_path, capsys):
     assert out["gold_counts"]["sales_enriched"] == 3
     assert out["audit"]["passed"] is True
     assert out["audit"]["row_counts"]["gold/customer_metrics"] == 2
+
+
+_LAYERS = (
+    "bronze/sales/raw", "bronze/sales/rejected", "bronze/customer/raw",
+    "bronze/product/raw", "bronze/store/raw", "silver/sales",
+    "silver/product", "silver/store", "silver/customer_scd",
+    "gold/sales_enriched", "gold/customer_metrics",
+)
+
+
+def _incremental_cfg(root, lake, wm_dir, as_of):
+    return PipelineConfig(
+        input_paths={
+            e: f"{root}/{e}.csv"
+            for e in ("sales", "customer", "product", "store")
+        },
+        output_root=lake,
+        as_of_date=as_of,
+        mode="incremental",
+        watermark_dir=wm_dir,
+    )
+
+
+def _second_run_inputs(root):
+    """Run 2: Ada changes email and one later sale arrives, so both the
+    SCD2 history and the watermark have something to move."""
+    _fixtures(root, customer_email="ada-new@x.com")
+    _write_csv(
+        f"{root}/sales.csv",
+        SALES_HEADER,
+        [
+            [1, 10, "Widget", "2024-03-01", 100, 5.0, 2, 10.0],
+            [2, 10, "Gadget", "2024-04-02", 100, 8.0, 1, 8.0],
+        ],
+    )
+
+
+def _layer_rows(spark, lake):
+    return {
+        layer: sorted(
+            tuple(str(v) for v in r)
+            for r in spark.read.parquet(f"{lake}/{layer}").collect()
+        )
+        for layer in _LAYERS
+    }
+
+
+def test_gold_write_crash_reruns_in_same_session(spark, tmp_path, monkeypatch):
+    """A crash in run 2's gold/customer_metrics write leaves the
+    watermark where run 1 put it, and a rerun in the same session (no
+    clearCache) writes every layer exactly as a clean run 2 does: the
+    runner's persisted frames are released on the failure path, so the
+    rerun never reads a stale cache entry whose source files the crashed
+    run overwrote."""
+    import json as jsonmod
+
+    from pyspark.sql import functions as F
+
+    from sales_data_pipeline_spark.io import writers
+
+    def run_two(tag, crash):
+        root = str(tmp_path / tag / "in")
+        lake = str(tmp_path / tag / "lake")
+        wm_dir = str(tmp_path / tag / "wm")
+        _fixtures(root)
+        run_pipeline(spark, _incremental_cfg(root, lake, wm_dir, "2024-06-01"))
+        _second_run_inputs(root)
+        cfg2 = _incremental_cfg(root, lake, wm_dir, "2024-07-01")
+        if crash:
+            wm_file = f"{wm_dir}/sales_watermark.json"
+            with open(wm_file) as f:
+                wm_before = jsonmod.load(f)["last_processed_timestamp"]
+            real = writers.write_parquet
+
+            def failing(df, path, *a, **kw):
+                if path.endswith("gold/customer_metrics"):
+                    df = df.withColumn(
+                        "_boom", F.raise_error(F.lit("injected failure"))
+                    )
+                return real(df, path, *a, **kw)
+
+            monkeypatch.setattr(writers, "write_parquet", failing)
+            with pytest.raises(Exception, match="injected failure"):
+                run_pipeline(spark, cfg2)
+            monkeypatch.setattr(writers, "write_parquet", real)
+            with open(wm_file) as f:
+                assert jsonmod.load(f)["last_processed_timestamp"] == wm_before
+        run_pipeline(spark, cfg2)
+        return _layer_rows(spark, lake)
+
+    clean = run_two("clean", crash=False)
+    rerun = run_two("crash", crash=True)
+    assert rerun == clean

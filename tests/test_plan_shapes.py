@@ -407,6 +407,69 @@ class TestNoPythonOnHotPath:
         assert not arrow_misuse, f"unsanctioned Arrow UDFs in: {arrow_misuse}"
 
 
+# Nodes a 1-row relation may legally pass through between a BNLJ and
+# its defining global aggregate (AQE stages and cached relations are
+# entered through plan_audit.phys_kids).
+_PASSTHROUGH = (
+    "BroadcastExchange", "Filter",
+    "Project", "ColumnarToRow", "InputAdapter",
+    "WholeStageCodegen", "Sort", "Exchange",
+    "AQEShuffleRead", "BroadcastQueryStage", "ShuffleQueryStage",
+    "TableCacheQueryStage", "InMemoryTableScan",
+)
+_AGGS = ("HashAggregate", "SortAggregate", "ObjectHashAggregate")
+
+
+def scalar_build_violation(bnlj) -> str | None:
+    """None when a BNLJ's build side is a whole-relation broadcast of a
+    global aggregate; else a short reason."""
+    from sales_data_pipeline_spark import plan_audit as pa
+
+    idx = 1 if "Right" in str(bnlj.buildSide()) else 0
+    cur = bnlj.children().apply(idx)
+    saw_identity = False
+    while True:
+        nm = cur.nodeName()
+        if nm.startswith("BroadcastExchange"):
+            if "IdentityBroadcastMode" not in str(cur.mode()):
+                return f"non-identity broadcast mode: {cur.mode()}"
+            saw_identity = True
+        elif nm.startswith(_AGGS):
+            if cur.groupingExpressions().isEmpty():
+                return (
+                    None if saw_identity
+                    else "global agg but no IdentityBroadcastMode"
+                )
+            return f"keyed aggregate on build side: {nm}"
+        elif not nm.startswith(_PASSTHROUGH):
+            return f"non-aggregate build relation: {nm}"
+        kids = pa.phys_kids(cur)
+        if len(kids) != 1:
+            return f"build chain ends at {nm} ({len(kids)} kids)"
+        cur = kids[0]
+
+
+def cartesian_gate(spark, registry, sf_dir):
+    """(queries planning a CartesianProduct, non-scalar BNLJ findings)
+    over every executed plan, cached subplans included."""
+    from sales_data_pipeline_spark import plan_audit as pa
+    from sales_data_pipeline_spark.queries.base import release_persisted
+
+    offenders, bnlj_offenders = [], []
+    for name, spec in sorted(registry.items()):
+        root = spec.fn(spark, sf_dir)._jdf.queryExecution().executedPlan()
+        for node in pa.phys_walk(root):
+            nm = node.nodeName()
+            if nm.startswith("CartesianProduct"):
+                offenders.append(name)
+            elif nm.startswith("BroadcastNestedLoopJoin"):
+                why = scalar_build_violation(node)
+                if why is not None:
+                    bnlj_offenders.append(f"{name}: {why}")
+        release_persisted()
+    return offenders, bnlj_offenders
+
+
 class TestRound3Additions:
     def test_catalog_free_of_cartesian_products(self, spark):
         """Catalog-wide: no query may plan a physical CartesianProduct.
@@ -423,78 +486,13 @@ class TestRound3Additions:
         count would pass one scalar BNLJ masking a keyed one)."""
         from sales_data_pipeline_spark.queries.base import load_all
 
-        def walk(node):
-            yield node
-            if node.nodeName().startswith("AdaptiveSparkPlan"):
-                yield from walk(node.initialPlan())
-                return
-            ch = node.children()
-            for i in range(ch.size()):
-                yield from walk(ch.apply(i))
-
-        # Nodes a 1-row relation may legally pass through between the
-        # BNLJ and its defining global aggregate.
-        _PASSTHROUGH = (
-            "BroadcastExchange", "Filter",
-            "Project", "ColumnarToRow", "InputAdapter",
-            "WholeStageCodegen", "Sort", "Exchange",
-            "AQEShuffleRead",
-        )
-        # AQE query-stage wrappers are LEAVES (children().size()==0);
-        # the chain must continue via .plan() into the stage, not stop
-        # with a spurious "ends at ... (0 kids)" (round-5 advisor).
-        _STAGES = ("BroadcastQueryStage", "ShuffleQueryStage",
-                   "TableCacheQueryStage")
-        _AGGS = ("HashAggregate", "SortAggregate", "ObjectHashAggregate")
-
-        def scalar_build_violation(bnlj) -> str | None:
-            """None when the build side is a whole-relation broadcast of
-            a global aggregate; else a short reason."""
-            idx = 1 if "Right" in str(bnlj.buildSide()) else 0
-            cur = bnlj.children().apply(idx)
-            saw_identity = False
-            while True:
-                nm = cur.nodeName()
-                if nm.startswith(_STAGES):
-                    cur = cur.plan()
-                    continue
-                if nm.startswith("BroadcastExchange"):
-                    if "IdentityBroadcastMode" not in str(cur.mode()):
-                        return f"non-identity broadcast mode: {cur.mode()}"
-                    saw_identity = True
-                elif nm.startswith(_AGGS):
-                    if cur.groupingExpressions().isEmpty():
-                        return (
-                            None if saw_identity
-                            else "global agg but no IdentityBroadcastMode"
-                        )
-                    return f"keyed aggregate on build side: {nm}"
-                elif not nm.startswith(_PASSTHROUGH):
-                    return f"non-aggregate build relation: {nm}"
-                ch = cur.children()
-                if ch.size() != 1:
-                    return f"build chain ends at {nm} ({ch.size()} kids)"
-                cur = ch.apply(0)
-
         # (the one-time skip list for the CC/IVF iterative queries is
         # gone: their current plans carry zero CartesianProduct/BNLJ at
         # this SF_DIR, so they face the same gate as everything else)
-        offenders = []
-        bnlj_offenders = []
-        for name, spec in sorted(load_all().items()):
-            if "streaming" in spec.tags:
-                continue
-            root = (
-                spec.fn(spark, SF_DIR)._jdf.queryExecution().executedPlan()
-            )
-            for node in walk(root):
-                nm = node.nodeName()
-                if nm.startswith("CartesianProduct"):
-                    offenders.append(name)
-                elif nm.startswith("BroadcastNestedLoopJoin"):
-                    why = scalar_build_violation(node)
-                    if why is not None:
-                        bnlj_offenders.append(f"{name}: {why}")
+        registry = {
+            n: s for n, s in load_all().items() if "streaming" not in s.tags
+        }
+        offenders, bnlj_offenders = cartesian_gate(spark, registry, SF_DIR)
         assert not offenders, f"CartesianProduct in: {offenders}"
         assert not bnlj_offenders, (
             f"non-scalar BroadcastNestedLoopJoin in: {bnlj_offenders}"
@@ -567,10 +565,10 @@ class TestBroadcastScaleGate:
     """Catalog-wide 100x broadcast invariant (round-6): with every size
     gate forced shut, no query's optimized plan may carry a
     strategy=broadcast hint whose hinted subtree is an unbounded
-    scaling relation — i.e., no bare F.broadcast of anything that
-    grows with the data. The full two-pass audit (incl. the physical
-    census at the sf10 paths) is tools/broadcast_audit.py; this test
-    enforces the cheap logical pass on every pytest run."""
+    scaling relation, unless a scale.bounded_broadcast call declared
+    the domain fact that bounds it. The full two-pass audit (incl. the
+    physical census at the sf10 paths) is tools/broadcast_audit.py; this
+    test enforces the cheap logical pass on every pytest run."""
 
     def test_no_forced_unbounded_scaling_hints(self, spark):
         from sales_data_pipeline_spark import plan_audit as pa
@@ -582,17 +580,14 @@ class TestBroadcastScaleGate:
         }
         forced, reviewed = pa.forced_hint_audit(spark, registry, SF_DIR)
         assert not forced, f"ungated F.broadcast of scaling data: {forced}"
-        # every reviewed finding must still be in the curated list —
-        # and the list must not silently rot: each entry names a live
-        # query
-        names = set(registry)
-        for (q, _t) in pa.REVIEWED_HINTS:
-            assert q in names, f"REVIEWED_HINTS stale entry: {q}"
+        # every accepted finding carries its call site's written reason
+        assert reviewed and all(f["reason"] for f in reviewed), reviewed
 
     def test_gate_drops_hint_past_cap(self, spark, monkeypatch):
         """star_join_enriched: with the default cap the customer join
-        carries a broadcast hint; with the gate forced shut only the
-        fixed nation/region hints remain."""
+        carries a broadcast hint; with the gate forced shut it carries
+        none (nation/region are unhinted — Catalyst broadcasts them by
+        size), so the hint count drops by exactly one."""
         from sales_data_pipeline_spark import scale
         from sales_data_pipeline_spark.queries.base import load_all
 
@@ -605,3 +600,117 @@ class TestBroadcastScaleGate:
         monkeypatch.setattr(scale, "DIM_BROADCAST_CAP", 0)
         shut = hints(fn(spark, SF_DIR))
         assert default == shut + 1, (default, shut)
+
+
+class TestCachedSubplans:
+    """Both plan gates enter cached subplans: a scoped_persist makes a
+    subplan an InMemoryRelation leaf to Spark, but the plan it caches
+    runs like any other and must meet the same broadcast policy."""
+
+    def test_keyed_scaling_broadcast_under_persist_fails_both_gates(
+        self, spark
+    ):
+        from types import SimpleNamespace
+
+        from pyspark.sql import functions as F
+
+        from sales_data_pipeline_spark import plan_audit as pa
+        from sales_data_pipeline_spark.caching import scoped_persist
+        from sales_data_pipeline_spark.queries.base import table
+
+        def planted(spark, sf_dir):
+            per_cust = table(spark, sf_dir, "customer").groupBy(
+                "c_custkey"
+            ).agg(F.count("*").alias("n"))
+            inner = scoped_persist(
+                table(spark, sf_dir, "orders").crossJoin(
+                    F.broadcast(per_cust)
+                )
+            )
+            return inner.agg(F.sum("n").alias("s"))
+
+        registry = {"planted": SimpleNamespace(fn=planted, tags=())}
+        _, bnlj = cartesian_gate(spark, registry, SF_DIR)
+        assert any("keyed aggregate" in b for b in bnlj), bnlj
+        forced, reviewed = pa.forced_hint_audit(spark, registry, SF_DIR)
+        assert [f["tables"] for f in forced] == [["customer"]], forced
+        assert not reviewed
+
+
+class TestOneBroadcastPolicy:
+    """Source-level: every broadcast hint in the package is made in
+    scale.py (gated_broadcast or bounded_broadcast), and every
+    bounded_broadcast states its reason as a string literal at the
+    call site."""
+
+    HINTS = {"broadcast", "broadcastjoin", "mapjoin"}
+    SQL_HINT = re.compile(r"/\*\+.*\b(BROADCAST|BROADCASTJOIN|MAPJOIN)\b",
+                          re.IGNORECASE | re.DOTALL)
+
+    def _violations(self, path, tree):
+        import ast
+
+        out = []
+        in_scale = path.name == "scale.py"
+        for node in ast.walk(tree):
+            where = f"{path}:{getattr(node, 'lineno', '?')}"
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if self.SQL_HINT.search(node.value):
+                    out.append(f"{where}: broadcast hint in a SQL string")
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else (
+                fn.id if isinstance(fn, ast.Name) else None
+            )
+            if name == "broadcast" and not in_scale and (
+                isinstance(fn, ast.Name)
+                or (isinstance(fn.value, ast.Name)
+                    and fn.value.id in ("F", "functions"))
+            ):
+                out.append(f"{where}: raw broadcast hint")
+            if (name == "hint" and not in_scale and node.args
+                    and isinstance(node.args[0], ast.Constant)
+                    and str(node.args[0].value).lower() in self.HINTS):
+                out.append(f"{where}: .hint({node.args[0].value!r})")
+            if name == "bounded_broadcast":
+                reason = node.args[1] if len(node.args) > 1 else next(
+                    (k.value for k in node.keywords if k.arg == "reason"),
+                    None,
+                )
+                if not (isinstance(reason, ast.Constant)
+                        and isinstance(reason.value, str)
+                        and reason.value.strip()):
+                    out.append(f"{where}: bounded_broadcast without a "
+                               "string-literal reason")
+        return out
+
+    def test_hints_only_through_scale(self):
+        import ast
+        import pathlib
+
+        import sales_data_pipeline_spark
+
+        pkg = pathlib.Path(sales_data_pipeline_spark.__file__).parent
+        bad = []
+        for path in sorted(pkg.rglob("*.py")):
+            tree = ast.parse(path.read_text(), str(path))
+            bad += self._violations(path.relative_to(pkg), tree)
+        assert not bad, bad
+
+    def test_checker_catches_each_form(self):
+        import ast
+        import pathlib
+
+        src = (
+            "a = x.join(F.broadcast(y), 'k')\n"
+            "b = y.hint('MAPJOIN')\n"
+            "c = spark.sql('SELECT /*+ BROADCAST(t) */ * FROM t')\n"
+            "d = bounded_broadcast(y, why)\n"
+            "e = bounded_broadcast(y, '  ')\n"
+            "f = bounded_broadcast(y, 'one row per source: fixed enum')\n"
+            "g = y.hint('merge')\n"
+        )
+        bad = self._violations(pathlib.Path("q.py"), ast.parse(src))
+        lines = sorted({int(b.split(":")[1]) for b in bad})
+        assert lines == [1, 2, 3, 4, 5], bad

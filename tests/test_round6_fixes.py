@@ -232,7 +232,8 @@ class TestGramSetJoinsSpill:
     collect_set-aggregate stats undershoot, so Catalyst broadcast them —
     a multi-GB HashedRelation OOM at 100x bench scale (and a shuffle_hash
     build hits per-task execution memory one scale later). The operators
-    now SIZE-GATE the build (dedup.gram_map_build): broadcast only when
+    now SIZE-GATE the build (scale.gated_broadcast with
+    scale.GRAM_MAP_BROADCAST_CAP): broadcast only when
     the corpus scan's on-disk footprint proves the map small, sort-merge
     (spilling) when it's large or unknowable. These tests pin BOTH sides
     of the gate so neither the fast small-corpus plan nor the
@@ -265,18 +266,20 @@ class TestGramSetJoinsSpill:
             assert "BroadcastHashJoin" in line, line
 
     def test_minhash_pair_joins_sort_merge_past_cap(self, spark, monkeypatch):
+        from sales_data_pipeline_spark import scale
         from sales_data_pipeline_spark.operators import dedup
 
-        monkeypatch.setattr(dedup, "GRAM_MAP_BROADCAST_CAP", 0)
+        monkeypatch.setattr(scale, "GRAM_MAP_BROADCAST_CAP", 0)
         docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
         pairs = dedup.minhash_lsh_pairs(docs, min_jaccard=0.5)
         for line in self._pair_joins(pairs):
             assert "SortMergeJoin" in line, line
 
     def test_ngram_pair_joins_sort_merge_past_cap(self, spark, monkeypatch):
+        from sales_data_pipeline_spark import scale
         from sales_data_pipeline_spark.operators import dedup
 
-        monkeypatch.setattr(dedup, "GRAM_MAP_BROADCAST_CAP", 0)
+        monkeypatch.setattr(scale, "GRAM_MAP_BROADCAST_CAP", 0)
         docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
         block = dedup.minhash_block_map(docs, "doc_id", "text", 3)
         pairs = dedup.ngram_jaccard_pairs(
@@ -288,6 +291,7 @@ class TestGramSetJoinsSpill:
     def test_unknown_source_defaults_to_sort_merge(self, spark):
         # a non-file source has no provable footprint: the gate must
         # assume huge (None -> merge), never broadcast on hope
+        from sales_data_pipeline_spark import scale
         from sales_data_pipeline_spark.operators import dedup
 
         docs = spark.range(200).select(
@@ -295,7 +299,7 @@ class TestGramSetJoinsSpill:
             F.concat(F.lit("alpha beta gamma delta epsilon doc "),
                      F.col("id").cast("string")).alias("text"),
         )
-        assert dedup._source_bytes(docs) is None
+        assert scale.source_bytes(docs) is None
         pairs = dedup.minhash_lsh_pairs(docs, min_jaccard=0.5)
         for line in self._pair_joins(pairs):
             assert "SortMergeJoin" in line, line
@@ -304,7 +308,7 @@ class TestGramSetJoinsSpill:
         import glob as _glob
         import os as _os
 
-        from sales_data_pipeline_spark.operators import dedup
+        from sales_data_pipeline_spark import scale
 
         path = f"{SF_DIR}/documents.parquet"
         docs = spark.read.parquet(path)
@@ -313,4 +317,4 @@ class TestGramSetJoinsSpill:
                 for p in _glob.glob(f"{path}/*.parquet"))
             if _os.path.isdir(path) else _os.path.getsize(path)
         )
-        assert dedup._source_bytes(docs) == expect
+        assert scale.source_bytes(docs) == expect

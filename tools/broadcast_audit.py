@@ -1,8 +1,9 @@
 """Catalog-wide broadcast audit — the 100x OOM-class gate, plan-only.
 
 Two passes over every registered (non-streaming) query (walkers and the
-reviewed-findings list live in ``sales_data_pipeline_spark/plan_audit.py``
-so ``tests/test_plan_shapes.py`` enforces pass 2 on every pytest run):
+audit live in ``sales_data_pipeline_spark/plan_audit.py`` so
+``tests/test_plan_shapes.py`` enforces pass 2 on every pytest run; both
+walks enter cached subplans):
 
 **Pass 1 — physical census at the 100x paths** (default /tmp/sf10).
 Walks each BroadcastExchange's build subtree and classifies every
@@ -15,7 +16,7 @@ fixed-cardinality region/nation dims):
  - keyed_agg         — a grouped aggregate bounds the payload per key but
                        the key-space may scale; these are exactly the
                        size-gated sites (the gate PROVED <= cap at this
-                       SF) plus the reviewed domain-bounded constructs;
+                       SF) plus the declared domain-bounded constructs;
  - estimate_adaptive — raw scan/filter/project chain: Catalyst chose the
                        broadcast from ACCURATE file-source stats, so the
                        same query re-plans sort-merge once the relation
@@ -23,15 +24,15 @@ fixed-cardinality region/nation dims):
                        informational.
 
 **Pass 2 — hint audit with every gate forced shut** (sf0.01, cheap).
-Sets scale.DIM_BROADCAST_CAP and dedup.GRAM_MAP_BROADCAST_CAP to 0 (all
-``gated_broadcast``/``gram_map_build`` sites fall to their scale arm),
-then inspects each query's OPTIMIZED LOGICAL plan: any join hint
-``strategy=broadcast`` that survives must be a bare ``F.broadcast`` in
-the code. The hinted subtree is then required to be BOUNDED (global
-aggregate / limit above every scaling leaf, or only fixed-dim leaves),
-or listed in ``plan_audit.REVIEWED_HINTS`` with its domain-boundedness
-reason — anything else is a forced broadcast no optimizer can undo at
-100x, and the audit FAILS.
+Sets scale.DIM_BROADCAST_CAP and scale.GRAM_MAP_BROADCAST_CAP to 0 (all
+``gated_broadcast`` sites fall to their scale arm), then inspects each
+query's OPTIMIZED LOGICAL plan: any join hint ``strategy=broadcast``
+that survives comes from a ``scale.bounded_broadcast`` call. The hinted
+subtree must be BOUNDED (global aggregate / limit above every scaling
+leaf, or only fixed-dim leaves), or covered by a ``bounded_broadcast``
+made while building that query, whose call-site reason is reported —
+anything else is a forced broadcast no optimizer can undo at 100x, and
+the audit FAILS.
 
 Writes BROADCAST_AUDIT.json; exit 1 on any pass-2 finding.
 Run: PYTHONPATH=. python tools/broadcast_audit.py [census_dir] [sf001_dir]
@@ -112,8 +113,12 @@ def main() -> int:
                 n_exchanges += 1
                 hits: list = []
                 pa.classify_build(node, False, False, hits)
-                for tables, bounded, keyed, cached in hits:
-                    row = {"query": name, "tables": tables}
+                # one row per distinct class of scan under this exchange:
+                # nested cached plans reach the same scan on many paths
+                for tables, bounded, keyed, cached in sorted(
+                    {(tuple(t), b, k, c) for t, b, k, c in hits}
+                ):
+                    row = {"query": name, "tables": list(tables)}
                     if cached:
                         row["cached"] = True
                     if bounded:
@@ -140,7 +145,7 @@ def main() -> int:
         "estimate_adaptive_scaling_broadcasts":
             len(phys["estimate_adaptive"]),
         "hint_audit_scale": "sf0.01 (plan-only, gates forced shut)",
-        "reviewed_domain_bounded_hints": reviewed,
+        "declared_domain_bounded_hints": reviewed,
         "forced_unbounded_scaling_hints": forced,
     }
     with open("BROADCAST_AUDIT.json", "w") as f:

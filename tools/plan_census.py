@@ -65,6 +65,8 @@ def main() -> None:
 
     bnlj = [n for n, c in rows if c["bnlj"]]
     arrow = [n for n, c in rows if c["arrow"]]
+    cart = [n for n, c in rows if c["cart"]]
+    pyrow = [n for n, c in rows if c["pyrow"]]
     with open("PLAN_CENSUS.md", "w") as f:
         f.write(
             "# Plan census — all catalog queries\n\n"
@@ -74,15 +76,16 @@ def main() -> None:
             "absolute stage counts).\n\n"
             "## Catalog-wide gates (all enforced by "
             "tests/test_plan_shapes.py)\n\n"
-            f"- `CartesianProduct`: **0** queries\n"
-            f"- `BatchEvalPython` (row-wise Python): **0** queries\n"
+            f"- `CartesianProduct`: **{len(cart)}** queries\n"
+            f"- `BatchEvalPython` (row-wise Python): **{len(pyrow)}** "
+            "queries\n"
             f"- Arrow/pandas nodes: **{len(arrow)}** queries, all "
             "allowlisted codec/sequential-state boundaries: "
             f"{', '.join(f'`{n}`' for n in arrow)}\n"
             f"- `BroadcastNestedLoopJoin`: **{len(bnlj)}** queries, every "
-            "one a 1-row scalar-aggregate broadcast "
-            "(crossJoin(broadcast(global agg)) — a constant-size build "
-            "side at any data scale): "
+            "one a 1-row scalar-aggregate broadcast (a crossJoin with a "
+            "global aggregate, whose 1-row side Catalyst broadcasts — a "
+            "constant-size build side at any data scale): "
             f"{', '.join(f'`{n}`' for n in bnlj)}\n\n"
             "## Per-query plan facts\n\n"
             "| query | exch | SMJ | BHJ | scalar-BNLJ | window | "
