@@ -30,11 +30,6 @@ from sales_data_pipeline_spark.caching import scoped_persist
 from sales_data_pipeline_spark.functions.text import content_hash, words
 
 
-def word_set(text: Column) -> Column:
-    """Distinct whitespace tokens."""
-    return F.array_distinct(words(text))
-
-
 def shingle_set(text: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles — the canonical minhash input.
 

@@ -34,13 +34,6 @@ from sales_data_pipeline_spark.schemas import (
 )
 
 
-def _lower_trim(df: DataFrame, *cols: str) -> DataFrame:
-    # single withColumns call: classic-mode withColumn re-analyzes the
-    # whole plan per invocation (quadratic in chain length), which
-    # dominates wall time for short dimension batches
-    return df.withColumns({c: F.lower(F.trim(F.col(c))) for c in cols})
-
-
 def _as_of(as_of_date: dt.date | str):
     return F.lit(str(as_of_date)).cast("date")
 

@@ -19,6 +19,8 @@ engines; no Python UDFs.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -49,16 +51,17 @@ def query_vector(dim: int = DIM) -> list[float]:
 # the JVM in a single parse (~0.05 s); building the same tree node by
 # node through the Column API costs one py4j round-trip per literal and
 # operator, measured 2.4-3.6 s of driver time per ADC/k-means-sized
-# expression (plans/r12/prof_before.json).
+# expression.
 #
 # Fold contract: every dot/L2 product is aggregate(zip_with(...), 0.0D,
 # (acc, x) -> acc + x), the sequential ((0+t1)+t2)... association the
-# DuckDB oracle SQL spells out as (0.0 + t1 + t2 + ...), with each
-# element cast to DOUBLE before multiplying, so the doubles are
-# bit-identical across engines. Literals print as repr(x) + "D", which
-# round-trips the exact IEEE value. A HOF fold keeps the expression
-# tree O(1) in the dimension; an unrolled element_at chain compiles
-# ~dim*N_PLANES-term codegen expressions (8-11 s of janino per plan).
+# DuckDB oracle SQL spells out term by term (queries/base.py
+# sql_fold_dot / sql_fold_l2sq), with each element cast to DOUBLE
+# before multiplying, so the doubles are bit-identical across engines.
+# Literals print as repr(x) + "D", which round-trips the exact IEEE
+# value. A HOF fold keeps the expression tree O(1) in the dimension;
+# an unrolled element_at chain compiles ~dim*N_PLANES-term codegen
+# expressions (8-11 s of janino per plan).
 # ---------------------------------------------------------------------------
 
 
@@ -254,7 +257,7 @@ def ivf_centroid(i: int, dim: int = DIM) -> list[float]:
     return [((i * 7 + j * 3) % 11 - 5) / 10.0 for j in range(dim)]
 
 
-def sql_ivf_assign(vec_sql: str, n: int = N_IVF_CENTROIDS) -> str:
+def sql_ivf_assign(vec_sql: str) -> str:
     """Nearest-centroid id (argmin of squared L2, first-match
     tie-break) — the IVF coarse quantizer.
 
@@ -267,35 +270,23 @@ def sql_ivf_assign(vec_sql: str, n: int = N_IVF_CENTROIDS) -> str:
     darr = (
         "array("
         + ", ".join(
-            sql_l2sq_to_literal(vec_sql, ivf_centroid(i)) for i in range(n)
+            sql_l2sq_to_literal(vec_sql, ivf_centroid(i))
+            for i in range(N_IVF_CENTROIDS)
         )
         + ")"
     )
     return f"CAST(array_position({darr}, array_min({darr})) - 1 AS INT)"
 
 
-def ivf_probe_centroid(query: list[float], n: int = N_IVF_CENTROIDS) -> int:
-    """Driver-side coarse quantization of the query vector (centroids
-    are literals, so this is O(n*dim) plain Python)."""
-    best_i, best_d = 0, float("inf")
-    for i in range(n):
-        d = sum((a - b) ** 2 for a, b in zip(query, ivf_centroid(i)))
-        if d < best_d:
-            best_i, best_d = i, d
-    return best_i
-
-
-def ivf_probe_centroids(
-    query: list[float], nprobe: int = 1, n: int = N_IVF_CENTROIDS
-) -> list[int]:
+def ivf_probe_centroids(query: list[float], nprobe: int = 1) -> list[int]:
     """The ``nprobe`` nearest coarse centroids to the query, ascending
     by distance (ties to the lower id) — IVF's recall/cost dial: a
     query near a cell boundary finds boundary-crossing neighbors only
     when the adjacent cells are probed too. Driver-side plain Python
-    (centroids are literals); nprobe=1 reproduces ivf_probe_centroid."""
+    (centroids are literals)."""
     dists = sorted(
         (sum((a - b) ** 2 for a, b in zip(query, ivf_centroid(i))), i)
-        for i in range(n)
+        for i in range(N_IVF_CENTROIDS)
     )
     return [i for _d, i in dists[:nprobe]]
 
@@ -319,7 +310,7 @@ def ivf_probe_topk(
     here — its ~5k-node literal trees wedged janino when fused; the
     HOF folds keep the fused stage's expression tree O(planes+dims) so
     the barrier, and its extra job, are gone.)"""
-    probe = ivf_probe_centroid(query)
+    [probe] = ivf_probe_centroids(query)
     in_cell = df.select(id_col, vec_col).filter(
         F.expr(sql_ivf_assign(vec_col)) == probe
     )
@@ -335,78 +326,117 @@ def ivf_probe_topk(
 # touching the raw vectors. At 100 TB this is the ANN path when even
 # one pass over raw embeddings is too expensive: the code table is
 # ~1/100th the scan, and the LUT turns scoring into PQ_M array lookups.
+#
+# Every PQ path shares one vocabulary: a codebook is a
+# {(sub, code): codeword} dict (PQ_CODEBOOK, or a trained one from
+# collect_codebook); sql_pq_d_cols gives the per-subspace distance
+# arrays, pq_lut the query's lookup table, and sql_pq_adc the score
+# over 1-based argmin positions. A stored code_j is position - 1.
 # ---------------------------------------------------------------------------
 
 PQ_M = 4  # subspaces per vector
 PQ_KSUB = 16  # codewords per sub-codebook (4-bit codes)
 PQ_SUBDIM = DIM // PQ_M
 
+Codebook = dict[tuple[int, int], list[float]]
 
-def pq_codeword(j: int, i: int, subdim: int = PQ_SUBDIM) -> list[float]:
+
+def pq_codeword(j: int, i: int) -> list[float]:
     """Deterministic codeword i of sub-codebook j (stand-in for trained
     per-subspace k-means — the same trade ivf_centroid makes: the
     operators are codebook-agnostic, and literal codebooks keep both
     engines bit-identical). Modulus 17 > PQ_KSUB keeps all 16 codewords
     of a subspace distinct (a 13-modulus would alias i and i+13)."""
     return [
-        ((i * 5 + j * 13 + t * 3) % 17 - 8) / 16.0 for t in range(subdim)
+        ((i * 5 + j * 13 + t * 3) % 17 - 8) / 16.0 for t in range(PQ_SUBDIM)
     ]
 
 
-def sql_pq_dlist(
-    vec_sql: str,
-    j: int,
-    subdim: int = PQ_SUBDIM,
-    ksub: int = PQ_KSUB,
-) -> str:
-    """array<double> of squared-L2 distances from subvector j of the
-    vector to every codeword of sub-codebook j — the E-step input for
-    both encoding (argmin) and quantization error (array_min)."""
-    sub = f"slice({vec_sql}, {j * subdim + 1}, {subdim})"
-    return (
+PQ_CODEBOOK: Codebook = {
+    (j, i): pq_codeword(j, i) for j in range(PQ_M) for i in range(PQ_KSUB)
+}
+
+
+def _sub_codebooks(codebook: Codebook | None) -> list[list[list[float]]]:
+    """Per subspace, its codewords in code-id order (PQ_CODEBOOK when
+    ``codebook`` is None). Cells a training left empty are simply
+    absent, so the distance arrays and the LUT rows index the same
+    list: an argmin position selects the LOWEST code id among distance
+    ties — the tie-break the trained oracle mirrors with MIN(code)."""
+    items = sorted((PQ_CODEBOOK if codebook is None else codebook).items())
+    subs = []
+    for j in range(PQ_M):
+        words = [cw for (sub, _code), cw in items if sub == j]
+        if not words:
+            raise ValueError(f"codebook has no cells for subspace {j}")
+        subs.append(words)
+    return subs
+
+
+def sql_pq_d_cols(vec_sql: str, codebook: Codebook | None = None) -> list[str]:
+    """The PQ_M per-subspace distance arrays as aliased select items
+    (``array(...) AS __d{j}``): squared L2 from subvector j to every
+    codeword of sub-codebook j — the E-step input for encoding (argmin)
+    and quantization error (array_min), and the shared first stage of
+    every PQ consumer. Materializing them as named columns keeps each
+    array's fold chain in the plan ONCE even though argmin references
+    it twice."""
+    return [
         "array("
         + ", ".join(
-            sql_l2sq_to_literal(sub, pq_codeword(j, i, subdim))
-            for i in range(ksub)
+            sql_l2sq_to_literal(
+                f"slice({vec_sql}, {j * PQ_SUBDIM + 1}, {PQ_SUBDIM})", cw
+            )
+            for cw in words
         )
-        + ")"
+        + f") AS __d{j}"
+        for j, words in enumerate(_sub_codebooks(codebook))
+    ]
+
+
+def sql_pq_argmin(j: int) -> str:
+    """1-based position of subspace j's nearest codeword in ``__d{j}``
+    (array_position is first-match, so ties go to the lower code)."""
+    return f"CAST(array_position(__d{j}, array_min(__d{j})) AS INT)"
+
+
+def sql_pq_adc(
+    lut: list[list[float]], pos: Callable[[int], str] = sql_pq_argmin
+) -> str:
+    """ADC score: the sum over subspaces j of the literal LUT row j at
+    the 1-based position ``pos(j)`` — the argmin over ``__d{j}`` by
+    default, a stored ``code_{j} + 1``, or a precomputed column."""
+    return " + ".join(
+        f"element_at({sql_lit_array(row)}, {pos(j)})"
+        for j, row in enumerate(lut)
     )
 
 
-def sql_pq_d_cols(
-    vec_sql: str,
-    m: int = PQ_M,
-    subdim: int = PQ_SUBDIM,
-    ksub: int = PQ_KSUB,
-) -> list[str]:
-    """The m per-subspace distance arrays as aliased select items
-    (``... AS __d{j}``) — the shared first stage of every PQ consumer.
-    Materializing them as named columns keeps each array's fold chain
-    in the plan ONCE even though argmin references it twice."""
-    return [
-        f"{sql_pq_dlist(vec_sql, j, subdim, ksub)} AS __d{j}"
-        for j in range(m)
-    ]
-
-
-def sql_pq_adc_from_d(lut: list[list[float]], m: int = PQ_M) -> str:
-    """ADC score over the __d{j} columns: sum of m literal-array LUT
-    lookups at the per-subspace argmin (first-match tie-break)."""
-    terms = [
-        f"element_at({sql_lit_array(lut[j])}, "
-        f"CAST(array_position(__d{j}, array_min(__d{j})) AS INT))"
-        for j in range(m)
-    ]
-    return " + ".join(terms)
+def pq_lut(
+    query: list[float], codebook: Codebook | None = None
+) -> list[list[float]]:
+    """Driver-side ADC lookup table: lut[j][p] = squared L2 from the
+    query's subvector j to the p-th codeword of sub-codebook j (code p
+    for the full literal codebook). The query and the codewords are
+    both literals — collect_codebook collects a trained codebook — so
+    this is plain Python left folds, and both engines consume the SAME
+    Python doubles as literals: ADC scores cannot drift between Spark
+    and the oracle."""
+    lut: list[list[float]] = []
+    for j, words in enumerate(_sub_codebooks(codebook)):
+        qsub = query[j * PQ_SUBDIM : (j + 1) * PQ_SUBDIM]
+        row = []
+        for c in words:
+            d = 0.0
+            for a, b in zip(qsub, c):
+                d = d + (a - b) * (a - b)
+            row.append(d)
+        lut.append(row)
+    return lut
 
 
 def pq_encode(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = PQ_M,
-    subdim: int = PQ_SUBDIM,
-    ksub: int = PQ_KSUB,
+    df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
     """PQ-encode every vector: (id, code_0..code_{m-1}, err_micro).
     code_j is the 0-based argmin codeword of subspace j (first-match
@@ -423,73 +453,64 @@ def pq_encode(
     code_sel = [id_col] + [
         f"CAST(array_position(__d{j}, array_min(__d{j})) - 1 AS INT)"
         f" AS code_{j}"
-        for j in range(m)
+        for j in range(PQ_M)
     ]
-    err = " + ".join(f"array_min(__d{j})" for j in range(m))
+    err = " + ".join(f"array_min(__d{j})" for j in range(PQ_M))
     code_sel.append(
         f"CAST(FLOOR(({err}) * 1000000 + 0.5D) AS BIGINT) AS err_micro"
     )
-    return df.selectExpr(
-        id_col, *sql_pq_d_cols(vec_col, m, subdim, ksub)
-    ).selectExpr(*code_sel)
+    return df.selectExpr(id_col, *sql_pq_d_cols(vec_col)).selectExpr(
+        *code_sel
+    )
 
 
-def pq_lut(
+def pq_adc_scored(
+    df: DataFrame,
     query: list[float],
-    m: int = PQ_M,
-    subdim: int = PQ_SUBDIM,
-    ksub: int = PQ_KSUB,
-) -> list[list[float]]:
-    """Driver-side ADC lookup table: lut[j][i] = squared L2 from the
-    query's subvector j to codeword i. Both the query vector and the
-    codebook are literals, so this is plain Python O(m*ksub*subdim) —
-    and both engines consume the SAME Python doubles as literals, so
-    ADC scores cannot drift between Spark and the oracle."""
-    lut: list[list[float]] = []
-    for j in range(m):
-        qsub = query[j * subdim : (j + 1) * subdim]
-        row = []
-        for i in range(ksub):
-            c = pq_codeword(j, i, subdim)
-            d = 0.0
-            for a, b in zip(qsub, c):
-                d = d + (a - b) * (a - b)
-            row.append(d)
-        lut.append(row)
-    return lut
+    codebook: Codebook | None = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    carry: dict[str, str] | None = None,
+) -> DataFrame:
+    """(id, *carry, adc_dist) for every row: the rounded ADC score of
+    the row's PQ encoding, plus the ``carry`` columns (name -> SQL over
+    the input row) computed in the same scan. Two chained selectExpr
+    stages — distance arrays, then LUT lookups at their argmins — so
+    the scoring tree is one SQL parse, not a py4j storm (measured 3.6 s
+    -> 0.05 s of driver time per instance; values bit-identical)."""
+    carry = carry or {}
+    return df.selectExpr(
+        id_col,
+        *(f"{sql} AS {name}" for name, sql in carry.items()),
+        *sql_pq_d_cols(vec_col, codebook),
+    ).selectExpr(
+        id_col,
+        *carry,
+        f"{sql_rounded(sql_pq_adc(pq_lut(query, codebook)))} AS adc_dist",
+    )
 
 
 def pq_adc_topk(
     df: DataFrame,
     query: list[float],
     k: int = 10,
+    codebook: Codebook | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    m: int = PQ_M,
-    subdim: int = PQ_SUBDIM,
-    ksub: int = PQ_KSUB,
-    round_digits: int = 6,
 ) -> DataFrame:
     """ADC (asymmetric distance computation) top-k: approximate
     dist(q, x) by sum_j lut[j][code_j(x)] — the query stays full
     precision, the corpus is scored through its PQ codes. Here the
     encode fuses into the scan (codes aren't stored at bench scale);
-    at 100 TB the code table is precomputed by pq_encode and this scan
-    reads 2-byte codes instead of 256-byte vectors — the scan-volume
-    win that makes PQ the memory-bound ANN path. Score is a chained
-    sum of m literal-array lookups (JVM-side, no UDF), rounded with
-    id tie-break for a total order; top-k is TakeOrderedAndProject,
-    never a full sort. The scoring tree is emitted as two chained
-    selectExpr stages — one SQL parse, not a py4j storm (measured 3.6 s
-    -> 0.05 s of driver time per instance; values bit-identical)."""
-    lut = pq_lut(query, m, subdim, ksub)
-    scored = df.selectExpr(
-        id_col, *sql_pq_d_cols(vec_col, m, subdim, ksub)
-    ).selectExpr(
-        id_col,
-        f"{sql_rounded(sql_pq_adc_from_d(lut, m), round_digits)}"
-        " AS adc_dist",
-    )
+    at 100 TB the code table is precomputed by pq_encode and the scan
+    reads 2-byte codes instead of 256-byte vectors (pq_adc_topk_codes)
+    — the scan-volume win that makes PQ the memory-bound ANN path.
+    ``codebook`` is the literal PQ_CODEBOOK by default, or a TRAINED
+    one (collect_codebook over the stored table): the plan shape is the
+    same either way, which is what makes the operators
+    codebook-agnostic. Score is rounded with id tie-break for a total
+    order; top-k is TakeOrderedAndProject, never a full sort."""
+    scored = pq_adc_scored(df, query, codebook, id_col, vec_col)
     return scored.orderBy(F.asc("adc_dist"), F.col(id_col)).limit(k)
 
 
@@ -499,7 +520,6 @@ def ivfpq_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_centroids: int = N_IVF_CENTROIDS,
     nprobe: int = 1,
 ) -> DataFrame:
     """IVF-PQ (the FAISS IVFADC composition): coarse-quantize the query
@@ -514,9 +534,9 @@ def ivfpq_topk(
     ivfpq_nprobe_recall), shortlist size on the PQ side (certified by
     pq_recall_eval). Same total order as pq_adc_topk (rounded score,
     id tie-break)."""
-    probes = ivf_probe_centroids(query, nprobe, n_centroids)
+    probes = ivf_probe_centroids(query, nprobe)
     in_cells = df.select(id_col, vec_col).filter(
-        F.expr(sql_ivf_assign(vec_col, n_centroids)).isin(probes)
+        F.expr(sql_ivf_assign(vec_col)).isin(probes)
     )
     return pq_adc_topk(in_cells, query, k=k, id_col=id_col, vec_col=vec_col)
 
@@ -527,12 +547,7 @@ def ivfpq_residual_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_centroids: int = N_IVF_CENTROIDS,
     nprobe: int = 2,
-    m: int = PQ_M,
-    subdim: int = PQ_SUBDIM,
-    ksub: int = PQ_KSUB,
-    round_digits: int = 6,
 ) -> DataFrame:
     """Residual-encoded IVFADC (the full Jegou et al. 2011 scheme):
     PQ quantizes the RESIDUAL x - c(x) of each vector w.r.t. its coarse
@@ -567,7 +582,7 @@ def ivfpq_residual_topk(
     # LUT differs per cell), so they compute once, and the score is a
     # CASE over the probed cells' LUT lookups. Same rounded score, same
     # total order, one scan, one parse.
-    probes = ivf_probe_centroids(query, nprobe, n_centroids)
+    probes = ivf_probe_centroids(query, nprobe)
     cent_case = (
         "CASE __cell "
         + " ".join(
@@ -576,20 +591,13 @@ def ivfpq_residual_topk(
         )
         + " END"
     )
-    luts = {}
-    for c in probes:
-        cent = ivf_centroid(c)
-        qres = [a - b for a, b in zip(query, cent)]
-        luts[c] = pq_lut(qres, m, subdim, ksub)
     score_case = (
         "CASE __cell "
         + " ".join(
-            "WHEN {c} THEN {s}".format(
-                c=c,
-                s=" + ".join(
-                    f"element_at({sql_lit_array(luts[c][j])}, __p{j})"
-                    for j in range(m)
-                ),
+            f"WHEN {c} THEN "
+            + sql_pq_adc(
+                pq_lut([a - b for a, b in zip(query, ivf_centroid(c))]),
+                lambda j: f"__p{j}",
             )
             for c in probes
         )
@@ -599,7 +607,7 @@ def ivfpq_residual_topk(
         df.selectExpr(
             id_col,
             vec_col,
-            f"{sql_ivf_assign(vec_col, n_centroids)} AS __cell",
+            f"{sql_ivf_assign(vec_col)} AS __cell",
         )
         .filter(F.col("__cell").isin(probes))
         .selectExpr(
@@ -608,22 +616,13 @@ def ivfpq_residual_topk(
             f"zip_with({vec_col}, {cent_case}, "
             "(a, b) -> CAST(a AS DOUBLE) - b) AS __res",
         )
-        .selectExpr(
-            id_col, "__cell", *sql_pq_d_cols("__res", m, subdim, ksub)
-        )
+        .selectExpr(id_col, "__cell", *sql_pq_d_cols("__res"))
         .selectExpr(
             id_col,
             "__cell",
-            *[
-                f"CAST(array_position(__d{j}, array_min(__d{j})) AS INT)"
-                f" AS __p{j}"
-                for j in range(m)
-            ],
+            *[f"{sql_pq_argmin(j)} AS __p{j}" for j in range(PQ_M)],
         )
-        .selectExpr(
-            id_col,
-            f"{sql_rounded(score_case, round_digits)} AS adc_dist",
-        )
+        .selectExpr(id_col, f"{sql_rounded(score_case)} AS adc_dist")
     )
     return scored.orderBy(F.asc("adc_dist"), F.col(id_col)).limit(k)
 
@@ -633,31 +632,17 @@ def pq_adc_topk_codes(
     query: list[float],
     k: int = 10,
     id_col: str = "vec_id",
-    m: int = PQ_M,
-    subdim: int = PQ_SUBDIM,
-    ksub: int = PQ_KSUB,
-    round_digits: int = 6,
 ) -> DataFrame:
     """ADC top-k over a STORED code table (pq_encode's output read
     back from parquet) — the literal serving shape: the scan touches
     m small ints per row and never sees a raw vector. Identical
     values to pq_adc_topk over the original vectors (ADC depends only
-    on the codes), so the same oracle certifies both; what changes is
-    the physical read — 2 bytes/vector instead of 256 — which is the
-    entire point of PQ at 100 TB."""
-    lut = pq_lut(query, m, subdim, ksub)
-    s = 10**round_digits
-    score: Column | None = None
-    for j in range(m):
-        lut_arr = F.array(*[F.lit(float(v)) for v in lut[j]])
-        term = F.element_at(lut_arr, F.col(f"code_{j}").cast("int") + 1)
-        score = term if score is None else score + term
-    scored = codes.select(
-        F.col(id_col),
-        (F.floor(score * s + F.lit(0.5)) / F.lit(float(s))).alias(
-            "adc_dist"
-        ),
-    )
+    on the codes, and a stored code_j is the argmin position - 1), so
+    the same oracle certifies both; what changes is the physical read
+    — 2 bytes/vector instead of 256 — which is the entire point of PQ
+    at 100 TB."""
+    adc = sql_pq_adc(pq_lut(query), lambda j: f"code_{j} + 1")
+    scored = codes.selectExpr(id_col, f"{sql_rounded(adc)} AS adc_dist")
     return scored.orderBy(F.asc("adc_dist"), F.col(id_col)).limit(k)
 
 
@@ -665,9 +650,6 @@ def pq_train_codebooks(
     df: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    m: int = PQ_M,
-    subdim: int = PQ_SUBDIM,
-    ksub: int = PQ_KSUB,
     scale: int = 1_000_000,
 ) -> DataFrame:
     """Train per-subspace PQ sub-codebooks with one Lloyd E+M step —
@@ -697,7 +679,7 @@ def pq_train_codebooks(
     seeds_row = (
         df.select(id_col, vec_col)
         .orderBy(id_col)
-        .limit(ksub)
+        .limit(PQ_KSUB)
         .agg(
             F.transform(
                 F.array_sort(
@@ -713,17 +695,17 @@ def pq_train_codebooks(
         )
     )
     code_exprs = []
-    for j in range(m):
-        off = j * subdim + 1
+    for j in range(PQ_M):
+        off = j * PQ_SUBDIM + 1
         d = (
             "array("
             + ", ".join(
                 sql_fold_l2sq(
-                    f"slice({vec_col}, {off}, {subdim})",
-                    f"slice(s[{i}], {off}, {subdim})",
-                    subdim,
+                    f"slice({vec_col}, {off}, {PQ_SUBDIM})",
+                    f"slice(s[{i}], {off}, {PQ_SUBDIM})",
+                    PQ_SUBDIM,
                 )
-                for i in range(ksub)
+                for i in range(PQ_KSUB)
             )
             + ")"
         )
@@ -736,14 +718,14 @@ def pq_train_codebooks(
     )
     comp = assigned.select(
         F.posexplode(vec_col).alias("pos0", "val"),
-        *[F.col(f"code_{j}") for j in range(m)],
+        *[F.col(f"code_{j}") for j in range(PQ_M)],
     ).select(
-        F.floor(F.col("pos0") / subdim).cast("int").alias("sub"),
+        F.floor(F.col("pos0") / PQ_SUBDIM).cast("int").alias("sub"),
         F.element_at(
-            F.array(*[F.col(f"code_{j}") for j in range(m)]),
-            F.floor(F.col("pos0") / subdim).cast("int") + 1,
+            F.array(*[F.col(f"code_{j}") for j in range(PQ_M)]),
+            F.floor(F.col("pos0") / PQ_SUBDIM).cast("int") + 1,
         ).alias("code"),
-        (F.col("pos0") % subdim).cast("int").alias("t"),
+        (F.col("pos0") % PQ_SUBDIM).cast("int").alias("t"),
         F.floor(
             F.col("val").cast("double") * scale
             + F.when(F.col("val") >= 0, F.lit(0.5)).otherwise(F.lit(-0.5))
@@ -775,65 +757,6 @@ def collect_codebook(
         key: [comps[t] for t in sorted(comps)]
         for key, comps in acc.items()
     }
-
-
-def pq_adc_topk_trained(
-    df: DataFrame,
-    query: list[float],
-    codebook: dict[tuple[int, int], list[float]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = PQ_M,
-    subdim: int = PQ_SUBDIM,
-    round_digits: int = 6,
-) -> DataFrame:
-    """ADC top-k over a TRAINED (data-dependent) codebook — the same
-    plan shape as pq_adc_topk, with the codeword literals sourced from
-    ``codebook`` (collect_codebook over the stored table) instead of
-    the deterministic pq_codeword stand-in. This is the demonstration
-    that the PQ operators are codebook-agnostic: encode is still one
-    narrow projection of left-fold distance chains, the ADC LUT is
-    still computed driver-side (query literal x collected codewords,
-    plain Python left folds), and scoring is literal-array lookups in
-    whole-stage codegen. Cells the training left empty simply don't
-    appear in the distance arrays: entries are ordered by code id, so
-    the argmin's first-match position selects the LOWEST code id among
-    distance ties — the tie-break the oracle mirrors with MIN(code).
-    Emitted as two chained selectExpr stages (one SQL parse) like
-    pq_adc_topk."""
-    d_cols = []
-    terms = []
-    for j in range(m):
-        entries = sorted(
-            (code, cw) for (sub, code), cw in codebook.items() if sub == j
-        )
-        if not entries:
-            raise ValueError(f"codebook has no cells for subspace {j}")
-        sub = f"slice({vec_col}, {j * subdim + 1}, {subdim})"
-        d_cols.append(
-            "array("
-            + ", ".join(
-                sql_l2sq_to_literal(sub, cw) for _code, cw in entries
-            )
-            + f") AS __d{j}"
-        )
-        lut_vals = []
-        for _code, cw in entries:
-            qsub = query[j * subdim : (j + 1) * subdim]
-            acc = 0.0
-            for a, b in zip(qsub, cw):
-                acc = acc + (a - b) * (a - b)
-            lut_vals.append(acc)
-        terms.append(
-            f"element_at({sql_lit_array(lut_vals)}, "
-            f"CAST(array_position(__d{j}, array_min(__d{j})) AS INT))"
-        )
-    scored = df.selectExpr(id_col, *d_cols).selectExpr(
-        id_col,
-        f"{sql_rounded(' + '.join(terms), round_digits)} AS adc_dist",
-    )
-    return scored.orderBy(F.asc("adc_dist"), F.col(id_col)).limit(k)
 
 
 def pq_rerank_topk(

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sales_data_pipeline_spark.incremental.watermark import WatermarkManager
-from sales_data_pipeline_spark.io import readers, writers
+from sales_data_pipeline_spark.io import fs, readers, writers
 from sales_data_pipeline_spark.operators import bronze, gold, scd2, silver
 from sales_data_pipeline_spark.quality import compiler
 from sales_data_pipeline_spark.schemas import SOURCE_SCHEMAS
@@ -190,11 +190,15 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> PipelineMetrics:
     )
     s_store = silver.transform_store(valid_frames["store"], cfg.as_of_date)
 
-    # SCD2 against prior silver history (first run seeds it)
+    # SCD2 against prior silver history (first run seeds it). "No
+    # history yet" means the path is absent; history that is present
+    # but unreadable (say, a crashed run's half-written overwrite)
+    # raises instead of being taken for a first run, which would drop
+    # every closed version.
     scd_path = f"{out}/silver/customer_scd"
-    try:
+    if fs.exists(spark, scd_path):
         existing = spark.read.parquet(scd_path)
-    except Exception:  # first run: empty history with incoming shape
+    else:  # empty history with incoming shape
         existing = s_customer.limit(0)
     customer_hist = scd2.apply_scd_type2(existing, s_customer, cfg.as_of_date)
 

@@ -22,7 +22,9 @@ from sales_data_pipeline_spark.queries.base import (
     det_sum,
     query,
     scoped_persist,
+    sql_at,
     sql_det_sum,
+    sql_fold_dot,
     table,
 )
 
@@ -540,18 +542,12 @@ def sample_docs_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_self_dot(vec: str, dim: int) -> str:
-    # CAST each element to DOUBLE BEFORE multiplying: DuckDB evaluates
-    # FLOAT * FLOAT in single precision (rounding each product to 24
-    # bits) while Spark's similarity.sql_dot widens to double first —
-    # caught at sf1 where the perturbed replicas' full-mantissa floats
-    # made 4% of scaled norms differ by +/-1 (queries/llm.py's
-    # _sql_dot always cast; this local builder predated it).
-    terms = " + ".join(
-        f"CAST({vec}[{j + 1}] AS DOUBLE) * CAST({vec}[{j + 1}] AS DOUBLE)"
-        for j in range(dim)
-    )
-    return f"(0.0 + {terms})"
+# sql_at casts each element to DOUBLE BEFORE multiplying: DuckDB
+# evaluates FLOAT * FLOAT in single precision (rounding each product to
+# 24 bits) while Spark's similarity.sql_dot widens to double first —
+# caught at sf1 where the perturbed replicas' full-mantissa floats made
+# 4% of scaled norms differ by +/-1.
+_EMB_SELF_DOT = sql_fold_dot(sql_at("embedding"), sql_at("embedding"), 64)
 
 
 @query(
@@ -559,9 +555,9 @@ def _sql_self_dot(vec: str, dim: int) -> str:
     oracle=f"""
         SELECT label,
                CAST(count(*) AS BIGINT) AS n_vecs,
-               SUM(CAST(FLOOR(SQRT({_sql_self_dot('embedding', 64)}) * 1000000
+               SUM(CAST(FLOOR(SQRT({_EMB_SELF_DOT}) * 1000000
                    + 0.5) AS BIGINT)) / 1000000.0 AS total_norm,
-               SUM(CAST(FLOOR(SQRT({_sql_self_dot('embedding', 64)}) * 1000000
+               SUM(CAST(FLOOR(SQRT({_EMB_SELF_DOT}) * 1000000
                    + 0.5) AS BIGINT)) / 1000000.0 / COUNT(*) AS avg_norm
         FROM embeddings
         GROUP BY label

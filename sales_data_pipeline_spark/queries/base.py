@@ -185,10 +185,6 @@ def det_sum(col: Column, n: int = 2) -> Column:
     return F.sum(F.floor(col * s + F.lit(0.5))) / F.lit(float(s))
 
 
-def det_avg(col: Column, n: int = 2) -> Column:
-    return det_sum(col, n) / F.count(F.lit(1))
-
-
 def sql_det_round(expr: str, n: int = 2) -> str:
     s = 10**n
     return f"FLOOR(({expr}) * {s} + 0.5) / {s}.0"
@@ -199,8 +195,42 @@ def sql_det_sum(expr: str, n: int = 2) -> str:
     return f"SUM(CAST(FLOOR(({expr}) * {s} + 0.5) AS BIGINT)) / {s}.0"
 
 
-def sql_det_avg(expr: str, n: int = 2) -> str:
-    return f"{sql_det_sum(expr, n)} / COUNT(*)"
+# ---------------------------------------------------------------------------
+# Vector folds for the oracle side.
+#
+# The Spark operators fold every dot/L2 product left to right from
+# 0.0D (operators/similarity.py, aggregate over zip_with), so DuckDB
+# must spell out the same association, (0.0 + t0 + t1 + ...), with each
+# element cast to DOUBLE before the arithmetic: the doubles then agree
+# bit for bit. An element renderer maps a 0-based index t to the SQL of
+# element t of one operand.
+# ---------------------------------------------------------------------------
+
+ElemSql = Callable[[int], str]
+
+
+def sql_at(vec: str) -> ElemSql:
+    """Element t of a DuckDB list column, widened to DOUBLE."""
+    return lambda t: f"CAST({vec}[{t + 1}] AS DOUBLE)"
+
+
+def sql_lit_at(vec: list[float]) -> ElemSql:
+    """Element t of a literal vector (repr round-trips the double)."""
+    return lambda t: f"({vec[t]!r})"
+
+
+def sql_fold_dot(x: ElemSql, y: ElemSql, n: int) -> str:
+    """Left-fold dot product of the first n elements of x and y."""
+    return "(0.0 + " + " + ".join(f"{x(t)} * {y(t)}" for t in range(n)) + ")"
+
+
+def sql_fold_l2sq(x: ElemSql, y: ElemSql, n: int) -> str:
+    """Left-fold squared L2 distance over the first n elements."""
+    return (
+        "(0.0 + "
+        + " + ".join(f"({x(t)} - {y(t)}) * ({x(t)} - {y(t)})" for t in range(n))
+        + ")"
+    )
 
 
 def load_all() -> dict[str, QuerySpec]:

@@ -33,6 +33,10 @@ from sales_data_pipeline_spark.queries.base import (
     det_round,
     query,
     scoped_persist,
+    sql_at,
+    sql_fold_dot,
+    sql_fold_l2sq,
+    sql_lit_at,
     table,
 )
 
@@ -135,18 +139,11 @@ _SHINGLES_SQL = (
 
 def _sql_dot(a: str, b: str, dim: int = similarity.DIM) -> str:
     """Left-fold dot chain — same association as similarity.sql_dot."""
-    terms = " + ".join(
-        f"CAST({a}[{j}] AS DOUBLE) * CAST({b}[{j}] AS DOUBLE)"
-        for j in range(1, dim + 1)
-    )
-    return f"(0.0 + {terms})"
+    return sql_fold_dot(sql_at(a), sql_at(b), dim)
 
 
 def _sql_dot_literal(vec: str, lit_vec: list[float], dim: int = similarity.DIM) -> str:
-    terms = " + ".join(
-        f"CAST({vec}[{j + 1}] AS DOUBLE) * ({lit_vec[j]!r})" for j in range(dim)
-    )
-    return f"(0.0 + {terms})"
+    return sql_fold_dot(sql_at(vec), sql_lit_at(lit_vec), dim)
 
 
 def _sql_norm(vec: str) -> str:
@@ -547,19 +544,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_l2sq_chain(vec: str, cent_of, dim: int = similarity.DIM) -> str:
-    """Explicit (0.0 + t1 + t2 + ...) squared-L2 chain — the SQL
-    mirror of similarity.sql_fold_l2sq's sequential left-fold association
-    (bit-identical doubles). ``cent_of(j)`` renders the centroid's
-    j-th component expression."""
-    terms = " + ".join(
-        f"(CAST({vec}[{j + 1}] AS DOUBLE) - {cent_of(j)})"
-        f" * (CAST({vec}[{j + 1}] AS DOUBLE) - {cent_of(j)})"
-        for j in range(dim)
-    )
-    return f"(0.0 + {terms})"
-
-
 def _semdedup_ctes(
     corpus_sql: str, k: int = 8, dim: int = similarity.DIM
 ) -> str:
@@ -573,7 +557,7 @@ def _semdedup_ctes(
     bit-identical doubles end to end."""
 
     def l2sq(vec: str, cent_of) -> str:
-        return _sql_l2sq_chain(vec, cent_of, dim)
+        return sql_fold_l2sq(sql_at(vec), cent_of, dim)
 
     d0 = ", ".join(
         l2sq("embedding", lambda j, c=c: f"CAST(s[{c + 1}][{j + 1}] AS DOUBLE)")
@@ -891,8 +875,8 @@ def _semdedup_incr_oracle(k: int = 8, dim: int = similarity.DIM) -> str:
     batch assigns against them with the same first-match argmin and
     keeps its best stored-member cosine within the assigned cluster."""
     dq = ", ".join(
-        _sql_l2sq_chain(
-            "embedding",
+        sql_fold_l2sq(
+            sql_at("embedding"),
             lambda j, c=c: f"CAST(cents2[{c * dim + j + 1}] AS DOUBLE)",
             dim,
         )
@@ -1437,21 +1421,20 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _centroid(i: int, dim: int = similarity.DIM) -> list[float]:
-    return similarity.ivf_centroid(i, dim)
-
-
-def _sql_l2sq_literal(vec: str, lit_vec: list[float]) -> str:
-    terms = " + ".join(
-        f"(CAST({vec}[{j + 1}] AS DOUBLE) - ({lit_vec[j]!r})) * "
-        f"(CAST({vec}[{j + 1}] AS DOUBLE) - ({lit_vec[j]!r}))"
-        for j in range(len(lit_vec))
-    )
-    return f"(0.0 + {terms})"
+def _sql_ivf_dists() -> list[str]:
+    """Squared L2 from embedding to each of the 8 IVF centroids."""
+    return [
+        sql_fold_l2sq(
+            sql_at("embedding"),
+            sql_lit_at(similarity.ivf_centroid(i)),
+            similarity.DIM,
+        )
+        for i in range(8)
+    ]
 
 
 def _ivf_oracle() -> str:
-    dists = [_sql_l2sq_literal("embedding", _centroid(i)) for i in range(8)]
+    dists = _sql_ivf_dists()
     least = "least(" + ", ".join(dists) + ")"
     chain = "CASE " + " ".join(
         f"WHEN {d} = {least} THEN {i}" for i, d in enumerate(dists)
@@ -1770,8 +1753,8 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivf_probe_oracle() -> str:
     q = similarity.query_vector()
-    probe = similarity.ivf_probe_centroid(q)
-    dists = [_sql_l2sq_literal("embedding", _centroid(i)) for i in range(8)]
+    [probe] = similarity.ivf_probe_centroids(q)
+    dists = _sql_ivf_dists()
     least = "least(" + ", ".join(dists) + ")"
     chain = "CASE " + " ".join(
         f"WHEN {d} = {least} THEN {i}" for i, d in enumerate(dists)
@@ -1810,28 +1793,47 @@ def knn_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _sql_pq_dlist(j: int) -> str:
-    """DOUBLE[] of squared-L2 distances from embedding's subvector j to
-    every codeword of sub-codebook j — same 0.0-rooted left-fold term
-    order as similarity.sql_pq_dlist's HOF folds."""
+def _sql_pq_d_cols(at=sql_at("embedding")) -> str:
+    """The d{j} select items: per subspace j, the DOUBLE[] of
+    squared-L2 distances from subvector j of the vector whose elements
+    ``at`` renders to every codeword of sub-codebook j — same
+    0.0-rooted left-fold term order as similarity.sql_pq_d_cols's HOF
+    folds."""
     subdim = similarity.PQ_SUBDIM
-    off = j * subdim
-    dists = []
-    for i in range(similarity.PQ_KSUB):
-        c = similarity.pq_codeword(j, i)
-        terms = " + ".join(
-            f"(CAST(embedding[{off + t + 1}] AS DOUBLE) - ({c[t]!r})) * "
-            f"(CAST(embedding[{off + t + 1}] AS DOUBLE) - ({c[t]!r}))"
-            for t in range(subdim)
-        )
-        dists.append(f"(0.0 + {terms})")
-    return "[" + ", ".join(dists) + "]"
+
+    def dlist(j: int) -> str:
+        return "[" + ", ".join(
+            sql_fold_l2sq(
+                lambda t: at(j * subdim + t),
+                sql_lit_at(similarity.pq_codeword(j, i)),
+                subdim,
+            )
+            for i in range(similarity.PQ_KSUB)
+        ) + "]"
+
+    return ", ".join(f"{dlist(j)} AS d{j}" for j in range(similarity.PQ_M))
+
+
+def _sql_pq_adc(lut: list[list[float]]) -> str:
+    """ADC score over the d{j} lists: the LUT row of each subspace as a
+    DOUBLE list literal, indexed at its first-match argmin."""
+    return " + ".join(
+        "["
+        + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in row)
+        + f"][list_position(d{j}, list_min(d{j}))]"
+        for j, row in enumerate(lut)
+    )
+
+
+def _pq_adc_score_sql() -> tuple[str, str]:
+    """(d-list CTE columns, ADC score expression) shared by the PQ
+    oracles — one generator so the engines can't drift."""
+    lut = similarity.pq_lut(similarity.query_vector())
+    return _sql_pq_d_cols(), _sql_pq_adc(lut)
 
 
 def _pq_hist_oracle() -> str:
-    dl = ", ".join(
-        f"{_sql_pq_dlist(j)} AS d{j}" for j in range(similarity.PQ_M)
-    )
+    dl = _sql_pq_d_cols()
     codes = ", ".join(
         f"CAST(list_position(d{j}, list_min(d{j})) - 1 AS INTEGER) "
         f"AS code_{j}"
@@ -1881,20 +1883,7 @@ def pq_codebook_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_adc_oracle() -> str:
-    q = similarity.query_vector()
-    lut = similarity.pq_lut(q)
-    dl = ", ".join(
-        f"{_sql_pq_dlist(j)} AS d{j}" for j in range(similarity.PQ_M)
-    )
-    terms = []
-    for j in range(similarity.PQ_M):
-        lut_list = (
-            "["
-            + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in lut[j])
-            + "]"
-        )
-        terms.append(f"{lut_list}[list_position(d{j}, list_min(d{j}))]")
-    score = " + ".join(terms)
+    dl, score = _pq_adc_score_sql()
     return f"""
         WITH d AS (SELECT vec_id, {dl} FROM embeddings)
         SELECT vec_id,
@@ -1937,28 +1926,12 @@ def _sql_ivf_cell_list() -> str:
     allocations destabilized full-harness sweeps; the list form is
     ~60 KB). list_position is first-match, so tie semantics equal the
     CASE chain and Spark's ivf_assign."""
-    dists = ", ".join(
-        _sql_l2sq_literal("embedding", _centroid(i)) for i in range(8)
-    )
-    return f"[{dists}]"
+    return f"[{', '.join(_sql_ivf_dists())}]"
 
 
 def _ivfpq_oracle() -> str:
-    q = similarity.query_vector()
-    probe = similarity.ivf_probe_centroid(q)
-    lut = similarity.pq_lut(q)
-    dl = ", ".join(
-        f"{_sql_pq_dlist(j)} AS d{j}" for j in range(similarity.PQ_M)
-    )
-    terms = []
-    for j in range(similarity.PQ_M):
-        lut_list = (
-            "["
-            + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in lut[j])
-            + "]"
-        )
-        terms.append(f"{lut_list}[list_position(d{j}, list_min(d{j}))]")
-    score = " + ".join(terms)
+    [probe] = similarity.ivf_probe_centroids(similarity.query_vector())
+    dl, score = _pq_adc_score_sql()
     return f"""
         WITH cd AS (
           SELECT vec_id, embedding, {_sql_ivf_cell_list()} AS cdl
@@ -2013,47 +1986,19 @@ def _sql_residual_list(centroid: list[float]) -> str:
     )
 
 
-def _sql_pq_res_dlist(j: int) -> str:
-    """Squared-L2 distance list from residual column ``r``'s subvector
-    j to every codeword — the residual-domain twin of _sql_pq_dlist
-    (r is already DOUBLE, so no casts; same 0.0-rooted left fold)."""
-    subdim = similarity.PQ_SUBDIM
-    off = j * subdim
-    dists = []
-    for i in range(similarity.PQ_KSUB):
-        c = similarity.pq_codeword(j, i)
-        terms = " + ".join(
-            f"(r[{off + t + 1}] - ({c[t]!r})) * "
-            f"(r[{off + t + 1}] - ({c[t]!r}))"
-            for t in range(subdim)
-        )
-        dists.append(f"(0.0 + {terms})")
-    return "[" + ", ".join(dists) + "]"
-
-
 _IVFPQ_RESIDUAL_NPROBE = 2
 
 
 def _ivfpq_residual_oracle() -> str:
     q = similarity.query_vector()
     probes = similarity.ivf_probe_centroids(q, _IVFPQ_RESIDUAL_NPROBE)
-    dl = ", ".join(
-        f"{_sql_pq_res_dlist(j)} AS d{j}" for j in range(similarity.PQ_M)
-    )
+    dl = _sql_pq_d_cols(lambda t: f"r[{t + 1}]")  # r is DOUBLE[]: no casts
     cell_sqls = []
     for c in probes:
         cent = similarity.ivf_centroid(c)
-        qres = [a - b for a, b in zip(q, cent)]
-        lut = similarity.pq_lut(qres)
-        terms = []
-        for j in range(similarity.PQ_M):
-            lut_list = (
-                "["
-                + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in lut[j])
-                + "]"
-            )
-            terms.append(f"{lut_list}[list_position(d{j}, list_min(d{j}))]")
-        score = " + ".join(terms)
+        score = _sql_pq_adc(
+            similarity.pq_lut([a - b for a, b in zip(q, cent)])
+        )
         cell_sqls.append(
             f"""
           SELECT vec_id,
@@ -2110,25 +2055,6 @@ def knn_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=10,
         nprobe=_IVFPQ_RESIDUAL_NPROBE,
     )
-
-
-def _pq_adc_score_sql() -> tuple[str, str]:
-    """(d-list CTE columns, ADC score expression) shared by the PQ
-    rerank/eval oracles — one generator so the engines can't drift."""
-    q = similarity.query_vector()
-    lut = similarity.pq_lut(q)
-    dl = ", ".join(
-        f"{_sql_pq_dlist(j)} AS d{j}" for j in range(similarity.PQ_M)
-    )
-    terms = []
-    for j in range(similarity.PQ_M):
-        lut_list = (
-            "["
-            + ", ".join(f"CAST({v!r} AS DOUBLE)" for v in lut[j])
-            + "]"
-        )
-        terms.append(f"{lut_list}[list_position(d{j}, list_min(d{j}))]")
-    return dl, " + ".join(terms)
 
 
 _IVFPQ_NPROBES = (1, 2, 4)
@@ -2204,27 +2130,19 @@ def _ivfpq_nprobe_curve(e: DataFrame) -> DataFrame:
     optimization). The original built a fresh ADC-scoring tree AND a
     fresh ivf_assign tree per curve arm plus the ground truth — 4 ADC
     + 3 assign expression instances, 15.5-18.4 s of pure driver build
-    time per bench pass (plans/r12/prof_before.json). Both are pure
-    per-row functions of the embedding, so ONE scan computes
-    (vec_id, cell, adc_dist) and is persisted (within-query scope);
-    every arm is then a filter/top-k/count over that table. Identical
+    time per bench pass. Both are pure per-row functions of the
+    embedding, so ONE scan computes (vec_id, cell, adc_dist) and is
+    persisted (within-query scope); every arm is then a
+    filter/top-k/count over that table. Identical
     values: the ADC score is filter-independent, each arm's filter
     ``cell IN probes`` equals the old per-arm ``ivf_assign(emb) IN
     probes``, and full10/top-10 orderings are the same rounded-score +
     id total order. This also mirrors the oracle's own shape (one
     ``sc`` CTE referenced by every branch)."""
     q = similarity.query_vector()
-    lut = similarity.pq_lut(q)
     sc = scoped_persist(
-        e.selectExpr(
-            "vec_id",
-            f"{similarity.sql_ivf_assign('embedding')} AS cell",
-            *similarity.sql_pq_d_cols("embedding"),
-        ).selectExpr(
-            "vec_id",
-            "cell",
-            f"{similarity.sql_rounded(similarity.sql_pq_adc_from_d(lut))}"
-            " AS adc_dist",
+        similarity.pq_adc_scored(
+            e, q, carry={"cell": similarity.sql_ivf_assign("embedding")}
         )
     )
     full10 = (
@@ -2416,12 +2334,12 @@ def _pq_recall_curve(
     optimization). The original ran one full ADC scoring pass + rerank
     join per shortlist arm plus a brute-force pass for the ground truth
     — 4 corpus-sized scoring trees, 8-9 s of driver build time per
-    bench pass (plans/r12/prof_before.json). Both scores are pure
-    per-row functions of the embedding, so ONE scan computes (vec_id,
-    cos_sim, adc_dist) and is persisted; the max-shortlist ADC head is
-    persisted too (every arm's shortlist is a prefix of the same
-    rounded-ADC + id total order), and each arm re-ranks its prefix by
-    the already-computed rounded cosine. Identical values: same score
+    bench pass. Both scores are pure per-row functions of the
+    embedding, so ONE scan computes (vec_id, cos_sim, adc_dist) and is
+    persisted; the max-shortlist ADC head is persisted too (every
+    arm's shortlist is a prefix of the same rounded-ADC + id total
+    order), and each arm re-ranks its prefix by the already-computed
+    rounded cosine. Identical values: same score
     expressions on the same rows, same total orders, so each arm's
     top-s set and rerank top-10 equal the old per-arm passes row for
     row — and this mirrors the oracle's own single-``scored``-CTE
@@ -2429,18 +2347,10 @@ def _pq_recall_curve(
     scored table is the one corpus-sized intermediate — the same
     asymptotics as one ADC serving pass."""
     q = similarity.query_vector()
-    lut = similarity.pq_lut(q)
+    cos = similarity.sql_cosine_to_literal("embedding", q)
     scored = scoped_persist(
-        e.selectExpr(
-            "vec_id",
-            f"{similarity.sql_rounded(similarity.sql_cosine_to_literal('embedding', q))}"
-            " AS cos_sim",
-            *similarity.sql_pq_d_cols("embedding"),
-        ).selectExpr(
-            "vec_id",
-            "cos_sim",
-            f"{similarity.sql_rounded(similarity.sql_pq_adc_from_d(lut))}"
-            " AS adc_dist",
+        similarity.pq_adc_scored(
+            e, q, carry={"cos_sim": similarity.sql_rounded(cos)}
         )
     )
     exact10 = (
@@ -2479,9 +2389,10 @@ def _pq_train_ctes() -> str:
     DuckDB — the data-dependent certification the literal-codebook PQ
     family deliberately traded away (round-9 judge ask #3). Every step
     mirrors the Spark operator's arithmetic exactly: seeds packed with
-    list(ORDER BY vec_id), left-fold (0.0 + t + ...) subvector L2
-    chains, list_position first-match argmin, integer-scaled exact-sum
-    means (the k-means level-0 recipe per subspace)."""
+    list(ORDER BY vec_id), left-fold subvector L2 chains
+    (base.sql_fold_l2sq), list_position first-match argmin,
+    integer-scaled exact-sum means (the k-means level-0 recipe per
+    subspace)."""
     m, subdim, ksub = (
         similarity.PQ_M,
         similarity.PQ_SUBDIM,
@@ -2490,14 +2401,11 @@ def _pq_train_ctes() -> str:
 
     def sub_l2(j: int, i: int) -> str:
         off = j * subdim
-        terms = " + ".join(
-            f"(CAST(embedding[{off + t + 1}] AS DOUBLE)"
-            f" - CAST(s[{i + 1}][{off + t + 1}] AS DOUBLE))"
-            f" * (CAST(embedding[{off + t + 1}] AS DOUBLE)"
-            f" - CAST(s[{i + 1}][{off + t + 1}] AS DOUBLE))"
-            for t in range(subdim)
+        return sql_fold_l2sq(
+            lambda t: f"CAST(embedding[{off + t + 1}] AS DOUBLE)",
+            lambda t: f"CAST(s[{i + 1}][{off + t + 1}] AS DOUBLE)",
+            subdim,
         )
-        return f"(0.0 + {terms})"
 
     dls = ", ".join(
         "[" + ", ".join(sub_l2(j, i) for i in range(ksub)) + f"] AS dl{j}"
@@ -2576,18 +2484,16 @@ def _pq_trained_adc_oracle() -> str:
     lut_cases = []
     for j in range(m):
         qsub = q[j * subdim : (j + 1) * subdim]
-        terms = " + ".join(
-            f"(CAST({qsub[t]!r} AS DOUBLE) - cw[{t + 1}])"
-            f" * (CAST({qsub[t]!r} AS DOUBLE) - cw[{t + 1}])"
-            for t in range(subdim)
+        ld = sql_fold_l2sq(
+            lambda t: f"CAST({qsub[t]!r} AS DOUBLE)",
+            lambda t: f"cw[{t + 1}]",
+            subdim,
         )
-        lut_cases.append(f"WHEN {j} THEN (0.0 + {terms})")
-    enc_terms = " + ".join(
-        f"(CAST(e.embedding[p.sub * {subdim} + {t + 1}] AS DOUBLE)"
-        f" - p.cw[{t + 1}])"
-        f" * (CAST(e.embedding[p.sub * {subdim} + {t + 1}] AS DOUBLE)"
-        f" - p.cw[{t + 1}])"
-        for t in range(subdim)
+        lut_cases.append(f"WHEN {j} THEN {ld}")
+    enc_d = sql_fold_l2sq(
+        lambda t: f"CAST(e.embedding[p.sub * {subdim} + {t + 1}] AS DOUBLE)",
+        lambda t: f"p.cw[{t + 1}]",
+        subdim,
     )
     score = " + ".join(
         f"MAX(CASE WHEN l.sub = {j} THEN l.ld END)" for j in range(m)
@@ -2599,7 +2505,7 @@ def _pq_trained_adc_oracle() -> str:
           FROM cb GROUP BY sub, code
         ),
         dists AS (
-          SELECT e.vec_id, p.sub, p.code, (0.0 + {enc_terms}) AS d
+          SELECT e.vec_id, p.sub, p.code, {enc_d} AS d
           FROM embeddings e, cbp p
         ),
         mind AS (
@@ -2628,7 +2534,7 @@ def _pq_trained_adc_oracle() -> str:
     "knn_pq_trained_adc",
     oracle=_pq_trained_adc_oracle(),
     survey="LLM-ext: ADC search over a TRAINED codebook read from "
-    "storage (operators/similarity.py pq_adc_topk_trained + "
+    "storage (operators/similarity.py pq_adc_topk(codebook=...) + "
     "collect_codebook — the codebook-agnosticism demonstration)",
     doc="The full trained-PQ serving path: train the sub-codebooks "
     "from the data (pq_train_codebooks), MATERIALIZE the codebook to "
@@ -2642,7 +2548,7 @@ def _pq_trained_adc_oracle() -> str:
     "data-dependent path end to end: trained means are integer-scaled "
     "exact sums (bit-equal across engines), the ADC LUT is the "
     "per-sub L2 of the literal query against each stored codeword "
-    "(Python left folds = SQL (0.0 + ...) chains), scoring is m "
+    "(Python left folds = SQL left-fold chains), scoring is m "
     "literal-array lookups in codegen, encode ties break to the "
     "lowest code id in both engines, and the final top-10 is the "
     "rounded-score + id total order. The codebook collect is "
@@ -2664,11 +2570,11 @@ def knn_pq_trained_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebook = similarity.collect_codebook(
         spark.read.parquet(f"{work}/codebook")
     )
-    return similarity.pq_adc_topk_trained(
+    return similarity.pq_adc_topk(
         table(spark, sf_dir, "embeddings"),
         similarity.query_vector(),
-        codebook,
         k=10,
+        codebook=codebook,
     )
 
 

@@ -387,3 +387,37 @@ def test_gold_write_crash_reruns_in_same_session(spark, tmp_path, monkeypatch):
     clean = run_two("clean", crash=False)
     rerun = run_two("crash", crash=True)
     assert rerun == clean
+
+
+def test_scd_write_crash_rerun_raises_not_first_run(spark, tmp_path, monkeypatch):
+    """A crash in run 2's silver/customer_scd write leaves that history
+    present but unreadable. The rerun must raise: taking it for a
+    first run would rewrite the history without run 1's versions,
+    fewer rows than a clean run 2 writes."""
+    from pyspark.sql import functions as F
+
+    from sales_data_pipeline_spark.io import writers
+
+    root = str(tmp_path / "in")
+    lake = str(tmp_path / "lake")
+    wm_dir = str(tmp_path / "wm")
+    _fixtures(root)
+    run_pipeline(spark, _incremental_cfg(root, lake, wm_dir, "2024-06-01"))
+    _second_run_inputs(root)
+    cfg2 = _incremental_cfg(root, lake, wm_dir, "2024-07-01")
+    real = writers.write_parquet
+
+    def failing(df, path, *a, **kw):
+        if path.endswith("silver/customer_scd"):
+            df = df.withColumn(
+                "_boom", F.raise_error(F.lit("injected failure"))
+            )
+        return real(df, path, *a, **kw)
+
+    monkeypatch.setattr(writers, "write_parquet", failing)
+    with pytest.raises(Exception, match="injected failure"):
+        run_pipeline(spark, cfg2)
+    monkeypatch.setattr(writers, "write_parquet", real)
+    assert os.path.isdir(f"{lake}/silver/customer_scd")
+    with pytest.raises(Exception, match="(?i)infer schema"):
+        run_pipeline(spark, cfg2)

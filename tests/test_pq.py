@@ -11,14 +11,22 @@ compression arithmetic the 100 TB story rests on.
 
 from __future__ import annotations
 
+import math
 import os
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from sales_data_pipeline_spark.operators import similarity
 
 SF_DIR = os.environ.get("SPARK_GRAFT_PARITY_SF", "/root/testdata/sf0.001")
+
+
+def _registry():
+    from sales_data_pipeline_spark.queries.base import load_all
+
+    return load_all()
 
 
 def _py_dists(vec: list[float], j: int) -> list[float]:
@@ -125,7 +133,7 @@ class TestADC:
         e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
             "vec_id", "embedding"
         )
-        probe = similarity.ivf_probe_centroid(q)
+        [probe] = similarity.ivf_probe_centroids(q)
         cell = e.filter(
             F.expr(similarity.sql_ivf_assign("embedding")) == probe
         )
@@ -252,7 +260,7 @@ def _py_train_codebook(rows, m, subdim, ksub, scale=1_000_000):
 
 
 class TestTrainedCodebook:
-    """pq_train_codebooks / collect_codebook / pq_adc_topk_trained —
+    """pq_train_codebooks / collect_codebook / pq_adc_topk(codebook=) —
     the data-dependent codebook path (round-9 judge ask #3). The
     catalog queries certify it cell-exact against DuckDB; these pin
     the properties the oracle can't see: exact agreement with a
@@ -331,8 +339,8 @@ class TestTrainedCodebook:
         )[:10]
         got = [
             (r["adc_dist"], r["vec_id"])
-            for r in similarity.pq_adc_topk_trained(
-                e, q, codebook, k=10
+            for r in similarity.pq_adc_topk(
+                e, q, k=10, codebook=codebook
             ).collect()
         ]
         assert got == [(d, i) for d, i in expected]
@@ -351,7 +359,7 @@ class TestTrainedCodebook:
             (s, c): cw for (s, c), cw in full.items() if c in (3, 11)
         }
         assert len(gappy) >= similarity.PQ_M  # at least one cell per sub
-        out = similarity.pq_adc_topk_trained(e, q, gappy, k=5).collect()
+        out = similarity.pq_adc_topk(e, q, k=5, codebook=gappy).collect()
         assert len(out) == 5
         keys = [(r["adc_dist"], r["vec_id"]) for r in out]
         assert keys == sorted(keys)
@@ -365,7 +373,7 @@ class TestTrainedCodebook:
             similarity.pq_train_codebooks(e)
         )
         plan = (
-            similarity.pq_adc_topk_trained(e, q, codebook, k=10)
+            similarity.pq_adc_topk(e, q, k=10, codebook=codebook)
             ._jdf.queryExecution()
             .executedPlan()
             .toString()
@@ -434,15 +442,18 @@ class TestNprobe:
         p2 = similarity.ivf_probe_centroids(q, 2)
         p4 = similarity.ivf_probe_centroids(q, 4)
         p8 = similarity.ivf_probe_centroids(q, 8)
-        assert p1 == p2[:1] and p2 == p4[:2] and p4 == p8[:4]
-        assert p1[0] == similarity.ivf_probe_centroid(q)
-        assert sorted(p8) == list(range(8))  # all cells, each once
-        # ascending true distance
+
         def d(i):
             return sum(
                 (a - b) ** 2
                 for a, b in zip(q, similarity.ivf_centroid(i))
             )
+
+        assert p1 == p2[:1] and p2 == p4[:2] and p4 == p8[:4]
+        # nprobe=1 is the nearest centroid, first-match on ties
+        assert p1[0] == min(range(8), key=d)
+        assert sorted(p8) == list(range(8))  # all cells, each once
+        # ascending true distance
         dists = [d(i) for i in p8]
         assert dists == sorted(dists)
 
@@ -484,6 +495,13 @@ class TestNprobe:
             hits.append(len(got & full10))
         assert hits == sorted(hits)
         assert hits[-1] == 10
+
+    def test_nprobe_guard(self, spark):
+        e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+        with pytest.raises(ValueError, match="nprobe"):
+            similarity.ivfpq_residual_topk(
+                e, similarity.query_vector(), nprobe=0
+            )
 
 
 class TestPartitionedServingLayout:
@@ -532,7 +550,7 @@ class TestPartitionedServingLayout:
         tbl.write.partitionBy("ivf_cell").parquet(path)
 
         stored = spark.read.parquet(path)
-        probe = similarity.ivf_probe_centroid(q)
+        [probe] = similarity.ivf_probe_centroids(q)
         pruned = stored.filter(F.col("ivf_cell") == probe)
 
         # Catalyst must push the cell predicate to PARTITION level
@@ -599,3 +617,119 @@ class TestPartitionedServingLayout:
         pruned = stored.filter(F.col("ivf_cell").isin(probes))
         pruned.collect()
         assert self._scan_metrics(pruned)["numPartitions"] == 2
+
+
+class TestResidualIvfpq:
+    def _numpy_reference(self, ids, vecs, query, nprobe=2, k=10):
+        """Plain-numpy residual IVFADC: assign cells, residual-encode,
+        per-cell LUT score, global top-k with the query's id
+        tie-break — everything recomputed outside Spark."""
+        n_cent = similarity.N_IVF_CENTROIDS
+        cents = np.array(
+            [similarity.ivf_centroid(i) for i in range(n_cent)]
+        )
+        d2 = ((vecs[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
+        cells = d2.argmin(axis=1)
+        qd = ((np.array(query) - cents) ** 2).sum(axis=1)
+        probes = list(np.argsort(qd, kind="stable")[:nprobe])
+        m, subdim, ksub = (
+            similarity.PQ_M,
+            similarity.PQ_SUBDIM,
+            similarity.PQ_KSUB,
+        )
+        books = np.array(
+            [
+                [similarity.pq_codeword(j, i) for i in range(ksub)]
+                for j in range(m)
+            ]
+        )
+        out = []
+        for c in probes:
+            cent = np.array(similarity.ivf_centroid(int(c)))
+            qres = np.array(query) - cent
+            mask = cells == c
+            res = vecs[mask] - cent[None, :]
+            score = np.zeros(mask.sum())
+            for j in range(m):
+                sub = res[:, j * subdim : (j + 1) * subdim]
+                dj = (
+                    (sub[:, None, :] - books[j][None, :, :]) ** 2
+                ).sum(axis=2)
+                codes = dj.argmin(axis=1)
+                lut = (
+                    (qres[j * subdim : (j + 1) * subdim] - books[j]) ** 2
+                ).sum(axis=1)
+                score = score + lut[codes]
+            for vid, s in zip(ids[mask], score):
+                out.append(
+                    (int(vid), math.floor(s * 1e6 + 0.5) / 1e6)
+                )
+        out.sort(key=lambda t: (t[1], t[0]))
+        return out[:k]
+
+    def test_matches_numpy_reimplementation(self, spark):
+        e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").collect()
+        ids = np.array([r.vec_id for r in e])
+        vecs = np.array([list(r.embedding) for r in e], dtype=np.float64)
+        q = similarity.query_vector()
+        expected = self._numpy_reference(ids, vecs, q)
+        got = [
+            (r.vec_id, r.adc_dist)
+            for r in _registry()["knn_ivfpq_residual"]
+            .fn(spark, SF_DIR)
+            .collect()
+        ]
+        assert got == expected
+
+    def test_residual_differs_from_raw_pq(self, spark):
+        """Residual encoding is a different quantizer than raw-vector
+        PQ — on real data the two top-10 score vectors must differ
+        (if they ever coincided the operator would be a no-op)."""
+        raw = {
+            r.vec_id: r.adc_dist
+            for r in _registry()["knn_ivfpq"].fn(spark, SF_DIR).collect()
+        }
+        res = {
+            r.vec_id: r.adc_dist
+            for r in _registry()["knn_ivfpq_residual"]
+            .fn(spark, SF_DIR)
+            .collect()
+        }
+        assert raw != res
+
+
+# ---------------------------------------------------------------------------
+# Clustered ANN recall: the dials must do real work on structured data
+# ---------------------------------------------------------------------------
+
+
+class TestClusteredRecall:
+    def test_shortlist_curve_values(self, spark):
+        res = (
+            _registry()["pq_recall_eval_clustered"]
+            .fn(spark, SF_DIR)
+            .toPandas()
+            .set_index("shortlist")["rerank_hits_at_10"]
+            .to_dict()
+        )
+        # certified curve (docstring): clustered data reaches 10/10 at
+        # shortlist 200 where the uniform corpus needs 400, and 8/10 at
+        # 50 where uniform gets 2/10
+        assert res == {20: 4, 50: 8, 200: 10}
+
+    def test_nprobe_one_probe_suffices(self, spark):
+        res = (
+            _registry()["ivfpq_nprobe_recall_clustered"]
+            .fn(spark, SF_DIR)
+            .toPandas()
+            .set_index("nprobe")
+        )
+        n = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").count()
+        # every vector coarse-quantizes to its own cluster: one probe
+        # reads ~1/8 of the corpus and already retains 10/10
+        assert int(res.loc[1, "adc_hits_at_10"]) == 10
+        assert int(res.loc[1, "probed_rows"]) <= n // 8 + 8
+        # monotone non-decreasing rows with nprobe
+        assert (
+            res["probed_rows"].sort_index().is_monotonic_increasing
+        )

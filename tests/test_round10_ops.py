@@ -1,7 +1,8 @@
 """Round-10 operator tests: BPE trainer steps (pair counts + greedy
-merge semantics), duplicated-substring spans, bigram-LM perplexity,
-and residual-encoded IVFADC — each against a hand-computed or numpy
-reimplementation, independent of the DuckDB oracles."""
+merge semantics), duplicated-substring spans, bigram-LM perplexity
+and SQ8 ADC — each against a hand-computed or numpy
+reimplementation, independent of the DuckDB oracles. (Residual
+IVFADC's numpy reimplementation lives in tests/test_pq.py.)"""
 
 from __future__ import annotations
 
@@ -293,82 +294,3 @@ class TestSq8Adc:
             for r in _registry()["knn_sq8_adc"].fn(spark, SF_DIR).collect()
         }
         assert len(got & top_exact) >= 8
-
-
-class TestResidualIvfpq:
-    def _numpy_reference(self, ids, vecs, query, nprobe=2, k=10):
-        """Plain-numpy residual IVFADC: assign cells, residual-encode,
-        per-cell LUT score, global top-k with the query's id
-        tie-break — everything recomputed outside Spark."""
-        n_cent = similarity.N_IVF_CENTROIDS
-        cents = np.array(
-            [similarity.ivf_centroid(i) for i in range(n_cent)]
-        )
-        d2 = ((vecs[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        cells = d2.argmin(axis=1)
-        qd = ((np.array(query) - cents) ** 2).sum(axis=1)
-        probes = list(np.argsort(qd, kind="stable")[:nprobe])
-        m, subdim, ksub = (
-            similarity.PQ_M,
-            similarity.PQ_SUBDIM,
-            similarity.PQ_KSUB,
-        )
-        books = np.array(
-            [
-                [similarity.pq_codeword(j, i) for i in range(ksub)]
-                for j in range(m)
-            ]
-        )
-        out = []
-        for c in probes:
-            cent = np.array(similarity.ivf_centroid(int(c)))
-            qres = np.array(query) - cent
-            mask = cells == c
-            res = vecs[mask] - cent[None, :]
-            score = np.zeros(mask.sum())
-            for j in range(m):
-                sub = res[:, j * subdim : (j + 1) * subdim]
-                dj = (
-                    (sub[:, None, :] - books[j][None, :, :]) ** 2
-                ).sum(axis=2)
-                codes = dj.argmin(axis=1)
-                lut = (
-                    (qres[j * subdim : (j + 1) * subdim] - books[j]) ** 2
-                ).sum(axis=1)
-                score = score + lut[codes]
-            for vid, s in zip(ids[mask], score):
-                out.append(
-                    (int(vid), math.floor(s * 1e6 + 0.5) / 1e6)
-                )
-        out.sort(key=lambda t: (t[1], t[0]))
-        return out[:k]
-
-    def test_matches_numpy_reimplementation(self, spark):
-        e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").collect()
-        ids = np.array([r.vec_id for r in e])
-        vecs = np.array([list(r.embedding) for r in e], dtype=np.float64)
-        q = similarity.query_vector()
-        expected = self._numpy_reference(ids, vecs, q)
-        got = [
-            (r.vec_id, r.adc_dist)
-            for r in _registry()["knn_ivfpq_residual"]
-            .fn(spark, SF_DIR)
-            .collect()
-        ]
-        assert got == expected
-
-    def test_residual_differs_from_raw_pq(self, spark):
-        """Residual encoding is a different quantizer than raw-vector
-        PQ — on real data the two top-10 score vectors must differ
-        (if they ever coincided the operator would be a no-op)."""
-        raw = {
-            r.vec_id: r.adc_dist
-            for r in _registry()["knn_ivfpq"].fn(spark, SF_DIR).collect()
-        }
-        res = {
-            r.vec_id: r.adc_dist
-            for r in _registry()["knn_ivfpq_residual"]
-            .fn(spark, SF_DIR)
-            .collect()
-        }
-        assert raw != res

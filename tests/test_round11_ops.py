@@ -1,6 +1,7 @@
 """Round-11 operator pins: transformWithState throttling (real path +
-fallback equivalence), perceptual-hash image dedup, clustered ANN
-recall values, SQ8 degenerate-dimension behavior, the nprobe guard.
+fallback equivalence), perceptual-hash image dedup, SQ8
+degenerate-dimension behavior. (The clustered ANN recall values and
+the nprobe guard live in tests/test_pq.py.)
 
 The multi-merge BPE trainer's property test lives in
 tests/test_properties.py next to the single-step pin it extends.
@@ -242,57 +243,11 @@ class TestImagePhash:
 
 
 # ---------------------------------------------------------------------------
-# Clustered ANN recall: the dials must do real work on structured data
-# ---------------------------------------------------------------------------
-
-
-class TestClusteredRecall:
-    def test_shortlist_curve_values(self, spark):
-        res = (
-            _registry()["pq_recall_eval_clustered"]
-            .fn(spark, SF_DIR)
-            .toPandas()
-            .set_index("shortlist")["rerank_hits_at_10"]
-            .to_dict()
-        )
-        # certified curve (docstring): clustered data reaches 10/10 at
-        # shortlist 200 where the uniform corpus needs 400, and 8/10 at
-        # 50 where uniform gets 2/10
-        assert res == {20: 4, 50: 8, 200: 10}
-
-    def test_nprobe_one_probe_suffices(self, spark):
-        res = (
-            _registry()["ivfpq_nprobe_recall_clustered"]
-            .fn(spark, SF_DIR)
-            .toPandas()
-            .set_index("nprobe")
-        )
-        n = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").count()
-        # every vector coarse-quantizes to its own cluster: one probe
-        # reads ~1/8 of the corpus and already retains 10/10
-        assert int(res.loc[1, "adc_hits_at_10"]) == 10
-        assert int(res.loc[1, "probed_rows"]) <= n // 8 + 8
-        # monotone non-decreasing rows with nprobe
-        assert (
-            res["probed_rows"].sort_index().is_monotonic_increasing
-        )
-
-
-# ---------------------------------------------------------------------------
-# SQ8 degenerate dimension + nprobe guard (round-10 advisor)
+# SQ8 degenerate dimension (round-10 advisor)
 # ---------------------------------------------------------------------------
 
 
 class TestAdvisorGuards:
-    def test_nprobe_guard(self, spark):
-        from sales_data_pipeline_spark.operators import similarity
-
-        e = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-        with pytest.raises(ValueError, match="nprobe"):
-            similarity.ivfpq_residual_topk(
-                e, similarity.query_vector(), nprobe=0
-            )
-
     def test_sq8_degenerate_dim_cross_engine(self, spark, tmp_path):
         """A dimension with hi == lo must yield code 0 (defined), not a
         NaN clamp coincidence: rebuild the embeddings table with

@@ -10,13 +10,9 @@ For each named query it records, per pass:
   - exec_s:   wall of the noop-sink write (the bench's timed action);
   - jobs:     Spark jobs launched by the action (statusTracker delta).
 
-It also dumps explain("formatted") of the query's DF to
-plans/r12/<name>_<tag>.txt — the before/after plan evidence the round's
-deliverables require.
-
 Usage:
-  python tools/optprofile.py --tag before --out /tmp/prof.json q1 q2 ...
-  python tools/optprofile.py --tag before --headline-top 25
+  python tools/optprofile.py --out /tmp/prof.json q1 q2 ...
+  python tools/optprofile.py --headline-top 25
 """
 
 from __future__ import annotations
@@ -41,20 +37,20 @@ def explain_str(df) -> str:
     return jdf.queryExecution().explainString(mode)
 
 
-def profile_one(spark, spec, sf_dir: str, passes: int, plan_path: str | None):
+def profile_one(spark, spec, sf_dir: str, passes: int):
     from sales_data_pipeline_spark.queries.base import release_persisted
 
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     out = {"passes": []}
-    for i in range(passes):
+    for _ in range(passes):
         release_persisted()
         spark.catalog.clearCache()
         jobs_before = len(tracker.getJobIdsForGroup(None) or [])
         t0 = time.perf_counter()
         df = spec.fn(spark, sf_dir)
         t1 = time.perf_counter()
-        plan = explain_str(df)
+        explain_str(df)
         t2 = time.perf_counter()
         df.write.format("noop").mode("overwrite").save()
         t3 = time.perf_counter()
@@ -68,12 +64,6 @@ def profile_one(spark, spec, sf_dir: str, passes: int, plan_path: str | None):
                 "jobs": jobs_after - jobs_before,
             }
         )
-        if i == 0 and plan_path:
-            with open(plan_path, "w") as f:
-                f.write(plan)
-            out["plan_file"] = plan_path
-            out["plan_exchanges"] = plan.count("Exchange")
-            out["plan_chars"] = len(plan)
     release_persisted()
     spark.catalog.clearCache()
     return out
@@ -82,7 +72,6 @@ def profile_one(spark, spec, sf_dir: str, passes: int, plan_path: str | None):
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
-    ap.add_argument("--tag", default="before")
     ap.add_argument("--passes", type=int, default=2)
     ap.add_argument("--out", default=None)
     ap.add_argument(
@@ -91,12 +80,6 @@ def main() -> None:
         default=0,
         help="profile the N most expensive headline queries per "
         "BENCH_FULL.json instead of explicit names",
-    )
-    ap.add_argument("--no-plan", action="store_true")
-    ap.add_argument(
-        "--plandir",
-        default="r13",
-        help="plans/<plandir>/ receives the explain dumps",
     )
     args = ap.parse_args()
 
@@ -120,9 +103,6 @@ def main() -> None:
         )
         names.extend(ranked[: args.headline_top])
 
-    plan_dir = os.path.join(_REPO_ROOT, "plans", args.plandir)
-    os.makedirs(plan_dir, exist_ok=True)
-
     spark = build_session("optprofile")
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1).count()
 
@@ -132,13 +112,8 @@ def main() -> None:
         if spec is None:
             print(f"!! unknown query: {name}", file=sys.stderr)
             continue
-        plan_path = (
-            None
-            if args.no_plan
-            else os.path.join(plan_dir, f"{name}_{args.tag}.txt")
-        )
         spark.sparkContext.setJobDescription(f"optprofile:{name}")
-        r = profile_one(spark, spec, sf_dir, args.passes, plan_path)
+        r = profile_one(spark, spec, sf_dir, args.passes)
         spark.sparkContext.setJobDescription(None)
         results[name] = r
         best = min(p["total_s"] for p in r["passes"])

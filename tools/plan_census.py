@@ -7,9 +7,11 @@ per-query table of plan facts plus the catalog-wide gate summary
 codec/state boundaries, BroadcastNestedLoopJoin only as 1-row scalar
 broadcasts).
 
-Counts are occurrences in the plan STRING: AQE re-renders subtrees, so
-exchange counts overstate physical stages — they are comparable across
-queries and across rounds, not absolute stage counts.
+Counts are physical plan nodes, walked with plan_audit.phys_walk: the
+walk enters AQE's initial plan and the plan behind each cached
+relation, and counts a cached subplan once however many scans read it,
+so adding or removing a persist leaves the counts alone. "exch" counts
+shuffle and broadcast exchanges; a ReusedExchange is not a second one.
 
 Run: PYTHONPATH=. python tools/plan_census.py
 """
@@ -18,18 +20,19 @@ from __future__ import annotations
 
 import os
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 COLS = [
-    ("xch", "Exchange"),
-    ("smj", "SortMergeJoin"),
-    ("bhj", "BroadcastHashJoin"),
-    ("bnlj", "BroadcastNestedLoopJoin"),
-    ("cart", "CartesianProduct"),
-    ("win", "Window"),
-    ("pyrow", "BatchEvalPython"),
-    ("topk", "TakeOrderedAndProject"),
+    ("xch", ("Exchange", "BroadcastExchange")),
+    ("smj", ("SortMergeJoin",)),
+    ("bhj", ("BroadcastHashJoin",)),
+    ("bnlj", ("BroadcastNestedLoopJoin",)),
+    ("cart", ("CartesianProduct",)),
+    ("win", ("Window",)),
+    ("pyrow", ("BatchEvalPython",)),
+    ("topk", ("TakeOrderedAndProject",)),
 ]
 ARROW = ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandasWithState",
          "TransformWithStateInPandas")
@@ -38,6 +41,7 @@ ARROW = ("ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandasWithState",
 def main() -> None:
     from pyspark.sql import SparkSession
 
+    from sales_data_pipeline_spark.plan_audit import phys_walk
     from sales_data_pipeline_spark.queries.base import (
         load_all,
         release_persisted,
@@ -55,10 +59,12 @@ def main() -> None:
     rows = []
     for name, spec in sorted(load_all().items()):
         df = spec.fn(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        counts = {k: plan.count(tok) for k, tok in COLS}
-        counts["xch"] -= plan.count("ReusedExchange")
-        counts["arrow"] = sum(plan.count(t) for t in ARROW)
+        names = Counter(
+            n.nodeName()
+            for n in phys_walk(df._jdf.queryExecution().executedPlan())
+        )
+        counts = {k: sum(names[t] for t in toks) for k, toks in COLS}
+        counts["arrow"] = sum(names[t] for t in ARROW)
         rows.append((name, counts))
         release_persisted()
         spark.catalog.clearCache()
@@ -71,9 +77,10 @@ def main() -> None:
         f.write(
             "# Plan census — all catalog queries\n\n"
             f"Generated by `tools/plan_census.py` against `{sf_dir}` "
-            "(plan shape is scale-invariant; counts are plan-string "
-            "occurrences, AQE re-renders included — comparable, not "
-            "absolute stage counts).\n\n"
+            "(plan shape is scale-invariant; counts are physical plan "
+            "nodes from `plan_audit.phys_walk`, each cached subplan "
+            "counted once; `exch` is shuffle plus broadcast exchanges, "
+            "reused exchanges excluded).\n\n"
             "## Catalog-wide gates (all enforced by "
             "tests/test_plan_shapes.py)\n\n"
             f"- `CartesianProduct`: **{len(cart)}** queries\n"
